@@ -28,4 +28,46 @@ Layout
 - ``streaming``  v2 seam: Structured Streaming lift of the batch stages
 """
 
+import sys
+
 __version__ = "0.1.0"
+
+
+def _stamped_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only
+    when its mtime or size has changed (CPython 3.10-3.12; the method is
+    new in 3.10, and 3.13 re-reads lazily).
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task, and before 3.13 every ``zipimporter`` then re-reads
+    its whole archive's directory — a reused worker holds one importer
+    per package directory imported from ``pyspark.zip`` (1,328 entries),
+    so each task paid 16 re-reads: 0.17 CPU s per task, against 0.005 s
+    with this patch, measured in a warm worker on a 4-core x86 host.
+    Importers of one archive share ``zipimport._zip_directory_cache``,
+    so after the first re-read of a pass the others just rebind to it.
+    """
+    import os
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    stamps: dict = {}  # archive -> (mtime_ns, size) at its last re-read
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        cached = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is None or cached is None or stamps.get(self.archive) != stamp:
+            reread(self)
+            stamps[self.archive] = stamp
+        else:
+            self._files = cached
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+if (3, 10) <= sys.version_info < (3, 13):
+    _stamped_zip_invalidation()

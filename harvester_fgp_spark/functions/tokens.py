@@ -50,9 +50,13 @@ def string_buffers(col) -> "tuple[np.ndarray, np.ndarray]":
     array — zero-copy, slice-offset aware. Null slots read as
     zero-length (their offset pair is degenerate), which downstream
     token math treats as one empty token — callers that must
-    distinguish null from "" handle the validity bitmap themselves."""
+    distinguish null from "" handle the validity bitmap themselves.
+    A zero-length array reads as one zero offset and no data: Arrow lets
+    it omit the offsets buffer entirely."""
     import pyarrow as pa
 
+    if len(col) == 0:
+        return np.zeros(1, dtype=np.int64), np.empty(0, dtype=np.uint8)
     odt = np.int64 if pa.types.is_large_string(col.type) else np.int32
     _, obuf, dbuf = col.buffers()
     offs = np.frombuffer(obuf, dtype=odt)[

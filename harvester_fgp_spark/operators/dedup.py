@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from ..functions.tokens import string_buffers as _string_buffers
+
 NUM_PERM = 32
 NUM_BANDS = 8  # 4 rows per band
 SHINGLE_K = 3
@@ -281,23 +283,6 @@ def _word_gram_hashes_arrow(
         order = np.argsort(gram_row, kind="stable")
         gram_row, gram_hash = gram_row[order], gram_hash[order]
     return gram_row, gram_hash
-
-
-def _string_buffers(col) -> "tuple[np.ndarray, np.ndarray]":
-    """(absolute int64 offsets, uint8 data) views of an Arrow string
-    array — zero-copy, slice-offset aware."""
-    import pyarrow as pa
-
-    if pa.types.is_large_string(col.type):
-        odt = np.int64
-    else:
-        odt = np.int32
-    _, obuf, dbuf = col.buffers()
-    offs = np.frombuffer(obuf, dtype=odt)[
-        col.offset : col.offset + len(col) + 1
-    ].astype(np.int64)
-    data = np.frombuffer(dbuf, dtype=np.uint8)
-    return offs, data
 
 
 def _band_hashes_from_sigs(sig: np.ndarray) -> np.ndarray:

@@ -8,12 +8,10 @@ broadcast-R-tree PIP -> G7 tile assign (native) -> normalized records.
 The reference runs the same semantics as one sequential per-record loop
 ([REF? harvest_hnap.py], SURVEY §3.1); here the whole thing is one
 declarative DataFrame DAG — Catalyst owns ordering, AQE owns shuffle
-sizing, and the only Python is three Arrow-batched stages (E1, E2, G4).
+sizing, and the only Python is one fused mapInArrow stage (E1, E2, G4).
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -30,7 +28,7 @@ from ..operators import geo as G
 # extracted_text is optional: it weighs ~page-text bytes PER PAYLOAD ROW
 # through the Arrow boundary and downstream shuffles, and aggregate
 # consumers (tile summaries) never read it — keep_text=False drops it at
-# the source, which is the only place a MapInPandas column can be pruned.
+# the source, which is the only place a MapInArrow column can be pruned.
 def _fused_schema(keep_text: bool) -> str:
     text_part = "extracted_text string, " if keep_text else ""
     return (
@@ -42,80 +40,77 @@ def _fused_schema(keep_text: bool) -> str:
 
 
 def _fused_mine_match(bidx, keep_text: bool = True):
-    """extract -> mine -> explode -> exact PIP, in ONE Python pass.
+    """extract -> mine -> explode -> exact PIP, in ONE Arrow-native pass.
 
-    Every ArrowEvalPython/MapInPandas node costs a Python worker per task
+    Every ArrowEvalPython/MapInArrow node costs a Python worker per task
     plus an Arrow round trip; at wide parallelism those fixed costs — not
     kernels — dominate (measured: worker-pool creation is serialized
     JVM-side). One fused stage keeps the whole Python portion of the
     pipeline to a single worker per task.
+
+    ``mapInArrow`` kernel: only ``text`` becomes Python strings (the
+    miner's regex input). Every output column is a ``take`` of an input
+    column or of a payload array by ONE index array: matched (payload,
+    polygon) pairs in match order, then unmatched payloads with a null
+    ``polygon_id`` (a masked take). No pandas frame is built.
     """
+    out_cols = [f.split()[0] for f in _fused_schema(keep_text).split(", ")]
 
-    base_cols = ["url", "warc_ts", "lang"]
-    out_cols = base_cols + (["extracted_text"] if keep_text else []) + [
-        "payload_idx", "kind", "lat", "lon", "west", "south", "east",
-        "north", "pt_lat", "pt_lon", "polygon_id",
-    ]
+    def fn(batches):
+        import pyarrow as pa
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         index = bidx.value
-        for pdf in batches:
-            text = pdf["text"]
-            miss = text.isna()
-            if miss.any():
+        polygon_ids = pa.array(index.polygon_ids, pa.string())
+        kinds = pa.array(["bbox", "point"], pa.string())
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            text = batch.column("text")
+            texts = text.to_pandas()
+            if text.null_count:
                 # extraction fallback is inherently per-element (stdlib
                 # HTML parser) but runs only on rows missing text
-                text = text.copy()
-                text[miss] = [
-                    _text.extract_text(bytes(h)) if h is not None else None
-                    for h in pdf["html"][miss]
+                miss = text.is_null()
+                texts[miss.to_numpy(zero_copy_only=False)] = [
+                    _text.extract_text(h) if h is not None else None
+                    for h in batch.column("html").filter(miss).to_pylist()
                 ]
+                text = pa.array(texts, pa.string())
             # vectorized miner: flat arrays, zero per-row Python (the
             # round-1 per-row dict loop was the measured scaling bottleneck)
             rows_i, pidx, kind, lat, lon, west, south, east, north = (
-                _text.mine_payloads_flat(text)
+                _text.mine_payloads_flat(texts)
             )
             if len(rows_i) == 0:
-                yield pd.DataFrame({k: [] for k in out_cols})
                 continue
             is_pt = kind == "point"
             pt_lat = np.where(is_pt, lat, (south + north) / 2.0)
             # wrap-aware center: west > east = antimeridian bbox
             pt_lon = np.where(is_pt, lon, _cells.bbox_center_lon(west, east))
-            data: dict = {
-                "url": pdf["url"].to_numpy()[rows_i],
-                "warc_ts": pdf["warc_ts"].to_numpy()[rows_i],
-                "lang": pdf["lang"].to_numpy()[rows_i],
-            }
-            if keep_text:
-                data["extracted_text"] = text.to_numpy()[rows_i]
-            data.update(
-                payload_idx=pidx.astype(np.int32),
-                kind=kind,
-                # nullable Float64 so NaN (= no value for this payload
-                # kind) crosses Arrow as SQL NULL, matching the scalar path
-                lat=pd.array(lat, dtype="Float64"),
-                lon=pd.array(lon, dtype="Float64"),
-                west=pd.array(west, dtype="Float64"),
-                south=pd.array(south, dtype="Float64"),
-                east=pd.array(east, dtype="Float64"),
-                north=pd.array(north, dtype="Float64"),
-                pt_lat=pt_lat,
-                pt_lon=pt_lon,
-            )
-            out = pd.DataFrame(data)
-            pts_i, polys_i = index.match_points(pt_lon, pt_lat)
             # left-join semantics identical to operators.geo.pip_join:
-            # one row per (payload, polygon) match; unmatched keep None
-            matched = out.iloc[pts_i].copy()
-            matched["polygon_id"] = np.array(index.polygon_ids, dtype=object)[
-                polys_i
+            # one row per (payload, polygon) match; unmatched keep null
+            pts_i, polys_i = index.match_points(pt_lon, pt_lat)
+            unmatched = np.ones(len(rows_i), dtype=bool)
+            unmatched[pts_i] = False
+            sel = np.concatenate([pts_i, np.flatnonzero(unmatched)])
+            src = pa.array(rows_i[sel])
+            poly = np.zeros(len(sel), dtype=np.int64)
+            poly[: len(pts_i)] = polys_i
+            no_match = np.arange(len(sel)) >= len(pts_i)
+            cols = [batch.column(c).take(src) for c in ("url", "warc_ts", "lang")]
+            if keep_text:
+                cols.append(text.take(src))
+            cols += [
+                pa.array(pidx[sel].astype(np.int32)),
+                kinds.take(pa.array(is_pt[sel].astype(np.int8))),
+                # NaN (= no value for this payload kind) -> SQL NULL
+                *(
+                    pa.array(a[sel], pa.float64(), from_pandas=True)
+                    for a in (lat, lon, west, south, east, north, pt_lat, pt_lon)
+                ),
+                polygon_ids.take(pa.array(poly, mask=no_match)),
             ]
-            unmatched_mask = np.ones(len(out), dtype=bool)
-            unmatched_mask[np.unique(pts_i)] = False
-            rest = out.iloc[np.nonzero(unmatched_mask)[0]].copy()
-            rest["polygon_id"] = None
-            yield pd.concat([matched, rest], ignore_index=True)
+            yield pa.RecordBatch.from_arrays(cols, names=out_cols)
 
     return fn
 
@@ -138,21 +133,23 @@ def mine_records(
 
     `engine` selects the payload+PIP stage (round 3; output is
     record-identical, asserted in tests/test_native_pipeline.py):
-      - "fused": ONE mapInPandas stage (extract -> mine -> explode ->
-        R-tree PIP). The only choice for html-only corpora.
+      - "fused": ONE mapInArrow stage (extract -> mine -> explode ->
+        R-tree PIP, see _fused_mine_match). The only choice for
+        html-only corpora.
       - "native": rows that carry text run a ZERO-Python plan — the
         regex miner as codegen expressions (payloads_native_col) and
         exact PIP as a broadcast join + higher-order ray cast
         (pip_join_native); html-only rows still route through the fused
         Python stage and union back in.
 
-    Measured (2M pages, local[32], this host): steady-state fused wins
-    (1.9-2.4 s vs native 2.6-3.0 s — warm Python workers + the numpy
-    flat miner beat Java running two regexp_extract_all passes plus the
-    union overhead), but COLD-start native wins (5.3 s vs 8.3 s — no
-    worker-spawn storm). Default stays "fused" for long-running batch;
-    "native" is the better shape for short jobs / micro-batches and for
-    clusters where Python workers contend with executors for memory.
+    History (round 3, 2M pages, local[32], a 32-core host, when the
+    fused stage was mapInPandas): steady-state fused won (1.9-2.4 s vs
+    native 2.6-3.0 s), cold-start native won (5.3 s vs 8.3 s, no
+    worker-spawn storm). Those numbers are not comparators for the
+    mapInArrow stage; perfbench/ (`flagship` workload) is the same-host
+    measure. Default stays "fused" for long-running batch; "native" is
+    the better shape for short jobs / micro-batches and for clusters
+    where Python workers contend with executors for memory.
     """
     valid, _quarantine = E.split_valid(pages)
     df = valid.filter(F.col("lang").isin("en", "fr"))
@@ -234,7 +231,7 @@ def mine_records(
         html_rows = df.filter(F.col("text").isNull()).select(
             "url", "warc_ts", "lang", "text", "html"
         )
-        fallback = html_rows.mapInPandas(
+        fallback = html_rows.mapInArrow(
             _fused_mine_match(bidx, keep_text=keep_text),
             _fused_schema(keep_text),
         )
@@ -261,7 +258,7 @@ def mine_records(
             "text",
             F.when(F.col("text").isNull(), F.col("html")).alias("html"),
         )
-        df = narrow.mapInPandas(
+        df = narrow.mapInArrow(
             _fused_mine_match(bidx, keep_text=keep_text),
             _fused_schema(keep_text),
         )

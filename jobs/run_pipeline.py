@@ -57,7 +57,7 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         "--engine",
         choices=("fused", "native"),
         default="fused",
-        help="payload+PIP stage: 'fused' = one mapInPandas Python stage "
+        help="payload+PIP stage: 'fused' = one mapInArrow Python stage "
         "(fastest steady state); 'native' = zero-Python plan for "
         "text-bearing rows (fastest cold start / micro-batches) — "
         "record-identical outputs either way",

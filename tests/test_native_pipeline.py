@@ -1,5 +1,5 @@
 """Round 3: the zero-Python pipeline engine must be record-identical to
-the fused mapInPandas engine, and its text-row plan must contain no
+the fused mapInArrow engine, and its text-row plan must contain no
 Python boundary at all."""
 
 from __future__ import annotations
@@ -71,12 +71,13 @@ def test_native_engine_record_identical_to_fused(spark):
 def test_native_text_plan_has_zero_python(spark):
     """The miner+PIP+finalize subplan for text rows must contain no
     ArrowEvalPython / MapInPandas / BatchEvalPython node; exactly one
-    MapInPandas remains in the full plan (the html fallback branch)."""
+    MapInArrow remains in the full plan (the html fallback branch)."""
     pages = pages_df(spark, 300, seed=1)
     polys = generate_polygons(30, seed=1)
     df = mine_records(spark, pages, polys, engine="native", keep_text=False)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1  # only the html-only fallback
+    assert plan.count("MapInArrow") == 1  # only the html-only fallback
+    assert "MapInPandas" not in plan
     assert "ArrowEvalPython" not in plan
     # and the flagship aggregate over it still answers correctly
     from harvester_fgp_spark.plans.pipeline import tile_summary

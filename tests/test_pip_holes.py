@@ -283,3 +283,100 @@ def test_rasterize_native_sliver_covers_crossed_tiles(spark):
 
     off_center = _run(3.6, 3.8)  # centers (y+0.5) never inside
     assert {(x, 3) for x in range(1, 7)} <= off_center
+
+
+def _pip_property_points(idx, rng, vertex_step=1):
+    """Global uniform points, points over the fixture's Canada window,
+    and, every ``vertex_step``-th, ring vertices and points on edges placed
+    with points_in_ring's own crossing arithmetic (on-boundary cases: a
+    cast that reorders that arithmetic flips some of them)."""
+    x = np.concatenate([rx for p in idx.rings for rx, _ in p])
+    y = np.concatenate([ry for p in idx.rings for _, ry in p])
+    x1, y1, x2, y2 = x[:-1], y[:-1], x[1:], y[1:]
+    sloped = y1 != y2
+    x1, y1, x2, y2 = x1[sloped], y1[sloped], x2[sloped], y2[sloped]
+    my = y1 + rng.uniform(0.05, 0.95, len(y1)) * (y2 - y1)
+    mx = x1 + (my - y1) * (x2 - x1) / (y2 - y1)
+    lon = np.concatenate(
+        [rng.uniform(-180, 180, 1500), rng.uniform(-145, -48, 1500),
+         x[::vertex_step], mx[::vertex_step]]
+    )
+    lat = np.concatenate(
+        [rng.uniform(-90, 90, 1500), rng.uniform(40, 72, 1500),
+         y[::vertex_step], my[::vertex_step]]
+    )
+    return lon, lat
+
+
+def _assert_one_pass_equals_brute(idx, lon, lat):
+    pts, polys = idx.match_points(lon, lat)
+    pairs = list(zip(pts.tolist(), polys.tolist()))
+    assert len(pairs) == len(set(pairs))
+    assert (np.diff(pts) >= 0).all()  # point-major
+    # per-ring XOR over EVERY polygon's (already dateline-split) rings
+    assert set(pairs) == _brute(idx.rings, lon, lat)
+    return pairs
+
+
+def test_one_pass_pip_equals_per_ring_xor_on_holes_fixture():
+    """One ray cast over all (candidate, edge) pairs == brute-force
+    per-ring XOR over every polygon: 2,000 fixture polygons with holes,
+    multipolygon parts and concave rings (every 17th), global points and
+    every 7th ring vertex and on-edge point (all of them make the brute
+    force ~25 s)."""
+    pdf = generate_polygons(2000, seed=7, holes=True)
+    idx = build_polygon_index(pdf)
+    lon, lat = _pip_property_points(idx, np.random.default_rng(3), vertex_step=7)
+    pairs = _assert_one_pass_equals_brute(idx, lon, lat)
+    assert len(pairs) > 500
+    concave = {i for i in range(2000) if i % 17 == 0}
+    assert concave & {p for _, p in pairs}
+
+
+def test_one_pass_pip_concave_and_dateline_rings():
+    """Concave stars (many straddling edges per ray) and a ring that
+    crosses the antimeridian (split into two parts at index build)."""
+    rng = np.random.default_rng(17)
+    rings, ids = [], []
+    for i in range(60):
+        k = 2 * int(rng.integers(4, 12))
+        ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+        rad = rng.uniform(2, 9) * np.where(np.arange(k) % 2, 0.3, 1.0)
+        cx, cy = rng.uniform(-150, 150), rng.uniform(-70, 70)
+        rx = np.append(cx + rad * np.cos(ang), cx + rad[0] * np.cos(ang[0]))
+        ry = np.append(cy + rad * np.sin(ang), cy + rad[0] * np.sin(ang[0]))
+        rings.append([{"x": float(x), "y": float(y)} for x, y in zip(rx, ry)])
+        ids.append(f"star-{i}")
+    fiji = [(178.0, -20.0), (-176.0, -20.0), (-177.0, -12.0), (179.0, -10.0),
+            (177.0, -15.0), (178.0, -20.0)]
+    rings.append([{"x": x, "y": y} for x, y in fiji])
+    ids.append("fiji")
+    idx = build_polygon_index(pd.DataFrame({"polygon_id": ids, "ring": rings}))
+    assert len(idx.rings[-1]) == 2  # split at the antimeridian
+    lon, lat = _pip_property_points(idx, np.random.default_rng(5))
+    lon = np.concatenate([lon, [179.5, -179.5, 178.5, -175.0]])
+    lat = np.concatenate([lat, [-15.0, -15.0, -21.0, -15.0]])
+    pairs = _assert_one_pass_equals_brute(idx, lon, lat)
+    n = len(lon)
+    fiji_hits = {p for p, poly in pairs if poly == len(ids) - 1}
+    assert {n - 4, n - 3} <= fiji_hits and not {n - 2, n - 1} & fiji_hits
+
+
+def test_one_pass_pip_chunking_and_empty_batches(monkeypatch):
+    """Chunk boundaries (down to chunks smaller than one polygon's edge
+    list) do not change the verdicts; an empty batch and a batch with no
+    candidates return empty int64 pairs."""
+    from harvester_fgp_spark.geo import pip as P
+
+    pdf = generate_polygons(300, seed=5, holes=True)
+    idx = build_polygon_index(pdf)
+    lon, lat = _pip_property_points(idx, np.random.default_rng(8))
+    whole = idx.match_points(lon, lat)
+    for chunk in (1, 7, 64, 1000):
+        monkeypatch.setattr(P, "_CAST_CHUNK", chunk)
+        got = idx.match_points(lon, lat)
+        assert all((g == w).all() for g, w in zip(got, whole)), chunk
+    for lo, la in ((np.empty(0), np.empty(0)), (np.array([10.0, 120.0]), np.array([-80.0, 0.0]))):
+        pts, polys = idx.match_points(lo, la)
+        assert len(pts) == len(polys) == 0
+        assert pts.dtype == polys.dtype == np.int64

@@ -81,7 +81,8 @@ def test_pipeline_has_single_fused_python_stage(spark):
     records = mine_records(spark, pages_df(spark, 200, seed=42),
                            generate_polygons(20, seed=42))
     plan = _plan(records)
-    assert plan.count("MapInPandas") == 1, plan[:2000]
+    assert plan.count("MapInArrow") == 1, plan[:2000]
+    assert "MapInPandas" not in plan
     assert "ArrowEvalPython" not in plan
     assert "BatchEvalPython" not in plan
     # html is guarded: CASE WHEN isnull(text) THEN html feeds the stage
