@@ -1,20 +1,30 @@
-"""split(" ")-exact tokenization and n-gram hashing over Arrow string
-buffers — zero Python objects per document, word, or gram (round 8).
+"""The engine's one text-hashing substrate: two tokenizers and one word
+hasher over Arrow string buffers — zero Python objects per document,
+word, or gram. Every near-dup, window and repetition operator calls
+these; none keeps its own copy.
 
-The native rolling-window construction (``operators.dedup._window_hash_rows``)
-and the exploding bigram plan (rounds 3-7 ``repetition_stats``) both pay
-one interpreted higher-order-function evaluation PER WINDOW; at sf1.0
-that is ~15-25M lambda evaluations and dominated their queries (12.7 s /
-5.9 s, guide §4.2). These kernels read the Arrow string column's
-(offsets, utf-8 buffer) pair zero-copy and run the same computation as
-~k vectorized numpy passes.
+The kernels read an Arrow string column's (offsets, utf-8 buffer) pair
+zero-copy and run as ~k vectorized numpy passes per batch, where a
+native rolling-window plan pays one interpreted higher-order-function
+evaluation PER WINDOW.
 
-Tokenization contract — EXACTLY ``F.split(col, " ")``: every 0x20 byte
-is a boundary, consecutive separators produce empty tokens, an empty
-string is ONE empty token. (The minhash band kernel in operators.dedup
-intentionally differs: it lowercases and splits on whitespace RUNS;
-near-dup banding wants normalization, decontamination/repetition counts
-must reproduce the native split semantics bit-for-bit.)
+Two tokenizers:
+
+- ``space_token_arrays`` — EXACTLY ``F.split(col, " ")``: every 0x20
+  byte is a boundary, consecutive separators produce empty tokens, an
+  empty string is ONE empty token. Decontamination, repeated-span and
+  repetition counts must reproduce the native split bit-for-bit.
+- ``ws_token_arrays`` — the near-dup rule: bytes A-Z lowercased, split
+  on runs of ASCII whitespace (tab, LF, VT, FF, CR, space), no empty
+  tokens. MinHash banding, the exact verify and SimHash share it.
+  ASCII-only by design: ``É`` is not case-folded and U+00A0 is not a
+  separator.
+
+One hasher: ``hash_tokens`` gives each token a uint64; ``gram_hashes``
+combines k consecutive token hashes of one document as a polynomial.
+Both take the combiner constant (default ``POLY_B``) so the band store
+keeps its historical values. ``distinct_runs`` is the shared per-doc
+distinct (doc, hash) step.
 
 Hash contract: values are kernel-internal (both sides of any join/count
 use the same function), injective for tokens <= 8 bytes, prefix(64)+
@@ -27,17 +37,22 @@ from __future__ import annotations
 
 import numpy as np
 
-#: FNV-1a 64-bit prime — degree-(k-1) polynomial combiner over token
-#: hashes; full-width uint64 wraparound arithmetic.
+#: FNV-1a 64-bit prime — default degree-(k-1) polynomial combiner over
+#: token hashes; full-width uint64 wraparound arithmetic.
 POLY_B = np.uint64(0x100000001B3)
 #: tokens longer than this hash by prefix + byte length (natural-text safe)
 WORD_CAP = 64
 _FMIX_C1 = np.uint64(0xFF51AFD7ED558CCD)
 _FMIX_C2 = np.uint64(0xC4CEB9FE1A85EC53)
+_LOWER_LUT = np.arange(256, dtype=np.uint8)
+_LOWER_LUT[65:91] += 32
+_WS_LUT = np.zeros(256, dtype=bool)
+_WS_LUT[[9, 10, 11, 12, 13, 32]] = True
 
 
 def fmix64(h: np.ndarray) -> np.ndarray:
-    """splitmix-style finalizer (same constants as the dedup kernel)."""
+    """splitmix-style finalizer: packed token ints are injective but
+    low-entropy in the high bits."""
     h = h ^ (h >> np.uint64(33))
     h = h * _FMIX_C1
     h = h ^ (h >> np.uint64(33))
@@ -48,9 +63,9 @@ def fmix64(h: np.ndarray) -> np.ndarray:
 def string_buffers(col) -> "tuple[np.ndarray, np.ndarray]":
     """(absolute int64 offsets, uint8 data) views of an Arrow string
     array — zero-copy, slice-offset aware. Null slots read as
-    zero-length (their offset pair is degenerate), which downstream
-    token math treats as one empty token — callers that must
-    distinguish null from "" handle the validity bitmap themselves.
+    zero-length (their offset pair is degenerate): one empty token to
+    ``space_token_arrays``, no token to ``ws_token_arrays`` — callers
+    that must distinguish null from "" drop nulls first.
     A zero-length array reads as one zero offset and no data: Arrow lets
     it omit the offsets buffer entirely."""
     import pyarrow as pa
@@ -101,22 +116,60 @@ def space_token_arrays(
     return token_doc, starts, ends - starts, n_tok
 
 
+def ws_token_arrays(
+    offsets: np.ndarray, data: np.ndarray
+) -> "tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, np.ndarray]":
+    """Near-dup tokenization for a whole batch: ASCII-lowercase, split
+    on ASCII-whitespace runs, no empty tokens (an empty, null or
+    whitespace-only doc has none).
+
+    Returns ``(low, token_doc, starts, lengths, n_tok)``: ``low`` is the
+    lowercased copy of the batch's bytes ``data[offsets[0]:offsets[-1]]``
+    and ``starts`` index into it; the rest as ``space_token_arrays``."""
+    n_docs = len(offsets) - 1
+    lo, hi = int(offsets[0]), int(offsets[-1])
+    low = _LOWER_LUT[data[lo:hi]]
+    nonws = ~_WS_LUT[low]
+    # a token starts at a non-ws byte after a ws byte or at a doc start:
+    # adjacent docs are contiguous in the buffer with NO separator byte
+    prev = np.ones(len(nonws), dtype=bool)
+    prev[1:] = ~nonws[:-1]
+    # an empty/null doc at the END of the batch starts one past the
+    # slice: there is no byte to break at, and it has no token anyway
+    ds = offsets[:-1] - lo
+    prev[ds[ds < hi - lo]] = True
+    starts = np.flatnonzero(nonws & prev).astype(np.int64)
+    if not len(starts):
+        e = np.empty(0, dtype=np.int64)
+        return low, e, e, e, np.zeros(n_docs, dtype=np.int64)
+    # token length = non-ws bytes up to the next start: doc starts are
+    # token starts, so no token runs past its doc
+    lengths = np.add.reduceat(nonws.astype(np.int64), starts)
+    token_doc = np.searchsorted(offsets[1:] - lo, starts, side="right")
+    n_tok = np.bincount(token_doc, minlength=n_docs).astype(np.int64)
+    return low, token_doc.astype(np.int64), starts, lengths, n_tok
+
+
 def hash_tokens(
-    data: np.ndarray, starts: np.ndarray, lengths: np.ndarray
+    data: np.ndarray,
+    starts: np.ndarray,
+    lengths: np.ndarray,
+    b: np.uint64 = POLY_B,
 ) -> np.ndarray:
     """uint64 hash per token: first 8 bytes packed little-endian
-    (injective there), polynomial tail to WORD_CAP for longer tokens,
-    mixed with the byte length. No case folding — token equality must
-    equal string equality under split(" ")."""
+    (injective there), polynomial in ``b`` over the tail to WORD_CAP for
+    longer tokens, mixed with the byte length and finalized by
+    ``fmix64``. No case folding here: ``ws_token_arrays`` hands over
+    lowercased bytes, ``space_token_arrays`` raw ones."""
     n = len(starts)
     h = np.zeros(n, dtype=np.uint64)
     if n == 0:
         return h
     padded = np.concatenate([data, np.zeros(8, dtype=np.uint8)])
     for j in range(8):
-        b = padded[starts + j].astype(np.uint64)
-        b[lengths <= j] = 0
-        h |= b << np.uint64(8 * j)
+        c = padded[starts + j].astype(np.uint64)
+        c[lengths <= j] = 0
+        h |= c << np.uint64(8 * j)
     long_idx = np.flatnonzero(lengths > 8)
     if len(long_idx):
         tail = np.zeros(len(long_idx), dtype=np.uint64)
@@ -128,21 +181,24 @@ def hash_tokens(
             alive = alive[llen[alive] > j]
             if not len(alive):
                 break
-            tail[alive] = tail[alive] * POLY_B + padded[
+            tail[alive] = tail[alive] * b + padded[
                 lstarts[alive] + j
             ].astype(np.uint64)
             j += 1
-        h[long_idx] = h[long_idx] * POLY_B + tail
-    return fmix64(h * POLY_B + lengths.astype(np.uint64))
+        h[long_idx] = h[long_idx] * b + tail
+    return fmix64(h * b + lengths.astype(np.uint64))
 
 
 def gram_hashes(
-    word_hash: np.ndarray, token_doc: np.ndarray, k: int
+    word_hash: np.ndarray, token_doc: np.ndarray, k: int, b: np.uint64 = POLY_B
 ) -> "tuple[np.ndarray, np.ndarray]":
     """(gram_doc, gram_hash) for every k-token window that fits inside
     one document — the vectorized twin of the native
     transform(sequence(0, n_tok - k), ...) window construction: docs
-    with fewer than k tokens emit NO grams (no short-doc fallback)."""
+    with fewer than k tokens emit NO grams (no short-doc fallback).
+    The hash is the raw degree-(k-1) polynomial in ``b`` over the token
+    hashes, with no finalizer: MinHash banding consumes the raw value,
+    and counting consumers need only its equality."""
     n = len(word_hash)
     if n < k:
         return np.empty(0, np.int64), np.empty(0, np.uint64)
@@ -150,5 +206,20 @@ def gram_hashes(
     idx = np.flatnonzero(same)
     acc = np.zeros(len(idx), dtype=np.uint64)
     for j in range(k):
-        acc = acc * POLY_B + word_hash[idx + j]
-    return token_doc[idx], fmix64(acc)
+        acc = acc * b + word_hash[idx + j]
+    return token_doc[idx], acc
+
+
+def distinct_runs(
+    doc: np.ndarray, h: np.ndarray
+) -> "tuple[np.ndarray, np.ndarray]":
+    """Per-doc distinct hashes: ``(order, run_starts)`` where ``order``
+    sorts the pairs by (doc, h) — stably, so equal pairs keep their
+    input order — and ``run_starts`` are the sorted positions where each
+    distinct (doc, h) run begins. ``order[run_starts]`` picks one
+    representative per distinct pair."""
+    order = np.lexsort((h, doc))
+    d, v = doc[order], h[order]
+    new = np.ones(len(d), dtype=bool)
+    new[1:] = (d[1:] != d[:-1]) | (v[1:] != v[:-1])
+    return order, np.flatnonzero(new)

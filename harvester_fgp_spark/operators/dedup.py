@@ -6,23 +6,30 @@
   equi-join on (band, band_hash) so Catalyst shuffles once on a compact
   key; the verify step re-computes Jaccard ONLY on candidate pairs.
 - SimHash: 64-bit signature + banded buckets for Hamming-neighbor lookup.
+- Rolling windows (decontaminate, duplicate_span_counts): split(" ")
+  k-token window hashes.
 
 Scale notes: signatures are fixed-width (NUM_PERM longs / one long), so
 shuffle width is bounded regardless of document size; band tables are
-(id, band, hash) — the classic sub-quadratic near-dup layout. All Python
-is Arrow-batched pandas UDFs over numpy (no per-row Python).
+(id, band, hash) — the classic sub-quadratic near-dup layout. Every text
+kernel is a mapInArrow stage over ``functions.tokens`` (no per-row
+Python, no Python object per word or gram).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
-from ..functions.tokens import string_buffers as _string_buffers
+from ..functions import tokens as T
 
 NUM_PERM = 32
 NUM_BANDS = 8  # 4 rows per band
@@ -41,242 +48,36 @@ _PERM_A = _rng.integers(1, 1 << 32, size=NUM_PERM, dtype=np.int64)
 _PERM_B = _rng.integers(0, _MERSENNE, size=NUM_PERM, dtype=np.int64)
 _X_MASK = np.uint64((1 << 31) - 1)
 
-# Odd multiplier for the polynomial word-gram rolling hash (golden-ratio
-# constant); powers wrap mod 2^64, which is exactly what uint64 gives.
+# Odd multiplier for the near-dup word and gram polynomials
+# (golden-ratio constant); powers wrap mod 2^64, which is exactly what
+# uint64 gives. Band hashes are store data, so it never changes.
 _POLY_B = np.uint64(0x9E3779B97F4A7C15)
 
 
-def _gram_hash_arrays(texts: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """Batch word-k-gram hashing with ZERO per-row Python (round-3 fix of
-    the bench hot spot: the old kernel ran blake2b per gram in a Python
-    list comprehension per document).
-
-    Pipeline, all C-level: ``str.lower().str.split()`` -> ``explode`` ->
-    one ``pd.util.hash_array`` pass over every word in the batch (siphash,
-    fixed key => deterministic across workers/sessions) -> k-gram hashes
-    as a degree-(k-1) polynomial in ``_POLY_B`` over consecutive word
-    hashes (three shifted vector multiplies, wraparound mod 2^64).
-    Documents with 0 < n_words < k contribute ONE gram over all their
-    words (same cardinality the old join-everything gram had).
-
-    Returns ``(gram_row, gram_hash)`` sorted by row — ready for
-    ``np.minimum.reduceat`` / bit-majority ``reduceat`` per document.
-    """
-    words = texts.reset_index(drop=True).fillna("").str.lower().str.split()
-    nw = words.str.len().to_numpy(dtype=np.int64)
-    flat = words.explode()
-    mask = flat.notna().to_numpy()
-    vals = flat.to_numpy(dtype=object)[mask]
-    row = flat.index.to_numpy(dtype=np.int64)[mask]
-    wh = pd.util.hash_array(vals).astype(np.uint64)
-
+def _near_dup_grams(texts) -> "tuple[np.ndarray, np.ndarray]":
+    """(gram_doc, gram_hash) for one Arrow string column under the
+    single near-dup rule (see ``band_table``): ``tokens.ws_token_arrays``
+    words, hashed by ``tokens.hash_tokens``, word SHINGLE_K-grams by
+    ``tokens.gram_hashes``; a doc with 0 < words < SHINGLE_K contributes
+    ONE gram over all its words, a doc with no words none. gram_doc is
+    sorted (buffer order)."""
+    offs, data = T.string_buffers(texts)
+    low, tdoc, starts, lens, n_tok = T.ws_token_arrays(offs, data)
+    wh = T.hash_tokens(low, starts, lens, _POLY_B)
     k = SHINGLE_K
-    parts_row: list[np.ndarray] = []
-    parts_hash: list[np.ndarray] = []
-    n = len(wh)
-    if n >= k:
-        # full windows: position i starts a gram iff i..i+k-1 share a row
-        same = row[: n - k + 1] == row[k - 1 :]
-        acc = np.zeros(int(same.sum()), dtype=np.uint64)
-        idx = np.nonzero(same)[0]
-        for j in range(k):
-            acc = acc * _POLY_B + wh[idx + j]
-        parts_row.append(row[idx])
-        parts_hash.append(acc)
-    # short documents (0 < n_words < k): one gram over all their words
-    starts = np.concatenate([[0], np.cumsum(nw)])[:-1]
-    for m in range(1, k):
-        short = np.nonzero(nw == m)[0]
-        if len(short):
-            acc = np.zeros(len(short), dtype=np.uint64)
-            for j in range(m):
-                acc = acc * _POLY_B + wh[starts[short] + j]
-            parts_row.append(short.astype(np.int64))
-            parts_hash.append(acc)
-    if not parts_row:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64)
-    gram_row = np.concatenate(parts_row)
-    gram_hash = np.concatenate(parts_hash)
-    order = np.argsort(gram_row, kind="stable")
-    return gram_row[order], gram_hash[order]
-
-
-def _gram_hashes(text: str) -> np.ndarray:
-    """Scalar twin of ``_gram_hash_arrays`` (tests + tiny inputs)."""
-    _, h = _gram_hash_arrays(pd.Series([text]))
-    return h
-
-
-def _minhash_batch(texts: pd.Series) -> pd.Series:
-    """(a*x + b) mod p per permutation over the whole batch's gram array
-    (a < 2^32, x < 2^31: the product provably fits uint64 — see the
-    _PERM_A comment), then ``np.minimum.reduceat`` per document — 32
-    vector passes total, no per-document Python. Empty docs -> all-zero
-    signature, null docs -> null (same surface as the scalar kernel)."""
-    t = texts.reset_index(drop=True)
-    rows = len(t)
-    gram_row, gram_hash = _gram_hash_arrays(t)
-    sig = np.zeros((rows, NUM_PERM), dtype=np.int64)
-    if len(gram_row):
-        with_grams = np.unique(gram_row)
-        starts = np.searchsorted(gram_row, with_grams)
-        x = (gram_hash & _X_MASK).astype(np.uint64)
-        for p in range(NUM_PERM):
-            v = (
-                x * np.uint64(_PERM_A[p]) + np.uint64(_PERM_B[p])
-            ) % np.uint64(_MERSENNE)
-            sig[with_grams, p] = np.minimum.reduceat(v, starts).astype(np.int64)
-    isnull = t.isna().to_numpy()
-    out = pd.Series(list(sig), dtype=object)
-    out[isnull] = None
-    return out
-
-
-@pandas_udf(ArrayType(LongType()))
-def minhash_udf(text: pd.Series) -> pd.Series:
-    return _minhash_batch(text)
-
-
-# --- Arrow-native signature kernel (round 7, VERDICT r6 next-#2) -------------
-#
-# The pandas kernel above pays for Python-object traffic four times per
-# batch: Arrow->pandas materializes one str PER DOCUMENT, str.lower/
-# str.split allocate one str PER WORD, explode builds an object index,
-# and pd.util.hash_array sip-hashes each word OBJECT (re-encoding it to
-# utf-8 on the way). The Arrow string column already holds exactly what
-# the kernel needs — (int32 offsets, contiguous utf-8 buffer) — so the
-# band stage now reads those buffers zero-copy via mapInArrow and stays
-# in flat numpy end-to-end: no Python object is created per document,
-# word, or gram. Measured single-thread (20k synth docs, 6.5 MB): 0.149 s
-# vs 0.684 s for the pandas kernel (4.6x), and the bytes that used to
-# churn the shared allocator/memory bus under 16 concurrent workers
-# (~56 MB of PyObjects + re-encodes per batch) drop to ~2 passes over
-# the text buffer + fixed-width arrays — the dedup-path N->4N lever.
-#
-# Hash semantics (self-consistent, documented drift from the pandas
-# kernel): words are ASCII-lowercased and split on ASCII whitespace;
-# a word hashes as fmix64(first-8-bytes-packed [* B + tail-poly for
-# words > 8 B, first 64 B] * B + byte_length) — injective for words
-# <= 8 bytes, prefix+length beyond 64 bytes (natural-text safe). Gram
-# hashes are the same degree-(k-1) polynomial as the pandas kernel.
-# Signature VALUES therefore differ from minhash_udf's — the LSH
-# contract (identical docs -> identical signatures; banding S-curve on
-# the same universal family) is unchanged, the verify stage filters on
-# exact gram Jaccard either way, and the gate oracle recomputes string
-# grams longhand. Persistent stores (update_minhash_store) written
-# before round 7 must be rebuilt — signatures are store-internal.
-
-_LOWER_LUT = np.arange(256, dtype=np.uint8)
-_LOWER_LUT[65:91] += 32
-_WS_LUT = np.zeros(256, dtype=bool)
-_WS_LUT[[9, 10, 11, 12, 13, 32]] = True
-_WORD_CAP = 64
-_FMIX_C1 = np.uint64(0xFF51AFD7ED558CCD)
-_FMIX_C2 = np.uint64(0xC4CEB9FE1A85EC53)
-
-
-def _fmix64(h: np.ndarray) -> np.ndarray:
-    """splitmix-style finalizer: the packed word ints are injective but
-    low-entropy in the high bits; the perm family masks to the LOW 31
-    bits, so mix before it looks."""
-    h = h ^ (h >> np.uint64(33))
-    h = h * _FMIX_C1
-    h = h ^ (h >> np.uint64(33))
-    h = h * _FMIX_C2
-    return h ^ (h >> np.uint64(33))
-
-
-def _word_gram_hashes_arrow(
-    offsets: np.ndarray, data: np.ndarray, k: int = SHINGLE_K
-) -> "tuple[np.ndarray, np.ndarray]":
-    """(gram_doc, gram_hash) over an Arrow string buffer pair — the
-    zero-object twin of ``_gram_hash_arrays``. ``offsets`` are int64
-    absolute byte offsets (len = n_docs + 1) into ``data`` (uint8).
-    gram_doc is sorted (buffer order); short docs (0 < words < k)
-    contribute one gram over all their words, like the pandas kernel."""
-    lo = int(offsets[0])
-    hi = int(offsets[-1])
-    if hi <= lo:
-        return np.empty(0, np.int64), np.empty(0, np.uint64)
-    low = _LOWER_LUT[data[lo:hi]]
-    nonws = ~_WS_LUT[low]
-    # word starts: nonws whose previous byte is ws/required break; doc
-    # boundaries force a break (adjacent docs are contiguous in the
-    # buffer with NO separator byte)
-    prev = np.empty(len(nonws), dtype=bool)
-    prev[0] = True
-    prev[1:] = ~nonws[:-1]
-    # doc-start break positions: an EMPTY/NULL doc at the END of the
-    # batch has offsets[i] == hi, one past the slice — mask it (there is
-    # no byte to break at; the no-gram rule already covers such docs)
-    ds = offsets[:-1] - lo
-    prev[ds[ds < hi - lo]] = True
-    starts = np.flatnonzero(nonws & prev).astype(np.int64)
-    n_words = len(starts)
-    if n_words == 0:
-        return np.empty(0, np.int64), np.empty(0, np.uint64)
-    # word byte-length: nonws bytes between consecutive starts — doc
-    # boundaries already break words, interior whitespace sums zero.
-    # Force a length break at each doc start so a word ending flush at a
-    # doc boundary cannot absorb the next doc's bytes: starts includes
-    # every doc's first word, and reduceat segments end at the next
-    # start, so the boundary is already a segment edge.
-    wl = np.add.reduceat(nonws.astype(np.int64), starts)
-    # pack the first 8 bytes little-endian (exact word identity for
-    # <= 8-byte words, the overwhelming majority); starts are sorted so
-    # the 8 gathers stream the buffer nearly sequentially
-    h = np.zeros(n_words, dtype=np.uint64)
-    padded = np.concatenate([low, np.zeros(8, dtype=np.uint8)])
-    for j in range(8):
-        b = padded[starts + j].astype(np.uint64)
-        b[wl <= j] = 0
-        h |= b << np.uint64(8 * j)
-    # long-word tail: polynomial over bytes 8..cap for the small subset
-    long_idx = np.flatnonzero(wl > 8)
-    if len(long_idx):
-        tail = np.zeros(len(long_idx), dtype=np.uint64)
-        lstarts = starts[long_idx]
-        llen = np.minimum(wl[long_idx], _WORD_CAP)
-        j = 8
-        alive = np.arange(len(long_idx))
-        while j < int(llen.max(initial=0)):
-            alive = alive[llen[alive] > j]
-            if not len(alive):
-                break
-            tail[alive] = tail[alive] * _POLY_B + padded[
-                lstarts[alive] + j
-            ].astype(np.uint64)
-            j += 1
-        h[long_idx] = h[long_idx] * _POLY_B + tail
-    h = _fmix64(h * _POLY_B + wl.astype(np.uint64))
-    # doc attribution + per-doc word counts
-    wdoc = np.searchsorted(offsets[1:], starts + lo, side="right").astype(
-        np.int64
-    )
-    nw = np.bincount(wdoc, minlength=len(offsets) - 1)
-    parts_row: list = []
-    parts_hash: list = []
-    if n_words >= k:
-        same = wdoc[: n_words - k + 1] == wdoc[k - 1 :]
-        idx = np.nonzero(same)[0]
-        acc = np.zeros(len(idx), dtype=np.uint64)
-        for j in range(k):
-            acc = acc * _POLY_B + h[idx + j]
-        parts_row.append(wdoc[idx])
-        parts_hash.append(acc)
-    wstarts = np.concatenate([[0], np.cumsum(nw)])[:-1]
+    gdoc, gh = T.gram_hashes(wh, tdoc, k, _POLY_B)
+    parts_row, parts_hash = [gdoc], [gh]
+    wstarts = np.concatenate([[0], np.cumsum(n_tok)])[:-1]
     short_any = False
     for m in range(1, k):
-        short = np.nonzero(nw == m)[0]
+        short = np.flatnonzero(n_tok == m)
         if len(short):
             short_any = True
             acc = np.zeros(len(short), dtype=np.uint64)
             for j in range(m):
-                acc = acc * _POLY_B + h[wstarts[short] + j]
+                acc = acc * _POLY_B + wh[wstarts[short] + j]
             parts_row.append(short.astype(np.int64))
             parts_hash.append(acc)
-    if not parts_row:
-        return np.empty(0, np.int64), np.empty(0, np.uint64)
     gram_row = np.concatenate(parts_row)
     gram_hash = np.concatenate(parts_hash)
     if short_any:
@@ -287,9 +88,8 @@ def _word_gram_hashes_arrow(
 
 def _band_hashes_from_sigs(sig: np.ndarray) -> np.ndarray:
     """(m, NUM_BANDS) int64 bucket keys: fmix64 of the band's
-    rows-per-band signature slots as a polynomial — the numpy stand-in
-    for the JVM xxhash64(slice(sig)) the pandas path used. Any strong
-    64-bit hash of the slot tuple serves the banding contract."""
+    rows-per-band signature slots as a polynomial. Any strong 64-bit
+    hash of the slot tuple serves the banding contract."""
     rows_per_band = NUM_PERM // NUM_BANDS
     m = sig.shape[0]
     out = np.empty((m, NUM_BANDS), dtype=np.int64)
@@ -298,7 +98,7 @@ def _band_hashes_from_sigs(sig: np.ndarray) -> np.ndarray:
         acc = np.zeros(m, dtype=np.uint64)
         for r in range(rows_per_band):
             acc = acc * _POLY_B + u[:, b * rows_per_band + r]
-        out[:, b] = _fmix64(acc).view(np.int64)
+        out[:, b] = T.fmix64(acc).view(np.int64)
     return out
 
 
@@ -307,8 +107,7 @@ def _band_rows_arrow(ids, texts, id_name: str):
     (id repeated per band, band, bh) for every doc with >= 1 gram."""
     import pyarrow as pa
 
-    offs, data = _string_buffers(texts)
-    gram_row, gram_hash = _word_gram_hashes_arrow(offs, data)
+    gram_row, gram_hash = _near_dup_grams(texts)
     if not len(gram_row):
         return None
     with_grams = np.unique(gram_row)
@@ -333,34 +132,46 @@ def _band_rows_arrow(ids, texts, id_name: str):
     )
 
 
-def _jaccard_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Exact gram-set Jaccard for candidate pairs: both columns hash
-    through the batched gram kernel; the per-pair set algebra is
-    ``np.intersect1d`` over unique uint64 arrays (C merge), not Python
-    set-of-str operations."""
-    a = a.reset_index(drop=True)
-    b = b.reset_index(drop=True)
-    ra, ha = _gram_hash_arrays(a)
-    rb, hb = _gram_hash_arrays(b)
-    bounds_a = np.searchsorted(ra, np.arange(len(a) + 1))
-    bounds_b = np.searchsorted(rb, np.arange(len(b) + 1))
-    out = np.empty(len(a), dtype=np.float64)
-    for i in range(len(a)):
-        sa = np.unique(ha[bounds_a[i] : bounds_a[i + 1]])
-        sb = np.unique(hb[bounds_b[i] : bounds_b[i + 1]])
-        if not len(sa) and not len(sb):
-            out[i] = 1.0
-            continue
-        inter = len(np.intersect1d(sa, sb, assume_unique=True))
-        out[i] = inter / (len(sa) + len(sb) - inter)
-    return pd.Series(out)
+def _pair_jaccard(text_a, text_b) -> np.ndarray:
+    """Exact near-dup gram-set Jaccard per row of two aligned Arrow
+    string columns. Both sides' grams go through ONE stable lexsort by
+    (pair, hash), A-side grams first, so each distinct (pair, hash) run
+    holds a side-A gram iff its first entry comes from A and a side-B
+    gram iff its last entry comes from B — sizes and intersections are
+    bincounts over runs, with no per-pair Python. Null and empty text
+    both have zero grams; two zero-gram sides give 1.0."""
+    n = len(text_a)
+    da, ha = _near_dup_grams(text_a)
+    db, hb = _near_dup_grams(text_b)
+    doc = np.concatenate([da, db])
+    if not len(doc):
+        return np.ones(n, dtype=np.float64)
+    order, rs = T.distinct_runs(doc, np.concatenate([ha, hb]))
+    from_b = order >= len(da)
+    has_a = ~from_b[rs]
+    has_b = from_b[np.append(rs[1:], len(doc)) - 1]
+    run_doc = doc[order[rs]]
+    size_a = np.bincount(run_doc[has_a], minlength=n)
+    size_b = np.bincount(run_doc[has_b], minlength=n)
+    inter = np.bincount(run_doc[has_a & has_b], minlength=n)
+    union = size_a + size_b - inter
+    out = np.ones(n, dtype=np.float64)
+    nz = union > 0
+    out[nz] = inter[nz] / union[nz]
+    return out
 
 
-# NB: DataType object, not "double" DDL — string types need the JVM to
-# parse, which breaks when the Python WORKER re-imports this module.
-@pandas_udf(DoubleType())
-def jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _jaccard_batch(a, b)
+def _jaccard_batches(batches):
+    """mapInArrow kernel: (id_a, id_b, text_a, text_b) batches ->
+    (id_a, id_b, jaccard)."""
+    import pyarrow as pa
+
+    for batch in batches:
+        jac = _pair_jaccard(batch.column(2), batch.column(3))
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0), batch.column(1), pa.array(jac)],
+            names=["id_a", "id_b", "jaccard"],
+        )
 
 
 def band_table(
@@ -373,27 +184,33 @@ def band_table(
     not corpus bytes. tests/test_dedup_scale.py::test_band_table_carries_no_text
     asserts no string column ever enters this table.
 
-    Round 7: one fused mapInArrow stage (signature + banding + band-row
-    explode) over the Arrow string buffers — see the kernel note above
-    ``_word_gram_hashes_arrow``. TOKENIZATION IS ASCII-ONLY (ADVICE r7,
-    documented at the public surface): the kernel lowercases A-Z and
-    splits on ASCII whitespace, so corpora using Unicode separators
-    (U+00A0, U+3000) or non-ASCII case folding band differently than a
-    Python str.lower()/str.split() would — a banding-RECALL drift on
-    such text, never a precision one (the verify stage still filters on
-    exact gram Jaccard). Normalize Unicode whitespace upstream for
-    multilingual corpora. Docs that produce zero grams (null,
-    empty, whitespace-only) emit NO band rows: content dedup of
-    contentless docs is meaningless and a shared "empty" signature would
-    put every extraction-failed doc in ONE bucket per band — a quadratic
-    pair explosion inside a single collect_list row reported as
-    jaccard-1.0 "duplicates". Callers handle empties as a validity class
-    (P2 quarantine), not near-dups. (The explicit null/length filter
-    below keeps the scan predicate pushable; the kernel's no-gram rule
-    also covers whitespace-only docs the filter lets through.)
-    """
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    One fused mapInArrow stage (signature + banding + band-row explode)
+    over the Arrow string buffers.
 
+    THE NEAR-DUP RULE — one rule, shared by this banding, the exact
+    verify (``_pair_jaccard``) and SimHash, all through
+    ``_near_dup_grams``: lowercase A-Z, split on runs of ASCII
+    whitespace, hash word SHINGLE_K-grams; a doc with fewer words has
+    one gram over all of them. Because candidate generation and the
+    verify that filters it tokenize identically, a pair's banding
+    probability and its verified Jaccard describe the same gram sets.
+    TOKENIZATION IS ASCII-ONLY (ADVICE r7): Unicode separators (U+00A0,
+    U+3000) do not split and non-ASCII letters are not case-folded;
+    normalize upstream for multilingual corpora. The gate oracle
+    ``_VERIFY_JACCARD_SQL`` splits on ``' '`` case-sensitively, so it
+    agrees with this rule only on lower-case, single-spaced text (the
+    fixture's).
+
+    Docs that produce zero grams (null, empty, whitespace-only) emit NO
+    band rows: content dedup of contentless docs is meaningless and a
+    shared "empty" signature would put every extraction-failed doc in
+    ONE bucket per band — a quadratic pair explosion inside a single
+    collect_list row reported as jaccard-1.0 "duplicates". Callers
+    handle empties as a validity class (P2 quarantine), not near-dups.
+    (The explicit null/length filter below keeps the scan predicate
+    pushable; the kernel's no-gram rule also covers whitespace-only docs
+    the filter lets through.)
+    """
     nonempty = docs.filter(
         F.col(text_col).isNotNull() & (F.length(text_col) > 0)
     )
@@ -581,8 +398,15 @@ def _verify_candidate_pairs(
             F.when(F.col("_id") == F.col("id_b"), F.col(text_col))
         ).alias("text_b"),
     )
+    schema = StructType(
+        [
+            per_pair.schema["id_a"],
+            per_pair.schema["id_b"],
+            StructField("jaccard", DoubleType(), False),
+        ]
+    )
     return (
-        per_pair.withColumn("jaccard", jaccard_udf("text_a", "text_b"))
+        per_pair.mapInArrow(_jaccard_batches, schema)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
@@ -596,15 +420,35 @@ def _verify_candidate_pairs(
 BAND_KERNEL_VERSION = 2
 
 
+def _hadoop_path(spark, path: str):
+    """(FileSystem, Path) for ``path`` under the session's Hadoop conf."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def _store_kernel_version(spark, path: str) -> "int | None":
     """Version recorded in a band store's ``_kernel_version`` sidecar
-    (underscore-prefixed: invisible to the data reads), or None for a
-    store that predates markers / does not exist yet."""
-    try:
-        row = spark.read.parquet(f"{path}/_kernel_version").first()
-    except Exception:
+    (underscore-prefixed: invisible to the data reads), or None when no
+    marker exists. A marker that exists but cannot be read raises: an
+    unreadable marker is damage, not a fresh store."""
+    marker = f"{path}/_kernel_version"
+    fs, p = _hadoop_path(spark, marker)
+    if not fs.exists(p):
         return None
+    row = spark.read.parquet(marker).first()
     return None if row is None else int(row["kernel_version"])
+
+
+def _store_has_data(spark, path: str) -> bool:
+    """True when ``path`` holds any entry besides hidden (``_``/``.``)
+    ones — band partitions or files from some earlier writer."""
+    fs, p = _hadoop_path(spark, path)
+    if not fs.exists(p):
+        return False
+    return any(
+        not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(p)
+    )
 
 
 def update_minhash_store(
@@ -627,9 +471,16 @@ def update_minhash_store(
     with new batches (a mixed store would silently miss cross-era
     duplicates: same text, different bh). Every write stamps
     ``_kernel_version``; appending to a store from another era raises
-    instead of corrupting it."""
+    instead of corrupting it, and so does appending to band data with
+    no marker (its era is unknown). An unreadable marker raises too."""
     spark = docs.sparkSession
     stored = _store_kernel_version(spark, path)
+    if stored is None and _store_has_data(spark, path):
+        raise ValueError(
+            f"minhash store {path} holds band data but no _kernel_version "
+            "marker, so its signature-kernel era is unknown; rebuild the "
+            "store (cross-era band hashes never match)"
+        )
     if stored is not None and stored != BAND_KERNEL_VERSION:
         raise ValueError(
             f"minhash store {path} was written by signature-kernel "
@@ -804,25 +655,6 @@ def minhash_incremental_pairs(
     )
 
 
-def _window_hash_rows(df, n_tokens, text_col, id_cols):
-    """One xxhash64 per n_tokens-word window, one row per position —
-    the shared rolling-window construction under duplicate_span_counts
-    and decontaminate (was duplicated; round-3 review dedup). Native
-    transform/sequence/slice: no Python, no text past the scan."""
-    w = F.split(F.col(text_col), " ")
-    return df.filter(F.size(w) >= n_tokens).select(
-        *id_cols,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size(w) - n_tokens),
-                lambda i: F.xxhash64(
-                    F.concat_ws(" ", F.slice(w, i + 1, n_tokens))
-                ),
-            )
-        ).alias("wh"),
-    )
-
-
 def duplicate_span_counts(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -836,10 +668,11 @@ def duplicate_span_counts(
 
     The suffix-array formulation of train-data span dedup doesn't
     distribute; the equivalent corpus-scale shape is a rolling window
-    hash: every document emits one xxhash64 per token window (native
-    transform/sequence/slice — no Python), localCheckpointed ONCE (it
-    feeds both the occurrence count and the join back; Spark never CSEs
-    multi-consumer subtrees — no text leaves the scan stage either way).
+    hash: every document emits one hash per split(" ") token window
+    (``_gram_rows_arrow``, the decontaminate kernel), localCheckpointed
+    ONCE (it feeds both the occurrence count and the join back; Spark
+    never CSEs multi-consumer subtrees — no text leaves the scan stage
+    either way).
 
     Round-4 skew fix: the occurrence count is a plain groupBy(wh) —
     hash aggregation DOES map-side partial combine, so a boilerplate
@@ -854,8 +687,8 @@ def duplicate_span_counts(
     Output: (id, n_windows, n_dup_windows) per document that has >= 1
     window; callers drop or trim documents above a duplication ratio.
     """
-    occ = _window_hash_rows(
-        docs, n_tokens, text_col, [F.col(id_col)]
+    occ = _gram_rows_arrow(
+        docs, n_tokens, id_col, text_col, distinct_per_doc=False
     ).localCheckpoint()
     dup = (
         occ.groupBy("wh")
@@ -1091,20 +924,19 @@ def connected_components(
 # --- SimHash -----------------------------------------------------------------
 
 
-def _simhash_batch(texts: pd.Series) -> pd.Series:
-    """Batch SimHash (round-3 fix of the per-row bit loop): per bit b,
-    one vector ``(g >> b) & 1`` pass + one ``reduceat`` per-document sum;
-    bit b is set where ones strictly exceed half the gram count
-    (equivalent to the old +/-1 accumulator's ``acc > 0``). 63 data bits
-    (bit 63 always 0, exactly like the old ``& (1<<63)-1`` mask)."""
-    t = texts.reset_index(drop=True)
-    rows = len(t)
-    gram_row, gram_hash = _gram_hash_arrays(t)
-    val = np.zeros(rows, dtype=np.int64)
+def _simhash_arrow(texts) -> np.ndarray:
+    """int64 SimHash per row of an Arrow string column over the
+    near-dup grams (``_near_dup_grams``, repeats counted): per bit b,
+    one vector ``(g >> b) & 1`` pass + one ``reduceat`` per-document
+    sum; bit b is set where ones strictly exceed half the gram count.
+    63 data bits (bit 63 always 0); null, empty and whitespace-only
+    text hash to 0."""
+    gram_row, gram_hash = _near_dup_grams(texts)
+    val = np.zeros(len(texts), dtype=np.int64)
     if len(gram_row):
-        with_grams = np.unique(gram_row)
-        starts = np.searchsorted(gram_row, with_grams)
-        n_grams = np.diff(np.append(starts, len(gram_row)))
+        with_grams, starts, n_grams = np.unique(
+            gram_row, return_index=True, return_counts=True
+        )
         acc = np.zeros(len(with_grams), dtype=np.int64)
         for b in range(63):
             ones = np.add.reduceat(
@@ -1113,20 +945,30 @@ def _simhash_batch(texts: pd.Series) -> pd.Series:
             )
             acc |= ((2 * ones > n_grams).astype(np.int64)) << b
         val[with_grams] = acc
-    # null/empty both hash to 0, matching the old scalar kernel
-    return pd.Series(val)
+    return val
 
 
-@pandas_udf(LongType())
-def simhash_udf(text: pd.Series) -> pd.Series:
-    return _simhash_batch(text)
+def _simhash_batches(batches):
+    """mapInArrow kernel: (id, text) batches -> (id, simhash)."""
+    import pyarrow as pa
+
+    for batch in batches:
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(0), pa.array(_simhash_arrow(batch.column(1)))],
+            names=[batch.schema.names[0], "simhash"],
+        )
 
 
 def simhash_buckets(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", band_bits: int = 16
 ) -> DataFrame:
-    """(id, simhash, band, bucket) — banded Hamming-neighbor index."""
-    sig = docs.select(F.col(id_col), simhash_udf(F.col(text_col)).alias("simhash"))
+    """(id, simhash, band, bucket) — banded Hamming-neighbor index. The
+    signature is one mapInArrow stage over the Arrow string buffers."""
+    src = docs.select(id_col, text_col)
+    schema = StructType(
+        [src.schema[0], StructField("simhash", LongType(), False)]
+    )
+    sig = src.mapInArrow(_simhash_batches, schema)
     bands = []
     for b in range(64 // band_bits):
         bands.append(
@@ -1305,16 +1147,13 @@ def _gram_rows_arrow(
     distinct_per_doc: bool,
 ) -> DataFrame:
     """(id, wh) — one row per k-token window (optionally per-doc
-    distinct), hashed in one zero-copy Arrow pass. Matches
-    ``_window_hash_rows`` row-for-row up to the hash values themselves:
-    split(" ") tokenization (empty tokens included), docs with fewer
-    than ``n_tokens`` tokens emit nothing (a null text reads as one
-    empty token and is covered by that rule for n_tokens > 1)."""
-    from pyspark.sql.types import StructField, StructType
-
-    from ..functions import tokens as T
-
-    src = df.select(id_col, text_col)
+    distinct), hashed in one zero-copy Arrow pass. Matches the native
+    transform(sequence, slice) window plan row-for-row up to the hash
+    values themselves: split(" ") tokenization (empty tokens included),
+    docs with fewer than ``n_tokens`` tokens emit nothing. Null texts
+    are dropped before the kernel: ``split(NULL)`` has no tokens, while
+    the buffer reader would see one empty token (a window at k=1)."""
+    src = df.select(id_col, text_col).dropna(subset=[text_col])
     schema = StructType(
         [src.schema[0], StructField("wh", LongType(), False)]
     )
@@ -1331,12 +1170,8 @@ def _gram_rows_arrow(
             if not len(gdoc):
                 continue
             if distinct_per_doc:
-                order = np.lexsort((gh, gdoc))
-                gdoc, gh = gdoc[order], gh[order]
-                keep = np.empty(len(gh), dtype=bool)
-                keep[0] = True
-                keep[1:] = (gh[1:] != gh[:-1]) | (gdoc[1:] != gdoc[:-1])
-                gdoc, gh = gdoc[keep], gh[keep]
+                order, runs = T.distinct_runs(gdoc, gh)
+                gdoc, gh = gdoc[order[runs]], gh[order[runs]]
             yield pa.RecordBatch.from_arrays(
                 [ids.take(pa.array(gdoc)), pa.array(gh.view(np.int64))],
                 names=[id_col, "wh"],

@@ -510,28 +510,16 @@ def _repetition_per_doc_arrow(
             tok_doc, starts, lens, n_tok = T.space_token_arrays(offs, data)
             wh = T.hash_tokens(data, starts, lens)
             n_docs = len(offs) - 1
-            ndw = np.zeros(n_docs, dtype=np.int64)
-            if len(wh):
-                order = np.lexsort((wh, tok_doc))
-                wd, ws = tok_doc[order], wh[order]
-                neww = np.empty(len(ws), dtype=bool)
-                neww[0] = True
-                neww[1:] = (ws[1:] != ws[:-1]) | (wd[1:] != wd[:-1])
-                ndw = np.bincount(wd[neww], minlength=n_docs)
+            order, runs = T.distinct_runs(tok_doc, wh)
+            ndw = np.bincount(tok_doc[order[runs]], minlength=n_docs)
             gdoc, gh = T.gram_hashes(wh, tok_doc, 2)
             nb = np.bincount(gdoc, minlength=n_docs)
             top = np.zeros(n_docs, dtype=np.int64)
-            ndb = np.zeros(n_docs, dtype=np.int64)
-            if len(gh):
-                o2 = np.lexsort((gh, gdoc))
-                bd, bs = gdoc[o2], gh[o2]
-                newb = np.empty(len(bs), dtype=bool)
-                newb[0] = True
-                newb[1:] = (bs[1:] != bs[:-1]) | (bd[1:] != bd[:-1])
-                rstart = np.flatnonzero(newb)
-                rlen = np.diff(np.append(rstart, len(bs)))
-                rdoc = bd[rstart]
-                ndb = np.bincount(rdoc, minlength=n_docs)
+            order, runs = T.distinct_runs(gdoc, gh)
+            rdoc = gdoc[order[runs]]
+            ndb = np.bincount(rdoc, minlength=n_docs)
+            if len(runs):
+                rlen = np.diff(np.append(runs, len(gh)))
                 pres, fidx = np.unique(rdoc, return_index=True)
                 top[pres] = np.maximum.reduceat(rlen, fidx)
             nulls = texts.is_null().to_numpy(zero_copy_only=False)

@@ -28,14 +28,18 @@ def _empty_batch(text_type=pa.string()) -> pa.RecordBatch:
 
 
 class _Capture:
-    """Stands in for a DataFrame: ``select`` keeps (id, text) and
-    ``mapInArrow`` records the kernel instead of planning it."""
+    """Stands in for a DataFrame: ``select`` and ``dropna`` keep
+    (id, text) and ``mapInArrow`` records the kernel instead of planning
+    it."""
 
     schema = StructType(
         [StructField("id", LongType()), StructField("text", StringType())]
     )
 
     def select(self, *cols):
+        return self
+
+    def dropna(self, subset):
         return self
 
     def mapInArrow(self, fn, schema):  # noqa: N802 - DataFrame API name
@@ -46,12 +50,10 @@ class _Capture:
 @pytest.mark.parametrize("typ", [pa.string(), pa.large_string()])
 def test_string_buffers_empty_without_offsets(typ):
     from harvester_fgp_spark.functions.tokens import string_buffers
-    from harvester_fgp_spark.operators.dedup import _string_buffers
 
-    for read in (string_buffers, _string_buffers):
-        offs, data = read(_no_offsets(typ))
-        assert offs.tolist() == [0]
-        assert len(data) == 0
+    offs, data = string_buffers(_no_offsets(typ))
+    assert offs.tolist() == [0]
+    assert len(data) == 0
 
 
 @pytest.mark.parametrize("distinct", [True, False])
@@ -60,6 +62,37 @@ def test_gram_rows_kernel_zero_row_batch(distinct):
 
     kernel = _gram_rows_arrow(_Capture(), 3, "id", "text", distinct).fn
     assert list(kernel(iter([_empty_batch()]))) == []
+
+
+def test_band_kernel_zero_row_batch():
+    from harvester_fgp_spark.operators.dedup import _band_rows_arrow
+
+    batch = _empty_batch()
+    assert _band_rows_arrow(batch.column(0), batch.column(1), "id") is None
+
+
+def test_simhash_kernel_zero_row_batch():
+    from harvester_fgp_spark.operators.dedup import _simhash_batches
+
+    out = list(_simhash_batches(iter([_empty_batch()])))
+    assert sum(b.num_rows for b in out) == 0
+
+
+@pytest.mark.parametrize("typ", [pa.string(), pa.large_string()])
+def test_verify_kernel_zero_row_batch(typ):
+    from harvester_fgp_spark.operators.dedup import _jaccard_batches
+
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([], pa.int64()),
+            pa.array([], pa.int64()),
+            _no_offsets(typ),
+            _no_offsets(typ),
+        ],
+        names=["id_a", "id_b", "text_a", "text_b"],
+    )
+    out = list(_jaccard_batches(iter([batch])))
+    assert sum(b.num_rows for b in out) == 0
 
 
 def test_repetition_kernel_zero_row_batch():

@@ -296,3 +296,80 @@ def test_minhash_incremental_store_identity(spark, tmp_path):
     # jaccard values match the one-shot run exactly
     merged = incr.merge(oneshot, on=["id_a", "id_b"], suffixes=("_i", "_o"))
     assert (merged.jaccard_i == merged.jaccard_o).all()
+
+
+def _store_docs(spark):
+    return spark.createDataFrame(
+        [(i, f"w{i} " * 20) for i in range(10)], "doc_id long, text string"
+    )
+
+
+def test_minhash_store_refuses_unmarked_band_data(spark, tmp_path):
+    """Band rows at the path but no ``_kernel_version`` marker: the era
+    of those rows is unknown, so appending (and stamping the store as
+    the current kernel's) would hide cross-era band data."""
+    import pytest
+
+    from harvester_fgp_spark.operators.dedup import (
+        band_table,
+        update_minhash_store,
+    )
+
+    docs = _store_docs(spark)
+    store = str(tmp_path / "bands")
+    band_table(docs).write.partitionBy("band").parquet(store)
+    with pytest.raises(ValueError, match="no _kernel_version marker"):
+        update_minhash_store(docs, store)
+    assert spark.read.parquet(store).count() == 10 * 8
+    assert not (tmp_path / "bands" / "_kernel_version").exists()
+
+
+def test_minhash_store_corrupt_marker_raises(spark, tmp_path):
+    """An unreadable marker is an error, never a fresh store."""
+    import pytest
+
+    from harvester_fgp_spark.operators.dedup import (
+        minhash_incremental_pairs,
+        update_minhash_store,
+    )
+
+    docs = _store_docs(spark)
+    store = str(tmp_path / "bands")
+    update_minhash_store(docs, store)
+    marker = tmp_path / "bands" / "_kernel_version"
+    for f in marker.iterdir():
+        f.unlink()
+    (marker / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception) as err:
+        update_minhash_store(docs, store)
+    assert "signature-kernel" not in str(err.value)
+    with pytest.raises(Exception) as err:
+        minhash_incremental_pairs(docs, store, docs)
+    assert "signature-kernel" not in str(err.value)
+    assert spark.read.parquet(store).count() == 10 * 8
+
+
+def test_null_text_emits_no_window_grams(spark):
+    """A null text has no tokens (native ``split(NULL)`` is NULL), so
+    at ``n_tokens=1`` it must not emit the empty-token gram that ``""``
+    or a double space produce."""
+    from harvester_fgp_spark.operators.dedup import (
+        decontaminate,
+        duplicate_span_counts,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, "a  b"), (3, ""), (4, "c d")],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame([("x  y",)], "text string")
+    flagged = {
+        r.doc_id: r.n_shared
+        for r in decontaminate(docs, bench, n_tokens=1).collect()
+    }
+    assert flagged == {2: 1, 3: 1}
+    spans = {
+        r.doc_id: (r.n_windows, r.n_dup_windows)
+        for r in duplicate_span_counts(docs, n_tokens=1).collect()
+    }
+    assert spans == {2: (3, 1), 3: (1, 1), 4: (2, 0)}

@@ -116,80 +116,6 @@ def test_compact_records_hilbert_clustering(spark, tmp_path):
         C.compact_records(spark, out, cluster="zorder-nope")
 
 
-def test_arrow_gram_kernel_structure_matches_pandas_kernel():
-    """The Arrow band kernel and the pandas gram kernel (still used by
-    jaccard_udf) must induce the SAME gram-equality structure — same
-    gram count per doc, equal grams exactly where the other kernel sees
-    equal grams — on real fixture text plus edge shapes. Hash VALUES
-    legitimately differ (documented round-7 drift); structure may not:
-    it is what makes LSH candidates and exact verify agree."""
-    import pyarrow as pa
-
-    from harvester_fgp_spark.operators.dedup import (
-        _gram_hash_arrays,
-        _string_buffers,
-        _word_gram_hashes_arrow,
-    )
-
-    docs = (
-        pq.read_table(
-            "/root/testdata/sf0.01/documents.parquet", columns=["text"]
-        )
-        .column("text")
-        .to_pylist()[:400]
-    )
-    docs += ["", "   ", "a", "a b", "a b c d e", "w " + "x" * 200 + " y z"]
-    import pandas as pd
-
-    r1, h1 = _gram_hash_arrays(pd.Series(docs))
-    col = pa.array(docs, type=pa.string())
-    offs, data = _string_buffers(col)
-    r2, h2 = _word_gram_hashes_arrow(offs, data)
-    assert (r1 == r2).all()
-
-    def canon(h):
-        _, inv = np.unique(h, return_inverse=True)
-        first: dict = {}
-        out = np.empty(len(inv), dtype=np.int64)
-        nxt = 0
-        for i, v in enumerate(inv.tolist()):
-            w = first.get(v)
-            if w is None:
-                first[v] = w = nxt
-                nxt += 1
-            out[i] = w
-        return out
-
-    assert (canon(h1) == canon(h2)).all()
-
-
-def test_arrow_gram_kernel_trailing_empty_docs():
-    """Round-7 review fix: an empty/null doc at the END of a batch has
-    offsets[i] == buffer end — the doc-start break must be masked, not
-    written one past the slice (was IndexError)."""
-    import pyarrow as pa
-
-    from harvester_fgp_spark.operators.dedup import (
-        _string_buffers,
-        _word_gram_hashes_arrow,
-    )
-
-    for docs in (
-        ["hello world foo bar baz", ""],
-        ["a b c d e", None],
-        ["", ""],
-        ["x y z", "", None, ""],
-    ):
-        col = pa.array(docs, type=pa.string())
-        offs, data = _string_buffers(col)
-        gr, gh = _word_gram_hashes_arrow(offs, data)
-        # only the non-empty docs contribute grams
-        nonempty = [i for i, d in enumerate(docs) if d]
-        assert set(gr.tolist()) <= set(nonempty)
-        if nonempty:
-            assert len(gr) > 0
-
-
 def test_hilbert_range_scan_coalesced_requires_residual(spark):
     """Round-7 review fix: a coalesced cover over-reads by construction,
     so max_ranges without lon/lat residual columns must refuse loudly

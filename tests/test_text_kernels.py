@@ -169,3 +169,203 @@ def test_flat_miner_equals_scalar():
         assert pidx[i] == len(got[int(rows[i])]) - 1  # ordinal contract
     for r, text in enumerate(texts):
         assert got.get(r, []) == T.mine_payloads(text), f"row {r}: {text!r}"
+
+
+# --- near-dup band tokenizer / word hasher ---------------------------------
+
+#: Edge documents for the band-kernel pin: empty, null, whitespace-only,
+#: tabs and newlines, mixed case, words longer than 8 and 64 bytes,
+#: non-ASCII letters and a non-breaking space.
+_BAND_EDGE_DOCS = [
+    "",
+    None,
+    "   ",
+    "\t\n \r",
+    "Hello\tWORLD  foo",
+    "hello world foo",
+    "a",
+    "a b",
+    "MiXeD CaSe\x0bWords\x0cHere ok",
+    "w " + "x" * 9 + " y " + "q" * 63 + " z",
+    "w " + "x" * 200 + " y z " + "x" * 201,
+    "Été café été CAFÉ",
+    "a b c d",
+    " lead and trail ",
+]
+
+#: sha256 of every ``_band_rows_arrow`` output column over the pin
+#: batches below, computed before the band kernel moved onto
+#: ``functions.tokens``; band hashes are store data, so any change here
+#: must bump ``dedup.BAND_KERNEL_VERSION``.
+_BAND_ROWS_SHA256 = (
+    "051ddeae25ed980a44e24cf3aff235b279555f608a4bfcb6fe61a9cf4a98d94f"
+)
+
+
+def _band_pin_batches(sf_dir):
+    """sf0.01 documents plus the edge docs, as plain, ``large_string``
+    and two sliced arrays (``sf_dir`` is the sf0.001 fixture dir)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = os.path.join(os.path.dirname(sf_dir), "sf0.01", "documents.parquet")
+    t = pq.read_table(path, columns=["text"])
+    texts = t.column("text").to_pylist() + _BAND_EDGE_DOCS
+    ids = pa.array(range(len(texts)), pa.int64())
+    col = pa.array(texts, pa.string())
+    yield ids, col
+    yield ids, col.cast(pa.large_string())
+    yield ids.slice(37, 400), col.slice(37, 400)
+    yield ids.slice(len(texts) - 9), col.slice(len(texts) - 9)
+
+
+def test_band_rows_pinned(sf_dir):
+    import hashlib
+
+    from harvester_fgp_spark.operators.dedup import (
+        BAND_KERNEL_VERSION,
+        _band_rows_arrow,
+    )
+
+    sha = hashlib.sha256()
+    for ids, texts in _band_pin_batches(sf_dir):
+        out = _band_rows_arrow(ids, texts, "doc_id")
+        for c in out.columns:
+            sha.update(c.to_numpy().tobytes())
+    assert sha.hexdigest() == _BAND_ROWS_SHA256
+    assert BAND_KERNEL_VERSION == 2
+
+
+def _near_dup_gram_sets(texts):
+    import pyarrow as pa
+
+    from harvester_fgp_spark.operators.dedup import _near_dup_grams
+
+    gdoc, gh = _near_dup_grams(pa.array(texts, pa.string()))
+    return [sorted(gh[gdoc == i].tolist()) for i in range(len(texts))]
+
+
+def test_near_dup_tokenization_rule():
+    """One rule for banding, verify and SimHash: ASCII-lowercase and
+    split on ASCII-whitespace runs; ``É`` is not case-folded and U+00A0
+    is not a separator."""
+    g = _near_dup_gram_sets(
+        [
+            "Hello\tWORLD  foo",
+            "hello world foo",
+            "Été x y",
+            "été x y",
+            "a b c d",
+            "a b c d",
+            "\r\nHELLO \x0bworld\x0c foo ",
+        ]
+    )
+    assert g[0] == g[1] == g[6] and len(g[0]) == 1
+    assert g[2] != g[3]
+    assert len(g[4]) == 1 and len(g[5]) == 2
+
+
+def test_arrow_gram_kernel_trailing_empty_docs():
+    """An empty/null doc at the END of a batch has offsets[i] == buffer
+    end — the doc-start break must be masked, not written one past the
+    slice (was IndexError)."""
+    import pyarrow as pa
+
+    from harvester_fgp_spark.operators.dedup import _near_dup_grams
+
+    for docs in (
+        ["hello world foo bar baz", ""],
+        ["a b c d e", None],
+        ["", ""],
+        ["x y z", "", None, ""],
+    ):
+        gr, gh = _near_dup_grams(pa.array(docs, type=pa.string()))
+        # only the non-empty docs contribute grams
+        nonempty = [i for i, d in enumerate(docs) if d]
+        assert set(gr.tolist()) <= set(nonempty)
+        if nonempty:
+            assert len(gr) > 0
+
+
+def _ref_grams(text):
+    """Python longhand of the near-dup rule: a set of word 3-gram
+    tuples; fewer words give one gram over all of them."""
+    import re
+
+    if text is None:
+        return set()
+    low = "".join(chr(ord(c) + 32) if "A" <= c <= "Z" else c for c in text)
+    w = [t for t in re.split(r"[\t\n\x0b\x0c\r ]+", low) if t]
+    if not w:
+        return set()
+    if len(w) < 3:
+        return {tuple(w)}
+    return {tuple(w[i : i + 3]) for i in range(len(w) - 2)}
+
+
+def test_verify_jaccard_equals_python_set_jaccard():
+    """The verify kernel's Jaccard equals Python set Jaccard over the
+    band-tokenizer grams, on random pairs with empty, null, whitespace-
+    only, mixed-case, long-word and non-ASCII texts, through plain,
+    ``large_string`` and sliced arrays."""
+    import numpy as np
+    import pyarrow as pa
+
+    from harvester_fgp_spark.operators.dedup import _pair_jaccard
+
+    rng = np.random.default_rng(2024)
+    vocab = ["a", "B", "cc", "Dd", "eee", "x" * 9, "Y" * 70, "Été", "q r"]
+    seps = [" ", "  ", "\t", "\n", " \r\n", "\x0b"]
+
+    def doc():
+        r = rng.random()
+        if r < 0.05:
+            return None
+        if r < 0.1:
+            return "" if r < 0.075 else " \t "
+        n = int(rng.integers(1, 9))
+        parts = []
+        for _ in range(n):
+            parts += [str(rng.choice(vocab)), str(rng.choice(seps))]
+        return "".join(parts[: -1 if rng.random() < 0.5 else None])
+
+    n = 3000
+    a = [doc() for _ in range(n)]
+    b = [x if rng.random() < 0.2 else doc() for x in a]
+    expected = []
+    for x, y in zip(a, b):
+        ga, gb = _ref_grams(x), _ref_grams(y)
+        u = len(ga | gb)
+        expected.append(1.0 if u == 0 else len(ga & gb) / u)
+    expected = np.array(expected)
+    pad = ["pad"] * 7
+    for typ in (pa.string(), pa.large_string()):
+        got = _pair_jaccard(pa.array(a, typ), pa.array(b, typ))
+        assert np.array_equal(got, expected)
+        got = _pair_jaccard(
+            pa.array(pad + a, typ).slice(7), pa.array(b + pad, typ).slice(0, n)
+        )
+        assert np.array_equal(got, expected)
+    assert (expected == 1.0).sum() > 100 and ((expected > 0) & (expected < 1)).any()
+
+
+def test_simhash_identical_and_empty():
+    """SimHash runs on the near-dup grams: texts equal under the rule
+    sign equal; gramless texts sign 0."""
+    import pyarrow as pa
+
+    from harvester_fgp_spark.operators.dedup import _simhash_arrow
+
+    sig = _simhash_arrow(
+        pa.array(
+            ["Hello\tWORLD  foo bar", "hello world foo bar", None, "", " \t",
+             "other words entirely here"],
+            pa.string(),
+        )
+    )
+    assert sig[0] == sig[1] != 0
+    assert sig[2] == sig[3] == sig[4] == 0
+    assert sig[5] != sig[0]
+    assert (sig >= 0).all()
