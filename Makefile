@@ -17,5 +17,6 @@ bench:
 scaling:
 	python bench/bench_scaling.py
 
+# same core sizing as `test`: an unset SPARK_GRAFT_CPUS means local[32]
 oracle:
-	python tools/check_oracle.py
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" python tools/check_oracle.py

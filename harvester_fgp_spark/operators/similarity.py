@@ -46,7 +46,10 @@ def _dot(a: str | Column, b: str | Column) -> Column:
 
 
 def cosine_sim_col(a: str | Column, b: str | Column) -> Column:
-    return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+    """Cosine of two array columns; null when either vector has zero norm
+    (a zero-norm vector has no direction — every operator here drops it
+    instead of raising DIVIDE_BY_ZERO under ANSI mode)."""
+    return F.try_divide(_dot(a, b), F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 #: cos_sim is rounded to 6 decimals before ranking, so a candidate can
@@ -92,7 +95,8 @@ def cosine_topk(
     ROUND/rank runs in Spark on the raw doubles, so every emitted
     (q_id, c_id, rank, cos_sim) row is identical to the round-7 plan's
     (verified row-exact at sf0.001/0.01/0.1/1.0; the superset-margin
-    argument above covers selection).
+    argument above covers selection). Null query ids and zero-norm
+    vectors have no cosine and drop out.
     """
     spark = queries.sparkSession
     if n_blocks is None:
@@ -100,7 +104,12 @@ def cosine_topk(
     q_id_t = queries.schema[q_id].dataType.simpleString()
     c_id_t = candidates.schema[c_id].dataType.simpleString()
     blocks = spark.range(n_blocks).select(F.col("id").cast("int").alias("_blk"))
-    qrep = queries.select(q_id, q_emb).crossJoin(F.broadcast(blocks))
+    # a null id is no query (the crossJoin plan's q_id != c_id was null)
+    qrep = (
+        queries.filter(F.col(q_id).isNotNull())
+        .select(q_id, q_emb)
+        .crossJoin(F.broadcast(blocks))
+    )
     cblk = candidates.select(c_id, c_emb).withColumn(
         "_blk", F.pmod(F.xxhash64(F.col(c_id)), F.lit(n_blocks)).cast("int")
     )
@@ -121,17 +130,19 @@ def cosine_topk(
             acc += Q[:, j : j + 1] * C[:, j]
             qn += Q[:, j] * Q[:, j]
             cn += C[:, j] * C[:, j]
-        cos = acc / (np.sqrt(qn)[:, None] * np.sqrt(cn)[None, :])
-        self_mask = qs[q_id].to_numpy()[:, None] == cands[c_id].to_numpy()[None, :]
-        # Spark sorts NaN FIRST under desc — treat NaN as +inf for the
-        # k-th-value selection and always keep NaN rows; the Spark-side
-        # window then orders them exactly as the old plan did
-        sel = np.where(self_mask, -np.inf, np.nan_to_num(cos, nan=np.inf))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = acc / (np.sqrt(qn)[:, None] * np.sqrt(cn)[None, :])
+        # a zero norm gives a non-finite cosine: such pairs drop out, as
+        # the native try_divide's null does (cosine_sim_col)
+        valid = np.isfinite(cos) & (
+            qs[q_id].to_numpy()[:, None] != cands[c_id].to_numpy()[None, :]
+        )
+        sel = np.where(valid, cos, -np.inf)
         if sel.shape[1] >= k:
             kth = np.sort(sel, axis=1)[:, -k]
         else:
             kth = np.full(sel.shape[0], -np.inf)
-        keep = ~self_mask & ((cos >= kth[:, None] - margin) | np.isnan(cos))
+        keep = valid & (sel >= kth[:, None] - margin)
         qi, ci = np.nonzero(keep)
         return pd.DataFrame(
             {
@@ -198,7 +209,11 @@ def exact_near_dup_pairs(
         F.col(emb_col).alias("_e"),
         F.sqrt(_dot(emb_col, emb_col)).alias("_n"),
     ).withColumn(
-        "_bkt", F.floor(_dot("_e", r_lit) / (F.col("_n") * F.lit(w))).cast("long")
+        # zero norm -> null bucket: the vector joins nothing
+        "_bkt",
+        F.floor(F.try_divide(_dot("_e", r_lit), F.col("_n") * F.lit(w))).cast(
+            "long"
+        ),
     )
     probe = base.select(
         F.col("_id").alias("ia"),
@@ -382,17 +397,26 @@ def _ivf_probe_rank(
         .filter(F.col("q_id") != F.col("c_id"))
         .select("q_id", "q_emb", "_qn", "c_id", "c_emb", "_cn")
     )
-    ranked = pairs.withColumn(
-        "cos_sim",
-        F.round(
-            _dot("q_emb", "c_emb") / (F.col("_qn") * F.col("_cn")),
-            6,
-        ),
-    )
-    wr = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
+    return _cosine_rank(pairs, k)
+
+
+def _cosine_rank(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k over (q_id, q_emb, _qn, c_id, c_emb, _cn) pairs —
+    the rerank tail every ANN path shares. A zero norm gives a null
+    cosine, which ranks last and is then dropped; the null filter sits
+    above the window so it is never pushed below the projection (which
+    would evaluate the dot product twice)."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
     return (
-        ranked.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
+        pairs.withColumn(
+            "cos_sim",
+            F.round(
+                F.try_divide(_dot("q_emb", "c_emb"), F.col("_qn") * F.col("_cn")),
+                6,
+            ),
+        )
+        .withColumn("rank", F.row_number().over(w))
+        .filter((F.col("rank") <= k) & F.col("cos_sim").isNotNull())
         .select("q_id", "c_id", "rank", "cos_sim")
     )
 
@@ -495,19 +519,7 @@ def ann_lsh_topk(
         .distinct()
     )
     # per-vector norms ride the bucket join (see ann_ivf_topk note)
-    ranked = pairs.withColumn(
-        "cos_sim",
-        F.round(
-            _dot("q_emb", "c_emb") / (F.col("_qn") * F.col("_cn")),
-            6,
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
-    return (
-        ranked.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", "cos_sim")
-    )
+    return _cosine_rank(pairs, k)
 
 
 #: Auto-sizing cap for the semantic_dedup quantizer: k-means fit cost is
@@ -984,16 +996,7 @@ def _pq_rerank(
         F.col(emb_col).alias("c_emb"),
         F.sqrt(_dot(emb_col, emb_col)).alias("_cn"),
     )
-    ranked = F.broadcast(short).join(cand, "c_id").withColumn(
-        "cos_sim",
-        F.round(_dot("q_emb", "c_emb") / (F.col("_qn") * F.col("_cn")), 6),
-    )
-    wr = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("c_id"))
-    return (
-        ranked.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "rank", "cos_sim")
-    )
+    return _cosine_rank(F.broadcast(short).join(cand, "c_id"), k)
 
 
 def ivf_pq_topk(

@@ -4,6 +4,7 @@ Runs every ``__spark_entry__.queries()`` entry at sf0.01 and compares it
 to ``oracle_sql()`` executed by DuckDB on the same parquet: row count,
 column names/dtypes, and exact sorted-value equality. Exit code != 0 on
 any mismatch. Usage: python tools/check_oracle.py [sf_dir] [query ...]
+(or `make oracle`, which sizes the session to this host's cores).
 """
 
 from __future__ import annotations
@@ -60,7 +61,8 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    spark = build_session(master="local[8]", shuffle_partitions=8)
+    # cores from SPARK_GRAFT_CPUS (`make oracle` sets it from nproc)
+    spark = build_session(shuffle_partitions=8)
     qs, oracles = E.queries(), E.oracle_sql()
     failures = []
     for name, fn in qs.items():
