@@ -1617,7 +1617,8 @@ def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN (k-means inverted lists + multi-probe); rows-only — the
-    quantizer is iterative/Spark-ML-internal, not SQL-expressible."""
+    quantizer is an iterative Lloyd fit over a hash-ordered sample, not
+    SQL-expressible."""
     from harvester_fgp_spark.operators.similarity import ann_ivf_topk
 
     emb = _read(spark, sf_dir, "embeddings")
@@ -1629,7 +1630,7 @@ def _planted_ann_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Planted-duplicate ANN fixture (round 5): every 10th corpus vector
     copied verbatim under vec_id + 10000. An identical vector lands in
     identical LSH buckets (data-independent hyperplanes) and the
-    identical IVF cell (same nearest centroids, whatever KMeans chose),
+    identical IVF cell (same nearest centroids, whatever the fit chose),
     so BOTH approximate indexes retrieve the original deterministically;
     cosine(copy, original) = 1.0 while the corpus's max natural pairwise
     cosine is ~0.51, so exact re-rank puts the original at rank 1 with
@@ -1660,7 +1661,7 @@ def _q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF recall@1 under the exact oracle gate (round 5) — same planted
     fixture and DuckDB brute-force twin as ann_lsh_recall; correctness
-    is invariant to the KMeans centroids because identical vectors
+    is invariant to the k-means centroids because identical vectors
     quantize identically."""
     from harvester_fgp_spark.operators.similarity import ann_ivf_topk
 
@@ -1679,7 +1680,7 @@ def _q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same planted fixture and brute-force DuckDB twin as ann_lsh/ivf:
     an identical vector's codes are the per-subspace argmins for the
     query itself, so its ADC distance is the GLOBAL minimum — it makes
-    every shortlist whatever KMeans chose, and exact rerank pins it at
+    every shortlist whatever the fit chose, and exact rerank pins it at
     rank 1 (cos 1.0 vs natural max ~0.51)."""
     from harvester_fgp_spark.operators.similarity import pq_topk, pq_train
 

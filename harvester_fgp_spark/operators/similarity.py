@@ -1,15 +1,29 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and dedup over embedding columns (array<float>).
 
-- ``cosine_topk``: brute-force exact top-k — the correctness baseline
-  (native zip_with/aggregate dot products; no UDF, no collect).
-- ``ann_lsh_topk``: the scale path — random-hyperplane LSH signatures
-  bucket the vectors, candidates come from an equi-join on (table, bucket)
-  so the cross product never materializes; exact cosine re-ranks within
-  buckets. Multi-table (independent hash tables) trades compute for
-  recall, the standard LSH knob.
+Exact paths:
 
-At 10^12 scale brute force is O(Q x N) — the LSH variant's equi-join is
-what survives; its recall is measured against brute force in
+- ``cosine_topk``: brute-force exact top-k, the correctness baseline
+  (cogrouped Arrow kernel, bit-identical to native dot products).
+- ``exact_near_dup_pairs``: every pair with cosine >= t, from a
+  guaranteed-complete projection-bucket equi-join.
+
+Approximate paths, each an equi-join plus an exact cosine rerank:
+
+- ``ann_lsh_topk``: random-hyperplane LSH buckets, data-oblivious.
+- ``ann_ivf_topk`` / ``build_ivf_index`` + ``query_ivf_index``: a coarse
+  quantizer's inverted lists, probed ``n_probe`` cells per query.
+- ``pq_train`` / ``pq_topk`` / ``ivf_pq_topk``: product-quantization
+  codes scanned by ADC lookups, optionally scoped by IVF cells.
+- ``semantic_dedup``: SemDeDup, cosine dedup scoped to quantizer cells.
+
+Every quantizer comes from ONE core: ``_fit_quantizers`` runs seeded
+Lloyd over a bounded, deterministic sample (the rows with the smallest
+``xxhash64(embedding)``) in one Arrow task, so a fit is one Spark job
+and only centroids reach the driver; ``_nearest`` assigns rows to
+centroids in bounded GEMM blocks; ``_assign`` is the one Arrow
+assignment stage. A quantizer only scopes a candidate join, so the
+planted-twin oracles (identical vectors share every cell and code) hold
+under any centroid set. Recall floors against brute force live in
 tests/test_similarity.py.
 """
 
@@ -168,6 +182,50 @@ def cosine_topk(
     )
 
 
+def _matrix(col) -> np.ndarray:
+    """(rows, dim) float64 matrix of a non-null list<float> Arrow column."""
+    return np.stack(col.to_numpy(zero_copy_only=False)).astype(np.float64)
+
+
+def _pair_cos(thr_keep: float, emit_cos: bool):
+    """The one batched pair-cosine kernel (mapInArrow) over (ia, ib, ea,
+    eb, na, nb) rows: emits (ia, ib[, _cos]) where cos >= ``thr_keep``.
+
+    The dot product runs as ~d vectorized numpy passes per batch instead
+    of an interpreted zip_with/aggregate lambda chain per pair, and it
+    accumulates left-to-right in float64 over the float32 inputs while
+    the norms ride in from the caller, so every cosine is bit-identical
+    to the native expression. A zero norm gives NaN, which never passes
+    the threshold."""
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            A = _matrix(batch.column(2))
+            B = _matrix(batch.column(3))
+            acc = np.zeros(A.shape[0])
+            for j in range(A.shape[1]):
+                acc += A[:, j] * B[:, j]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                cos = acc / (
+                    batch.column(4).to_numpy(zero_copy_only=False)
+                    * batch.column(5).to_numpy(zero_copy_only=False)
+                )
+            keep = cos >= thr_keep
+            mask = pa.array(keep)
+            cols = [batch.column(0).filter(mask), batch.column(1).filter(mask)]
+            if emit_cos:
+                cols.append(pa.array(cos[keep]))
+            yield pa.RecordBatch.from_arrays(
+                cols, names=["ia", "ib", "_cos"][: len(cols)]
+            )
+
+    return kernel
+
+
 _NEARDUP_RNG = np.random.default_rng(99)
 
 
@@ -229,17 +287,9 @@ def exact_near_dup_pairs(
         F.col("_n").alias("nb"),
         "_bkt",
     )
-    # Pair cosines in a BATCHED Arrow kernel over the joined candidate
-    # stream (round 8, guide §4.2 — the semantic_dedup pair-stage
-    # treatment): the native equi-join keeps its candidate structure (a
-    # qualifying pair matches at exactly one probe bucket and survives
-    # ia < ib exactly once), and the per-pair dot product runs as ~d
-    # vectorized numpy passes per 16k-row batch instead of an
-    # interpreted zip_with/aggregate lambda chain per pair. Per-batch —
-    # not per-bucket-group — granularity keeps the Python overhead
-    # scale-free. Dots accumulate left-to-right in float64 over the
-    # float32 inputs and norms ride in from the native side, so emitted
-    # values are bit-identical; the kernel pre-filters at
+    # Pair cosines in the batched Arrow kernel (_pair_cos) over the joined
+    # candidate stream: a qualifying pair matches at exactly one probe
+    # bucket and survives ia < ib exactly once. The kernel pre-filters at
     # threshold - 1e-6 (rounding to 6 decimals can raise a value by at
     # most 5e-7, so no pair that rounds past the threshold is ever
     # dropped) and the exact ROUND + >= threshold decision stays native.
@@ -251,37 +301,9 @@ def exact_near_dup_pairs(
         .select("ia", "ib", "ea", "eb", "na", "nb")
     )
 
-    def _pair_cos(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            A = np.stack(
-                batch.column(2).to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
-            B = np.stack(
-                batch.column(3).to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
-            acc = np.zeros(A.shape[0])
-            for j in range(A.shape[1]):
-                acc += A[:, j] * B[:, j]
-            cos = acc / (
-                batch.column(4).to_numpy(zero_copy_only=False)
-                * batch.column(5).to_numpy(zero_copy_only=False)
-            )
-            keep = pa.array(cos >= thr_keep)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0).filter(keep),
-                    batch.column(1).filter(keep),
-                    pa.array(cos[cos >= thr_keep]),
-                ],
-                names=["ia", "ib", "_cos"],
-            )
-
     pairs = joined.mapInArrow(
-        _pair_cos, schema=f"ia {id_t}, ib {id_t}, _cos double"
+        _pair_cos(thr_keep, emit_cos=True),
+        schema=f"ia {id_t}, ib {id_t}, _cos double",
     )
     return (
         pairs.withColumn("cos_sim", F.round(F.col("_cos"), 6))
@@ -309,6 +331,196 @@ def lsh_buckets_udf(dim: int):
     return _buckets
 
 
+# --- Vector quantizers: one sample fit, one assignment -----------------------
+
+#: Lloyd rounds per fit. A quantizer here only scopes a candidate join, so
+#: it needn't converge: the planted-twin oracles hold under any centroid
+#: set, and the recall floors in tests/test_similarity.py hold at 8.
+_LLOYD_ITERS = 8
+#: Fit sample: 256 rows per center, at most 2^20 rows (one task's worth).
+_SAMPLE_PER_CENTER = 256
+_SAMPLE_CAP = 1 << 20
+#: _nearest keeps each rows x centers distance block under ~2^24 doubles.
+_NEAREST_BLOCK = 1 << 24
+
+
+def _nearest(X: np.ndarray, centers: np.ndarray) -> np.ndarray:
+    """Index of each row's nearest center (squared L2). argmin ||x-c||^2
+    == argmin(||c||^2 - 2 x.c): one GEMM per row block, blocks sized so
+    the distance block stays ~2^24 doubles however many centers."""
+    c2 = (centers * centers).sum(axis=1)
+    step = max(1, _NEAREST_BLOCK // len(centers))
+    out = np.empty(len(X), dtype=np.int32)
+    for i in range(0, len(X), step):
+        out[i : i + step] = np.argmin(c2 - 2.0 * (X[i : i + step] @ centers.T), axis=1)
+    return out
+
+
+def _lloyd(X: np.ndarray, k: int, seed: int) -> np.ndarray:
+    """(k, dim) centers: seeded random init from the sample rows (with
+    replacement only when there are fewer rows than centers), then
+    _LLOYD_ITERS assign/mean rounds; a center left without rows stays."""
+    C = X[np.random.default_rng(seed).choice(len(X), k, replace=len(X) < k)]
+    for _ in range(_LLOYD_ITERS):
+        lab = _nearest(X, C)
+        n = np.bincount(lab, minlength=k)[:, None]
+        S = np.stack([np.bincount(lab, X[:, j], k) for j in range(X.shape[1])], 1)
+        C = np.where(n > 0, S / np.maximum(n, 1), C)
+    return C
+
+
+def _fit_quantizers(
+    vectors: DataFrame,
+    emb_col: str,
+    n_cells: "int | None" = None,
+    pq: "tuple[int, int] | None" = None,
+) -> "tuple[np.ndarray | None, list | None]":
+    """Fit every requested quantizer in ONE Spark job: a coarse
+    ``n_cells``-center quantizer and/or ``pq=(m, k)`` product-quantizer
+    sub-spaces. Returns (coarse centers (n_cells, d) or None, PQ codebook
+    [m][k][d/m] or None).
+
+    The sample is the min(256 x max k, 2^20) non-null rows with the
+    smallest xxhash64(embedding): deterministic for a given corpus, no
+    id column or row count needed, and bounded whatever the corpus size
+    (the bounded-sample approach of Random Sampling Over Spatial Range
+    Joins, ICDE 2025). One Arrow task runs seeded Lloyd over it; only the
+    centroids come back, so the corpus never reaches the driver."""
+    m, kc = pq or (0, 0)
+    cap = min(_SAMPLE_PER_CENTER * max(n_cells or 0, kc), _SAMPLE_CAP)
+    sample = (
+        vectors.filter(F.col(emb_col).isNotNull())
+        .select(F.col(emb_col).alias("_e"))
+        .orderBy(F.xxhash64("_e"))
+        .limit(cap)
+    )
+
+    def fit(batches):
+        import pyarrow as pa
+
+        rows = [_matrix(b.column(0)) for b in batches if b.num_rows]
+        if not rows:
+            return
+        X = np.concatenate(rows)
+        d = X.shape[1]
+        # all centers flattened into one list: coarse, then PQ sub-spaces
+        parts = [_lloyd(X, n_cells, 7).ravel()] if n_cells else []
+        if m and d % m == 0:
+            s = d // m
+            parts += [
+                _lloyd(X[:, i * s : (i + 1) * s], kc, 7 + i).ravel() for i in range(m)
+            ]
+        flat = np.concatenate(parts) if parts else np.empty(0)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array([d], pa.int64()),
+                pa.ListArray.from_arrays([0, len(flat)], pa.array(flat)),
+            ],
+            names=["d", "c"],
+        )
+
+    row = sample.mapInArrow(fit, "d bigint, c array<double>").first()
+    if row is None:
+        raise ValueError("quantizer fit: corpus has no non-null embeddings")
+    d, flat = row["d"], np.asarray(row["c"], dtype=np.float64)
+    if m and d % m:
+        raise ValueError(f"embedding dim {d} not divisible by m={m}")
+    nc = n_cells or 0
+    coarse = flat[: nc * d].reshape(nc, d) if nc else None
+    codebook = flat[nc * d :].reshape(m, kc, d // m).tolist() if m else None
+    return coarse, codebook
+
+
+def _assign_kernel(centers: np.ndarray, w_bkt: "float | None" = None):
+    """The one Arrow assignment kernel over (id, emb) rows: emits (c_id,
+    c_emb, _cn, cell[, _prj]). ``_cn`` is the L2 norm accumulated
+    left-to-right in float64, bit-identical to the native
+    sqrt(aggregate(...)), because it divides the rerank cosine; ``cell``
+    is the nearest center; with ``w_bkt`` set, ``_prj`` is the
+    semantic_dedup chord-bound projection bucket."""
+
+    def assign(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            M = _matrix(batch.column(1))
+            nn = np.zeros(M.shape[0])
+            for j in range(M.shape[1]):
+                nn += M[:, j] * M[:, j]
+            n = np.sqrt(nn)
+            cols = [
+                batch.column(0),
+                batch.column(1),
+                pa.array(n),
+                pa.array(_nearest(M, centers)),
+            ]
+            if w_bkt is not None:
+                # a deterministic sin-hash direction per index: adapts to
+                # any dimension with no driver-side state. Zero-norm
+                # vectors get bucket 0: their cosine is NaN and never
+                # qualifies, so this only avoids inf -> int64 UB
+                rv = np.sin((np.arange(M.shape[1]) + 1.0) * 12.9898)
+                proj = np.where(n > 0, (M @ rv) / np.where(n > 0, n, 1.0), 0.0)
+                scale = float(np.sqrt((rv * rv).sum())) * w_bkt
+                cols.append(pa.array(np.floor(proj / scale).astype(np.int64)))
+            yield pa.RecordBatch.from_arrays(
+                cols, names=["c_id", "c_emb", "_cn", "cell", "_prj"][: len(cols)]
+            )
+
+    return assign
+
+
+def _assign(
+    vectors: DataFrame,
+    centers: np.ndarray,
+    id_col: str,
+    emb_col: str,
+    w_bkt: "float | None" = None,
+) -> DataFrame:
+    """(c_id, c_emb, _cn, cell[, _prj]) for every non-null vector."""
+    sch = vectors.schema
+    schema = (
+        f"c_id {sch[id_col].dataType.simpleString()}, "
+        f"c_emb {sch[emb_col].dataType.simpleString()}, _cn double, cell int"
+        + (", _prj bigint" if w_bkt is not None else "")
+    )
+    return (
+        vectors.filter(F.col(emb_col).isNotNull())
+        .select(id_col, emb_col)
+        .mapInArrow(_assign_kernel(centers, w_bkt), schema)
+    )
+
+
+def _centroid_table(spark: SparkSession, centers: np.ndarray) -> DataFrame:
+    """(cell int, ctr array<double>): the tiny broadcast probe table."""
+    return spark.createDataFrame(
+        list(enumerate(centers.tolist())), "cell int, ctr array<double>"
+    )
+
+
+def _probe(qs: DataFrame, ctr: DataFrame, n_probe: int) -> DataFrame:
+    """Each query row (q_id, q_emb, ...) times its n_probe nearest cells:
+    native squared L2 over a broadcast cross join on the centroid table,
+    then a row_number window; adds ``cell``."""
+    d2 = F.aggregate(
+        F.zip_with(
+            F.col("q_emb"), F.col("ctr"), lambda x, y: (x.cast("double") - y) ** 2
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    w = Window.partitionBy("q_id").orderBy(F.asc("_d2"), F.asc("cell"))
+    return (
+        qs.crossJoin(F.broadcast(ctr))
+        .withColumn("_d2", d2)
+        .withColumn("_pr", F.row_number().over(w))
+        .filter(F.col("_pr") <= n_probe)
+        .drop("ctr", "_d2", "_pr")
+    )
+
+
 def ann_ivf_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -320,40 +532,30 @@ def ann_ivf_topk(
 ) -> DataFrame:
     """IVF (inverted-file) ANN: coarse k-means quantizer + multi-probe.
 
-    The scale path alongside LSH: a distributed KMeans fit (Spark ML)
-    partitions the corpus into n_cells inverted lists; each query probes
-    its n_probe nearest centroids and reranks exactly within those lists.
-    Candidate generation is an equi-join on the int cell id — the cross
-    product never materializes, and the centroid table (n_cells rows) is
-    a broadcast literal, so query assignment is one narrow broadcast join.
+    The scale path alongside LSH: a sample-fit quantizer
+    (_fit_quantizers, one Spark job) partitions the corpus into n_cells
+    inverted lists; each query probes its n_probe nearest centroids and
+    reranks exactly within those lists. Candidate generation is an
+    equi-join on the int cell id — the cross product never materializes,
+    and the centroid table (n_cells rows) is a broadcast literal, so
+    query assignment is one narrow broadcast join. Null embeddings drop
+    out.
 
     Recall/compute knob: n_probe/n_cells (probing all cells = exact).
     Unlike LSH's data-oblivious hyperplanes, the quantizer adapts to the
     corpus distribution — on clustered real-world embeddings IVF recall
     dominates at equal candidate budgets.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = vectors.sparkSession
-    vec = vectors.withColumn("_v", array_to_vector(F.col(emb_col)))
-    model = KMeans(
-        k=n_cells, seed=7, featuresCol="_v", predictionCol="_cell"
-    ).fit(vec)
-    cand = (
-        model.transform(vec)
-        .select(
-            F.col(id_col).alias("c_id"),
-            F.col(emb_col).alias("c_emb"),
-            F.sqrt(_dot(emb_col, emb_col)).alias("_cn"),
-            F.col("_cell").alias("cell"),
-        )
+    centers, _ = _fit_quantizers(vectors, emb_col, n_cells=n_cells)
+    return _ivf_probe_rank(
+        _centroid_table(vectors.sparkSession, centers),
+        _assign(vectors, centers, id_col, emb_col),
+        queries,
+        k,
+        n_probe,
+        id_col,
+        emb_col,
     )
-    ctr = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, ctr array<double>",
-    )
-    return _ivf_probe_rank(ctr, cand, queries, k, n_probe, id_col, emb_col)
 
 
 def _ivf_probe_rank(
@@ -365,35 +567,19 @@ def _ivf_probe_rank(
     id_col: str,
     emb_col: str,
 ) -> DataFrame:
-    """Shared IVF tail: assign each query its n_probe nearest centroids
-    (broadcast cross join on the tiny centroid table), equi-join the
-    inverted lists on the int cell id, exact cosine rerank. Norms ride
-    the join sides — computed once per vector, never per pair (per-pair
-    recomputation tripled the hot-loop arithmetic; same IEEE ops,
-    identical values)."""
-    # squared L2 to each centroid, native; keep the n_probe nearest
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("q_emb"), F.col("ctr"), lambda x, y: (x.cast("double") - y) ** 2
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    w = Window.partitionBy("q_id").orderBy(F.asc("_d2"), F.asc("cell"))
-    qs = (
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(emb_col).alias("q_emb"),
-            F.sqrt(_dot(emb_col, emb_col)).alias("_qn"),
-        )
-        .crossJoin(F.broadcast(ctr))
-        .withColumn("_d2", d2)
-        .withColumn("_pr", F.row_number().over(w))
-        .filter(F.col("_pr") <= n_probe)
-        .select("q_id", "q_emb", "_qn", "cell")
+    """Shared IVF tail: probe each query's n_probe nearest cells
+    (_probe), equi-join the inverted lists on the int cell id, exact
+    cosine rerank. Norms ride the join sides — computed once per vector,
+    never per pair (per-pair recomputation tripled the hot-loop
+    arithmetic; same IEEE ops, identical values)."""
+    qs = queries.select(
+        F.col(id_col).alias("q_id"),
+        F.col(emb_col).alias("q_emb"),
+        F.sqrt(_dot(emb_col, emb_col)).alias("_qn"),
     )
     pairs = (
-        qs.join(cand, "cell")
+        _probe(qs, ctr, n_probe)
+        .join(cand, "cell")
         .filter(F.col("q_id") != F.col("c_id"))
         .select("q_id", "q_emb", "_qn", "c_id", "c_emb", "_cn")
     )
@@ -429,9 +615,11 @@ def build_ivf_index(
     emb_col: str = "embedding",
 ) -> None:
     """Build and PERSIST an IVF index — the build-once / query-many shape
-    real ANN serving needs at corpus scale (re-fitting k-means per query
-    batch, as ann_ivf_topk does for its self-contained oracle row, is a
-    non-starter at 10^12 vectors).
+    real ANN serving needs at corpus scale (re-fitting the quantizer per
+    query batch, as ann_ivf_topk does for its self-contained oracle row,
+    is a non-starter at 10^12 vectors). The quantizer is the same
+    deterministic sample fit as ann_ivf_topk's, so both give identical
+    results; null embeddings drop out.
 
     Layout: ``{path}/centroids`` (tiny parquet: cell, ctr) and
     ``{path}/lists`` Hive-partitioned BY CELL — a query batch probing
@@ -439,27 +627,11 @@ def build_ivf_index(
     (dynamic partition pruning at scale; the layout is the index).
     Norms are precomputed into the lists so queries never touch them.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = vectors.sparkSession
-    vec = vectors.withColumn("_v", array_to_vector(F.col(emb_col)))
-    model = KMeans(
-        k=n_cells, seed=7, featuresCol="_v", predictionCol="_cell"
-    ).fit(vec)
-    ctr = spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, ctr array<double>",
-    )
+    centers, _ = _fit_quantizers(vectors, emb_col, n_cells=n_cells)
+    ctr = _centroid_table(vectors.sparkSession, centers)
     ctr.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     (
-        model.transform(vec)
-        .select(
-            F.col(id_col).alias("c_id"),
-            F.col(emb_col).alias("c_emb"),
-            F.sqrt(_dot(emb_col, emb_col)).alias("_cn"),
-            F.col("_cell").alias("cell"),
-        )
+        _assign(vectors, centers, id_col, emb_col)
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(f"{path}/lists")
@@ -522,19 +694,20 @@ def ann_lsh_topk(
     return _cosine_rank(pairs, k)
 
 
-#: Auto-sizing cap for the semantic_dedup quantizer: k-means fit cost is
-#: O(n * k * d * iters), so k is bounded even when sqrt(n) keeps growing
-#: (at n = 10^9, sqrt(n) ~ 31623 <= the cap; past it, candidate pairs
-#: grow linearly in n again — the caller should shard first).
+#: Auto-sizing cap for the semantic_dedup quantizer: the sample fit costs
+#: O(256 k^2 d iters) in one task and assignment O(n k d), so k is bounded
+#: even when sqrt(n) keeps growing (at n = 10^9, sqrt(n) ~ 31623 <= the
+#: cap; past it, candidate pairs grow linearly in n again — the caller
+#: should shard first).
 MAX_AUTO_CELLS = 32_768
 
 
 def _auto_n_cells(n: int) -> int:
     """~sqrt(n) clusters, floored at 8 and cost-capped: with k = sqrt(n)
     the expected within-cell pair count is n^2/(2k) = n^1.5/2 — the
-    SemDeDup sweet spot where quantizer fit cost (n*k*d) and pair-join
+    SemDeDup sweet spot where assignment cost (n*k*d) and pair-join
     cost meet — instead of the old fixed k=8's n^2/16 foot-gun. Never
-    exceeds n itself (Spark KMeans requires k <= points)."""
+    exceeds n itself (extra cells would only stay empty)."""
     import math
 
     return max(
@@ -581,123 +754,24 @@ def semantic_dedup(
     Lower thresholds trade that invariance for more aggressive semantic
     pruning (pytest covers the planted-near-dup tier).
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     vectors = vectors.filter(F.col(emb_col).isNotNull())
-    n_vec = vectors.count()
     if n_cells is None:
-        n_cells = _auto_n_cells(n_vec)
-    # fit input pruned to the feature column alone (guide §2.3) AND
-    # coalesced to partitions sized for the VECTOR volume, not the text
-    # corpus's partitioning (round 8, guide §2.2): embeddings are
-    # ~d*4 bytes/row, so inheriting a corpus-sized partition count hands
-    # every one of the fit's ~maxIter+1 jobs hundreds of near-empty
-    # tasks — task-launch overhead, not distance math, dominated the
-    # fit (measured 2.4 s -> 0.8 s at 25k vectors / 65 -> 1 partitions).
-    # ~50k vectors/task keeps a 10M-vector fit at ~200 real tasks.
-    # floor of 4: a 1-partition fit single-threads the distance math
-    # (measured slower than 4-16 partitions at 25k vectors)
-    fit_parts = max(
-        4,
-        min(
-            int(vectors.sparkSession.sparkContext.defaultParallelism),
-            n_vec // 50_000 + 1,
-        ),
-    )
-    vec = vectors.select(
-        array_to_vector(F.col(emb_col)).alias("_v")
-    ).coalesce(fit_parts)
-    # the quantizer only scopes the pair join — it needn't converge, so
-    # iterations are bounded (r6 measured maxIter 20 -> 8; round 8 cut
-    # to 4 — each iteration is one scheduler-bound job, the dedup output
-    # is centroid-invariant at threshold ~1.0, and the planted-near-dup
-    # pytest tier stayed green) and init is plain random (round 8:
-    # k-means|| spends ~2 extra distributed passes buying an init
-    # quality a SCOPING quantizer cannot cash; re-verified row-exact
-    # after both switches)
-    model = KMeans(
-        k=n_cells,
-        seed=7,
-        maxIter=4,
-        initMode="random",
-        featuresCol="_v",
-        predictionCol="_cell",
-    ).fit(vec)
+        n_cells = _auto_n_cells(vectors.count())
+    centers, _ = _fit_quantizers(vectors, emb_col, n_cells=n_cells)
     # chord-bound projection prefilter (the exact_near_dup_pairs trick,
-    # computed ONCE per vector): for unit vectors cos(a,b) >= t implies
-    # |r.a/(|r||a|) - r.b/(|r||b|)| <= sqrt(2-2t), so within-cell pairs
-    # whose integer projection buckets differ by > 1 cannot qualify and
-    # never reach the cosine — at t ~ 1.0 this kills almost every
-    # non-duplicate pair before the full-width dot product. The
-    # direction is the same deterministic sin-hash per index, so it
-    # adapts to ANY embedding dimension with no driver-side state.
-    #
-    # Round 8 (guide §4.2): cell argmin + norm + projection bucket were
-    # a Spark-ML transform (VectorUDT predict UDF) plus three
-    # interpreted HOF chains per row; all four now come from ONE Arrow
-    # kernel against the broadcast centroid matrix (the model's cluster
-    # centers — ~KBs). Cell and bucket only SCOPE the join (output at
-    # threshold ~1.0 is quantizer-invariant, re-verified row-exact), but
-    # _n divides the cosine, so the kernel accumulates it left-to-right
-    # in float64 — bit-identical to the native sqrt(aggregate(...)).
+    # computed ONCE per vector in the assignment kernel): for unit vectors
+    # cos(a,b) >= t implies |r.a/(|r||a|) - r.b/(|r||b|)| <= sqrt(2-2t),
+    # so within-cell pairs whose integer projection buckets differ by > 1
+    # cannot qualify and never reach the cosine — at t ~ 1.0 this kills
+    # almost every non-duplicate pair before the full-width dot product.
+    # Cell and bucket only SCOPE the join; _cn divides the cosine.
     w_bkt = float(np.sqrt(max(2.0 - 2.0 * (threshold - 1e-5), 1e-12)))
-    centers = np.stack(
-        [np.asarray(c, dtype=np.float64) for c in model.clusterCenters()]
-    )
-    emb_t = vectors.schema[emb_col].dataType.simpleString()
-    id_t2 = vectors.schema[id_col].dataType.simpleString()
-    assign_schema = (
-        f"{id_col} {id_t2}, {emb_col} {emb_t}, _n double, "
-        "cell int, _prj bigint"
-    )
-
-    def _assign(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            ids, embs = batch.column(0), batch.column(1)
-            if len(ids) == 0:
-                continue
-            M = np.stack(
-                embs.to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
-            d = M.shape[1]
-            nn = np.zeros(M.shape[0])
-            for j in range(d):
-                nn += M[:, j] * M[:, j]
-            n = np.sqrt(nn)
-            # argmin ||x-c||^2 == argmin(||c||^2 - 2 x.c); GEMM once
-            c2 = (centers * centers).sum(axis=1)
-            cell = np.argmin(c2[None, :] - 2.0 * (M @ centers.T), axis=1)
-            rv = np.sin((np.arange(d) + 1.0) * 12.9898)
-            # zero-norm vectors get bucket 0: their cosine is NaN and
-            # never qualifies, so placement is output-irrelevant — this
-            # only avoids inf -> int64 UB
-            proj = np.where(n > 0, (M @ rv) / np.where(n > 0, n, 1.0), 0.0)
-            prj = np.floor(
-                proj / (float(np.sqrt((rv * rv).sum())) * w_bkt)
-            ).astype(np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    embs,
-                    pa.array(n),
-                    pa.array(cell.astype(np.int32)),
-                    pa.array(prj),
-                ],
-                names=[id_col, emb_col, "_n", "cell", "_prj"],
-            )
-
-    assigned = vectors.select(id_col, emb_col).mapInArrow(
-        _assign, assign_schema
-    )
     # assigned feeds BOTH join sides (and the optional stats job): Spark
     # never CSEs multi-consumer subtrees, so without this checkpoint the
-    # quantizer transform (n*k*d argmin — real money at auto-k ~ sqrt(n))
-    # would run once PER consumer (round 7; single non-iterative
-    # localCheckpoint, no _stats_reset hazard)
-    assigned = assigned.localCheckpoint()
+    # assignment (n*k*d argmin — real money at auto-k ~ sqrt(n)) would run
+    # once PER consumer (single non-iterative localCheckpoint, no
+    # _stats_reset hazard)
+    assigned = _assign(vectors, centers, id_col, emb_col, w_bkt).localCheckpoint()
     if stats is not None:
         sizes = assigned.groupBy("cell").agg(F.count("*").alias("_k"))
         row = sizes.agg(
@@ -714,18 +788,18 @@ def semantic_dedup(
             all_pairs=n_total * (n_total - 1) // 2,
         )
     lo = assigned.select(
-        F.col("cell"),
-        F.col(id_col).alias("_lo_id"),
-        F.col(emb_col).alias("_lo_emb"),
-        F.col("_n").alias("_lo_n"),
+        "cell",
+        F.col("c_id").alias("ia"),
+        F.col("c_emb").alias("ea"),
+        F.col("_cn").alias("na"),
         F.col("_prj").alias("_lo_p"),
     )
     hi = assigned.select(
-        F.col("cell"),
-        F.col(id_col).alias("_hi_id"),
-        F.col(emb_col).alias("_hi_emb"),
-        F.col("_n").alias("_hi_n"),
-        F.col("_prj").alias("_hi_p"),
+        "cell",
+        F.col("c_id").alias("ib"),
+        F.col("c_emb").alias("eb"),
+        F.col("_cn").alias("nb"),
+        F.col("_prj").alias("_bkt"),
     )
     # chord prefilter AS A JOIN KEY (round 7, was filter-after-join): the
     # lo side explodes to its 3 admissible buckets {p-1, p, p+1} and the
@@ -742,61 +816,21 @@ def semantic_dedup(
             )
         ),
     )
-    # The per-pair cosine moves from an interpreted zip_with/aggregate
-    # chain (~3.9M admissible pairs x ~130 expression evals at sf1.0
-    # under n_cells=8; 7.3 s measured) into a BATCHED Arrow kernel over
-    # the joined pair stream (round 8, guide §4.2): the native equi-join
-    # above still forms exactly the chord-admissible pairs, and the
-    # kernel runs ~d vectorized numpy passes per 16k-row batch. Batch
-    # granularity matters: a first cut cogrouped per (cell, bucket) and
-    # paid the per-GROUP Arrow overhead x (n_cells x ~2/w buckets)
-    # groups — ~fine at sf1.0 but +2 s at sf0.1 and growing with
-    # auto-k at scale; per-batch overhead is scale-free. Norms ride in
-    # from the assignment kernel and the dot accumulates left-to-right
-    # in float64 — the same IEEE sequence as the native expressions — so
-    # the (cos >= threshold) decision is BIT-IDENTICAL (verified
-    # row-exact at sf0.01/0.1/1.0).
+    # Pair cosines in the batched Arrow kernel (_pair_cos): the exact
+    # (cos >= threshold) decision on bit-identical cosines (verified
+    # row-exact at sf0.01/0.1/1.0). Per-batch, not per-(cell, bucket)
+    # group: a cogroup paid Arrow overhead per group (+2 s at sf0.1).
     id_t = vectors.schema[id_col].dataType.simpleString()
-    thr = float(threshold)
     joined = (
-        lo3.join(hi.withColumnRenamed("_hi_p", "_bkt"), ["cell", "_bkt"])
-        .filter(F.col("_lo_id") < F.col("_hi_id"))
-        .select("_lo_id", "_hi_id", "_lo_emb", "_hi_emb", "_lo_n", "_hi_n")
+        lo3.join(hi, ["cell", "_bkt"])
+        .filter(F.col("ia") < F.col("ib"))
+        .select("ia", "ib", "ea", "eb", "na", "nb")
     )
-
-    def _pair_cos(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            A = np.stack(
-                batch.column(2).to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
-            B = np.stack(
-                batch.column(3).to_numpy(zero_copy_only=False)
-            ).astype(np.float64)
-            acc = np.zeros(A.shape[0])
-            for j in range(A.shape[1]):
-                acc += A[:, j] * B[:, j]
-            cos = acc / (
-                batch.column(4).to_numpy(zero_copy_only=False)
-                * batch.column(5).to_numpy(zero_copy_only=False)
-            )
-            keep = cos >= thr
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column(0).filter(pa.array(keep)),
-                    batch.column(1).filter(pa.array(keep)),
-                ],
-                names=["_lo_id", "_hi_id"],
-            )
-
     pairs = joined.mapInArrow(
-        _pair_cos, schema=f"_lo_id {id_t}, _hi_id {id_t}"
+        _pair_cos(float(threshold), emit_cos=False), schema=f"ia {id_t}, ib {id_t}"
     )
-    return pairs.groupBy(F.col("_hi_id").alias("dropped_id")).agg(
-        F.min("_lo_id").alias("kept_id")
+    return pairs.groupBy(F.col("ib").alias("dropped_id")).agg(
+        F.min("ia").alias("kept_id")
     )
 
 
@@ -808,71 +842,38 @@ def pq_train(
     m: int = 8,
     k: int = 16,
     emb_col: str = "embedding",
-    seed: int = 7,
-    max_iter: int = 8,
 ) -> list:
     """Train an m-subspace product-quantization codebook (Jegou et al.
     2011): split the d-dim embedding into m contiguous d/m-dim
-    subvectors and fit an independent k-center quantizer per subspace
-    with Spark ML KMeans (distributed — the corpus never leaves the
-    executors; only the m*k*(d/m) centroid floats come back, ~100 KB).
+    subvectors and fit an independent k-center quantizer per subspace,
+    all m from one bounded sample in one Spark job (_fit_quantizers —
+    only the m*k*(d/m) centroid floats reach the driver).
 
     Returns ``codebook`` as nested Python lists [m][k][d/m] — small
     enough to ride a UDF closure or plan literal. Storage story at 100 TB:
     float32 64-dim vectors (256 B) compress to m=8 one-byte codes
     (32x); ADC search then costs m table lookups per pair instead of d
-    multiplies. The quantizers needn't converge (semantic_dedup lesson:
-    bounded maxIter changes cost, not dedup/recall truth on planted
-    twins — identical vectors encode identically under ANY codebook).
+    multiplies. The quantizers needn't converge: bounded Lloyd rounds
+    change cost, not recall truth on planted twins — identical vectors
+    encode identically under ANY codebook.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    vec = vectors.filter(F.col(emb_col).isNotNull())
-    row = vec.select(F.size(emb_col).alias("d")).first()
-    if row is None:
-        raise ValueError("pq_train: corpus has no non-null embeddings")
-    d = row["d"]
-    if d % m != 0:
-        raise ValueError(f"embedding dim {d} not divisible by m={m}")
-    dsub = d // m
-    codebook = []
-    for mi in range(m):
-        sub = vec.select(
-            array_to_vector(
-                F.slice(F.col(emb_col), mi * dsub + 1, dsub)
-            ).alias("_v")
-        )
-        model = KMeans(
-            k=k,
-            seed=seed + mi,
-            maxIter=max_iter,
-            featuresCol="_v",
-            predictionCol="_c",
-        ).fit(sub)
-        codebook.append(
-            [[float(x) for x in c] for c in model.clusterCenters()]
-        )
-    return codebook
+    return _fit_quantizers(vectors, emb_col, pq=(m, k))[1]
 
 
 def pq_encode_udf(codebook: list):
-    """Arrow-batched encoder: per subspace, argmin distance to the k
-    centroids via one GEMM per (batch, subspace) — ||x-c||^2 argmin ==
-    (-2xC^T + ||c||^2) argmin, the ||x||^2 term is constant per row."""
+    """Arrow-batched encoder: per subspace, the nearest of the k
+    centroids (_nearest, one GEMM per batch and subspace)."""
     from pyspark.sql.types import IntegerType
 
     cb = np.asarray(codebook, dtype=np.float64)  # (m, k, dsub)
     m, _, dsub = cb.shape
-    c2 = (cb**2).sum(axis=2)  # (m, k)
 
     @pandas_udf(ArrayType(IntegerType()))
     def _encode(emb: pd.Series) -> pd.Series:
         X = np.array(emb.tolist(), dtype=np.float64)
         codes = np.empty((len(X), m), dtype=np.int32)
         for mi in range(m):
-            sub = X[:, mi * dsub : (mi + 1) * dsub]
-            codes[:, mi] = (-2.0 * (sub @ cb[mi].T) + c2[mi]).argmin(1)
+            codes[:, mi] = _nearest(X[:, mi * dsub : (mi + 1) * dsub], cb[mi])
         return pd.Series(list(codes))
 
     return _encode
@@ -917,8 +918,8 @@ def pq_topk(
     Planted-twin determinism (the ann_ivf_recall argument, one step
     further): an identical vector's codes are the per-subspace argmins
     for the query itself, so its ADC distance is the GLOBAL minimum any
-    candidate can achieve — it makes every shortlist >= 1 regardless of
-    what KMeans chose, and the exact rerank puts it at rank 1."""
+    candidate can achieve — it makes every shortlist >= 1 whatever the
+    codebook, and the exact rerank puts it at rank 1."""
     # the ADC table/sum and exact-rerank tail are the SHARED helpers
     # below (_adc_expr/_pq_rerank) — one construction for both pq_topk
     # and ivf_pq_topk so the twins cannot drift (round-7 review fix:
@@ -1025,57 +1026,27 @@ def ivf_pq_topk(
     determinism argument then carries verbatim — an identical vector
     lands in the identical cell AND its codes are the per-subspace
     argmins for the query, so it survives both the probe and the ADC
-    shortlist under ANY quantizer, and exact rerank pins rank 1."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = vectors.sparkSession
-    if codebook is None:
-        codebook = pq_train(vectors, m=m, k=kc, emb_col=emb_col)
-    vec = vectors.filter(F.col(emb_col).isNotNull()).withColumn(
-        "_v", array_to_vector(F.col(emb_col))
+    shortlist under ANY quantizer, and exact rerank pins rank 1. Without
+    a ``codebook``, the coarse and PQ quantizers come from one sample fit."""
+    centers, fitted = _fit_quantizers(
+        vectors, emb_col, n_cells=n_cells, pq=None if codebook else (m, kc)
     )
-    # bounded maxIter like every other scoping quantizer here (ADVICE
-    # r7: the default 20 iterations doubles fit cost with no recall
-    # benefit — convergence is irrelevant to the planted-twin argument)
-    coarse = KMeans(
-        k=n_cells, seed=7, maxIter=8, featuresCol="_v", predictionCol="_cell"
-    ).fit(vec)
+    codebook = codebook or fitted
     enc = pq_encode_udf(codebook)
-    codes = coarse.transform(vec).select(
-        F.col(id_col).alias("c_id"),
-        F.col("_cell").alias("cell"),
-        enc(F.col(emb_col)).alias("codes"),
-    )
-    ctr = spark.createDataFrame(
-        [
-            (i, [float(x) for x in c])
-            for i, c in enumerate(coarse.clusterCenters())
-        ],
-        "cell int, ctr array<double>",
+    codes = _assign(vectors, centers, id_col, emb_col).select(
+        "c_id", "cell", enc(F.col("c_emb")).alias("codes")
     )
     table, adc = _adc_expr(codebook)
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("q_emb"), F.col("ctr"), lambda x, y: (x.cast("double") - y) ** 2
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    wp = Window.partitionBy("q_id").orderBy(F.asc("_d2"), F.asc("cell"))
-    qs = (
+    qs = _probe(
         queries.filter(F.col(emb_col).isNotNull())
         .select(
             F.col(id_col).alias("q_id"),
             F.col(emb_col).alias("q_emb"),
             F.sqrt(_dot(emb_col, emb_col)).alias("_qn"),
         )
-        .withColumn("_t", table)
-        .crossJoin(F.broadcast(ctr))
-        .withColumn("_d2", d2)
-        .withColumn("_pr", F.row_number().over(wp))
-        .filter(F.col("_pr") <= n_probe)
-        .select("q_id", "q_emb", "_qn", "_t", "cell")
+        .withColumn("_t", table),
+        _centroid_table(vectors.sparkSession, centers),
+        n_probe,
     )
     ws = Window.partitionBy("q_id").orderBy(F.asc("_adc"), F.asc("c_id"))
     short = (

@@ -23,3 +23,23 @@ def plan_string(df) -> str:
     """Executed-plan toString — shared by every plan-shape assertion
     (was duplicated in three test modules)."""
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def count_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, counted under a fresh job group
+    through the status tracker (AQE's per-stage jobs included)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

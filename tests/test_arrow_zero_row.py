@@ -137,3 +137,43 @@ def test_zero_row_then_rows_keeps_row_count():
     out = list(kernel(iter([_empty_batch(), real])))
     ids = np.concatenate([b.column(0).to_numpy() for b in out])
     assert ids.tolist() == [7, 7]
+
+
+def _empty_vectors(*names) -> list:
+    return [pa.array([], pa.list_(pa.float32())) for _ in names]
+
+
+@pytest.mark.parametrize("emit_cos", [True, False])
+def test_pair_cos_kernel_zero_row_batch(emit_cos):
+    from harvester_fgp_spark.operators.similarity import _pair_cos
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.int64()), pa.array([], pa.int64())]
+        + _empty_vectors("ea", "eb")
+        + [pa.array([], pa.float64()), pa.array([], pa.float64())],
+        names=["ia", "ib", "ea", "eb", "na", "nb"],
+    )
+    out = list(_pair_cos(0.9, emit_cos)(iter([batch])))
+    assert sum(b.num_rows for b in out) == 0
+
+
+@pytest.mark.parametrize("w_bkt", [None, 0.01])
+def test_assign_kernel_zero_row_batch(w_bkt):
+    """An empty batch ahead of a real one emits nothing, and the real
+    batch still gets its nearest cells."""
+    from harvester_fgp_spark.operators.similarity import _assign_kernel
+
+    empty = pa.RecordBatch.from_arrays(
+        [pa.array([], pa.int64())] + _empty_vectors("emb"), names=["id", "emb"]
+    )
+    real = pa.RecordBatch.from_arrays(
+        [
+            pa.array([7, 8], pa.int64()),
+            pa.array([[0.0, 2.0], [3.0, 0.0]], pa.list_(pa.float32())),
+        ],
+        names=["id", "emb"],
+    )
+    kernel = _assign_kernel(np.array([[1.0, 0.0], [0.0, 1.0]]), w_bkt)
+    out = list(kernel(iter([empty, real])))
+    assert [b.num_rows for b in out] == [2]
+    assert out[0].column(3).to_pylist() == [1, 0]

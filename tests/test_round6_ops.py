@@ -1,10 +1,10 @@
 """Round-6 operator tests: geohash encode, tile->bbox decode, trajectory
-stats, shoelace area/centroid, Gopher repetition stats, SemDeDup.
+stats, shoelace area/centroid, Gopher repetition stats.
 
 Each operator also carries a DuckDB oracle row (__spark_entry__); these
 tests pin the pieces the oracle can't see — published interop vectors,
-plan shapes, sign/degenerate edges, and the non-invariant (lower
-threshold) SemDeDup tier.
+plan shapes and sign/degenerate edges. (The SemDeDup tests live in
+tests/test_similarity.py.)
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from harvester_fgp_spark.operators.geo import (
     tile_bbox_cols,
     track_stats,
 )
-from harvester_fgp_spark.operators.similarity import semantic_dedup
 from harvester_fgp_spark.operators.textops import repetition_stats
 
 from tests.conftest import plan_string
@@ -337,58 +336,6 @@ def test_repetition_stats_custom_sep_matches_arrow_path(spark):
     assert "Exchange" not in plan and "MapInArrow" not in plan
     native_rows = {r["doc_id"]: r.asDict() for r in native.collect()}
     assert arrow_rows == native_rows
-
-
-# --- semantic dedup ---------------------------------------------------------
-
-
-def _emb_frame(spark, n=80, dim=8, seed=3):
-    rng = np.random.default_rng(seed)
-    vecs = rng.normal(size=(n, dim)).astype("float32")
-    pdf = pd.DataFrame(
-        {
-            "vec_id": np.arange(n, dtype="int64"),
-            "embedding": [v.tolist() for v in vecs],
-        }
-    )
-    return spark.createDataFrame(pdf), vecs
-
-
-def test_semantic_dedup_planted_exact(spark):
-    base, _ = _emb_frame(spark)
-    planted = base.filter(F.col("vec_id") % 4 == 0).withColumn(
-        "vec_id", F.col("vec_id") + 10000
-    )
-    out = (
-        semantic_dedup(base.unionByName(planted), n_cells=4, threshold=0.9999)
-        .toPandas()
-        .sort_values("dropped_id", ignore_index=True)
-    )
-    exp_dropped = [i + 10000 for i in range(0, 80, 4)]
-    assert out.dropped_id.tolist() == exp_dropped
-    assert (out.kept_id == out.dropped_id - 10000).all()
-
-
-def test_semantic_dedup_near_dup_tier(spark):
-    # lower threshold: eps-perturbed copies must still be dropped
-    base, vecs = _emb_frame(spark)
-    rng = np.random.default_rng(9)
-    pert = vecs[:20] + rng.normal(scale=1e-3, size=(20, vecs.shape[1])).astype(
-        "float32"
-    )
-    near = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "vec_id": np.arange(20000, 20020, dtype="int64"),
-                "embedding": [v.tolist() for v in pert],
-            }
-        )
-    )
-    out = semantic_dedup(
-        base.unionByName(near), n_cells=4, threshold=0.99
-    ).toPandas()
-    dropped = set(out.dropped_id.tolist())
-    assert set(range(20000, 20020)) <= dropped
 
 
 # --- track stops (stay-point detection) -------------------------------------

@@ -1,4 +1,4 @@
-"""Round-6 scale evidence (VERDICT r5 next-#5/#7/#8).
+"""Round-6 scale evidence (VERDICT r5 next-#5/#7).
 
 5. Partitioned-vacuum breadth: with MANY (stage, run) leaves, vacuuming
    one run must leave every other leaf byte-identical — file list,
@@ -7,10 +7,8 @@
 7. The production CLI path exercises partition_lineage end-to-end in a
    real spark-submit-shaped subprocess: write -> resume -> verify ->
    partitioned vacuum, all through jobs/run_pipeline.py flags.
-8. IVF recall under drift: epsilon-perturbed planted near-duplicates
-   (NOT identical vectors, which are centroid-invariant by construction)
-   can fall across a quantization boundary from their twin; multi-probe
-   must recover what single-probe loses.
+
+(IVF recall under drift, item 8, lives in tests/test_similarity.py.)
 """
 
 from __future__ import annotations
@@ -19,8 +17,6 @@ import hashlib
 import os
 import subprocess
 import sys
-
-import numpy as np
 
 from harvester_fgp_spark.plans.pipeline import mine_records
 from harvester_fgp_spark.sinks import checkpoint as CP
@@ -91,58 +87,6 @@ def test_partitioned_vacuum_breadth_many_runs(spark, tmp_path):
     assert counts2[target] == base  # replay collapsed
     assert all(counts2[r] == base for r in run_ids)
     assert CP.verify_lineage(spark, out, cp).count() == 0
-
-
-def test_ivf_recall_under_drift(spark, sf_dir):
-    """Plant epsilon-perturbed near-duplicates (vec_id + 10000) and query
-    with them: the true nearest neighbor of every planted vector is its
-    origin, but the perturbation can push a query across a k-means cell
-    boundary away from that origin. Single-probe loses those pairs;
-    n_probe=4 must recover them (floor), and probing every cell is the
-    exact identity. The identical-vector planted tier (ann_ivf_recall,
-    driver-gated) is centroid-invariant by construction and cannot see
-    this failure mode.
-
-    Measured on this fixture (seed 123, eps=0.05): recall@1 = 0.924 at
-    n_probe=1 (38 of 500 drifted queries land across a boundary), 0.97
-    at 2, 0.998 at 4, 1.0 at full probe — multi-probe is what survives
-    quantization-boundary splits."""
-    from harvester_fgp_spark.operators.similarity import ann_ivf_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    pdf = emb.select("vec_id", "embedding").toPandas()
-    rng = np.random.default_rng(123)
-    mat = np.stack(pdf["embedding"].to_numpy()).astype("float64")
-    # the fixture vectors are UNIT-NORM 64-dim; a per-component drift of
-    # eps=0.05 has norm ~0.05*sqrt(64)=0.4, so cos(origin, query)
-    # ~ 1/sqrt(1+0.4^2) ~ 0.93 — far above the measured max cosine
-    # between distinct fixture vectors (0.479), so the origin stays the
-    # unambiguous exact top-1, while a 0.4 displacement on the unit
-    # sphere is large enough that some queries land in a different
-    # k-means Voronoi cell than their origin
-    drifted = mat + 0.05 * rng.standard_normal(mat.shape)
-    planted = [
-        (int(v) + 10_000, [float(x) for x in row])
-        for v, row in zip(pdf["vec_id"], drifted)
-    ]
-    queries = spark.createDataFrame(
-        planted, "vec_id long, embedding array<float>"
-    )
-    corpus = emb.select("vec_id", "embedding").unionByName(queries)
-
-    def recall_at(n_probe):
-        top1 = ann_ivf_topk(
-            corpus, queries, k=1, n_cells=16, n_probe=n_probe
-        ).collect()
-        hits = sum(1 for r in top1 if r.c_id == r.q_id - 10_000)
-        return hits / len(planted)
-
-    r1, r4, r_full = recall_at(1), recall_at(4), recall_at(16)
-    # multi-probe must not lose pairs single-probe found, and must clear
-    # a floor single-probe is NOT asserted to clear
-    assert r4 >= r1, (r1, r4)
-    assert r4 >= 0.95, f"n_probe=4 drift recall {r4:.3f} < 0.95 (r1={r1:.3f})"
-    assert r_full == 1.0, f"full probe must be exact, got {r_full:.3f}"
 
 
 def test_cli_partition_lineage_end_to_end(spark, tmp_path):

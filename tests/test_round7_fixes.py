@@ -131,155 +131,6 @@ def test_hilbert_range_scan_coalesced_requires_residual(spark):
         )
 
 
-def test_pq_train_empty_corpus_raises(spark):
-    from pyspark.sql.types import (
-        ArrayType,
-        FloatType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from harvester_fgp_spark.operators.similarity import pq_train
-
-    empty = spark.createDataFrame(
-        [],
-        StructType(
-            [
-                StructField("vec_id", LongType()),
-                StructField("embedding", ArrayType(FloatType())),
-            ]
-        ),
-    )
-    with pytest.raises(ValueError, match="no non-null embeddings"):
-        pq_train(empty)
-
-
-def test_pq_codes_shape_and_twin_identity(spark):
-    """PQ encoder invariants: m codes per vector, every code < k, and
-    identical vectors encode identically under ANY codebook (the
-    centroid-invariance the gate oracle leans on)."""
-    from pyspark.sql import functions as F
-
-    from harvester_fgp_spark.operators.similarity import pq_encode, pq_train
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    cb = pq_train(emb, m=8, k=16)
-    assert len(cb) == 8 and all(len(sub) == 16 for sub in cb)
-    both = emb.unionByName(
-        emb.withColumn("vec_id", F.col("vec_id") + 10000)
-    )
-    codes = pq_encode(both, cb).toPandas()
-    assert (codes.codes.str.len() == 8).all()
-    assert codes.codes.map(max).max() < 16
-    by_id = dict(zip(codes.c_id, codes.codes.map(tuple)))
-    for vid in list(by_id):
-        if vid < 10000:
-            assert by_id[vid] == by_id[vid + 10000]
-
-
-def test_pq_drift_recall(spark):
-    """Perturbed-query tier (the IVF drift test applied to PQ): eps-noised
-    copies must still retrieve their origin at rank 1 through the ADC
-    shortlist + exact rerank — codes may shift at quantization
-    boundaries, but the 32-deep shortlist + rerank absorbs it."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from harvester_fgp_spark.operators.similarity import pq_topk, pq_train
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    pdf = emb.orderBy("vec_id").limit(20).toPandas()
-    rng = np.random.default_rng(3)
-    noised = [
-        (int(r.vec_id) + 50000,
-         (np.array(r.embedding) + rng.normal(scale=1e-3, size=64))
-         .astype("float32").tolist())
-        for r in pdf.itertuples()
-    ]
-    queries = spark.createDataFrame(
-        pd.DataFrame(noised, columns=["vec_id", "embedding"])
-    )
-    cb = pq_train(emb, m=8, k=16)
-    top1 = (
-        pq_topk(emb, queries, cb, k=1)
-        .filter(F.col("rank") == 1)
-        .toPandas()
-    )
-    hits = (top1.c_id == top1.q_id - 50000).mean()
-    assert hits >= 0.95, hits
-
-
-def test_ivf_pq_drift_recall(spark):
-    """IVF-PQ under eps-drift: the noised query must survive BOTH the
-    coarse probe (n_probe=4 of 16 cells) and the ADC shortlist, then
-    rerank to its origin — the composition can only lose recall at the
-    probe, and 1e-3 noise doesn't move a vector across 4 probed cells."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from harvester_fgp_spark.operators.similarity import ivf_pq_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    pdf = emb.orderBy("vec_id").limit(20).toPandas()
-    rng = np.random.default_rng(5)
-    noised = [
-        (int(r.vec_id) + 50000,
-         (np.array(r.embedding) + rng.normal(scale=1e-3, size=64))
-         .astype("float32").tolist())
-        for r in pdf.itertuples()
-    ]
-    queries = spark.createDataFrame(
-        pd.DataFrame(noised, columns=["vec_id", "embedding"])
-    )
-    top1 = (
-        ivf_pq_topk(emb, queries, k=1)
-        .filter(F.col("rank") == 1)
-        .toPandas()
-    )
-    hits = (top1.c_id == top1.q_id - 50000).mean()
-    assert hits >= 0.95, hits
-
-
-def test_semantic_dedup_auto_k_planted(spark):
-    """Auto-sized quantizer (n_cells=None, VERDICT r6 next-#5): planted
-    exact twins are still dropped exactly — the dedup output at
-    threshold ~1.0 is k-invariant, so auto-k changes cost, not truth."""
-    from pyspark.sql import functions as F
-
-    from harvester_fgp_spark.operators.similarity import semantic_dedup
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    planted = emb.filter(F.col("vec_id") % 4 == 0).withColumn(
-        "vec_id", F.col("vec_id") + 10000
-    )
-    out = (
-        semantic_dedup(emb.unionByName(planted), threshold=0.9999)
-        .toPandas()
-        .sort_values("dropped_id", ignore_index=True)
-    )
-    exp = sorted(
-        r.vec_id + 10000
-        for r in emb.filter(F.col("vec_id") % 4 == 0).collect()
-    )
-    assert out.dropped_id.tolist() == exp
-    assert (out.kept_id == out.dropped_id - 10000).all()
-
-
-def test_semantic_dedup_auto_k_sizing():
-    from harvester_fgp_spark.operators.similarity import (
-        MAX_AUTO_CELLS,
-        _auto_n_cells,
-    )
-
-    assert _auto_n_cells(0) == 1  # degenerate corpus: k can't exceed n
-    assert _auto_n_cells(3) == 3
-    assert _auto_n_cells(100) == 10
-    assert _auto_n_cells(625) == 25
-    assert _auto_n_cells(1_000_000) == 1000
-    assert _auto_n_cells(10**12) == MAX_AUTO_CELLS
-
-
 def test_minhash_incremental_degenerate_bucket_guard(spark, tmp_path):
     """Thousands of near-empty docs (one shared word -> one shared gram
     -> identical signature -> ONE bucket per band) complete with bounded
