@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import read_testdata
+
 # lat in [-85, 85), lon in [-180, 180), centi-degree grid
 _LAT_MUL, _LAT_MOD = 7919, 17000
 _LON_MUL, _LON_MOD = 104729, 36000
@@ -25,7 +27,7 @@ _LON_MUL, _LON_MOD = 104729, 36000
 
 def points_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lat, lon) — pseudo-geo points, one per document."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_testdata(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
         (
@@ -146,7 +148,7 @@ DBSCAN_MIN_PTS = 4
 def dbscan_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(pid, x, y) integer points: one per document + 3 planted
     companions per 5th document (companion pid = doc_id + 100000*k)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_testdata(spark, sf_dir, "documents")
     d = F.col("doc_id")
     bx = (d * _LON_MUL) % _LON_MOD - F.lit(_LON_MOD // 2)
     by = (d * _LAT_MUL) % _LAT_MOD - F.lit(_LAT_MOD // 2)
@@ -183,7 +185,7 @@ def points_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_id, user_id, ts, lat, lon) — pseudo-geo trajectory points,
     one per event, keyed for per-user time ordering (G8 track stats).
     Same integer-arithmetic derivation as points_from_documents."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_testdata(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         "user_id",

@@ -47,6 +47,15 @@ def build_session(
         # At 2048 a repeat compiles 0: perfbench query_mix op_cpu_s
         # 53 -> 44 s on 4 cores, peak RSS unchanged.
         .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # PySpark's origin capture (`_with_origin`) wraps every
+        # `functions.*` call and Column operator in ~5 extra Py4J
+        # round-trips plus a Python stack walk, only to label a runtime
+        # error with its Python call site. Off, one build of the 18 bench
+        # leaves (sf0.1, 4 cores) makes ~9.5k Py4J calls instead of
+        # ~22.5k and spends ~0.6 instead of ~1.6 driver-Python CPU s.
+        # Errors keep their error class and operator name; only the
+        # Python file:line is lost.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -12,7 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schemas import TESTDATA_TABLES
+from ..schemas import PAGES_SCHEMA, TESTDATA_SCHEMAS
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -26,24 +26,30 @@ def read_pages(
 
     `source` is an Iceberg table name (contains no '/') or a Parquet path.
     Snapshot pinning (`VERSION AS OF`) only applies to the Iceberg branch.
+    The Parquet branch reads with `PAGES_SCHEMA`: no inference job, and
+    a `warc_ts` stored without a time zone reads as `timestamp` with the
+    same wall-clock values under the UTC session.
     """
     if "/" not in source:
         reader = spark.read
         if snapshot_id is not None:
             reader = reader.option("snapshot-id", str(snapshot_id))
         return reader.table(source)
-    return spark.read.parquet(source)
+    return spark.read.schema(PAGES_SCHEMA).parquet(source)
 
 
 def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """S3: one driver oracle table (TESTDATA.md)."""
-    if name not in TESTDATA_TABLES:
+    """S3: one driver oracle table (TESTDATA.md), read with its declared
+    schema (`schemas.TESTDATA_SCHEMAS`), so building a query runs no
+    schema-inference job."""
+    if name not in TESTDATA_SCHEMAS:
         raise ValueError(f"unknown testdata table {name!r}")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    reader = spark.read.schema(TESTDATA_SCHEMAS[name])
+    return reader.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def read_all_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: read_testdata(spark, sf_dir, t) for t in TESTDATA_TABLES}
+    return {t: read_testdata(spark, sf_dir, t) for t in TESTDATA_SCHEMAS}
 
 
 def write_bucketed(

@@ -89,6 +89,27 @@ def test_annotations_resolve_in_engine_modules():
     assert not failures, "\n".join(failures)
 
 
+# `spark.read[.option(..)...].parquet(f"{sf_dir}/...`: a fixture read
+# that bypasses `sources.tables.read_testdata` and its declared schema
+FIXTURE_READ = re.compile(
+    r"spark\.read(?:\.\w+\([^()]*\))*\.parquet\(\s*f[\"']\{sf_dir\}/"
+)
+
+
+def test_fixture_reads_use_declared_schemas():
+    """A fixture read without a schema runs a footer-merge Spark job per
+    call (~75-100 ms at sf0.1); the query surface and the derived geo
+    inputs read every fixture table through `read_testdata`."""
+    offenders = []
+    paths = [ENGINE.parent / "__spark_entry__.py", *(ENGINE / "plans").rglob("*.py")]
+    for path in paths:
+        src = path.read_text()
+        for m in FIXTURE_READ.finditer(src):
+            line = src[: m.start()].count("\n") + 1
+            offenders.append(f"{path.name}:{line}: {m.group(0)}")
+    assert not offenders, "\n".join(offenders)
+
+
 def test_entry_module_has_no_collect():
     src = (ENGINE.parent / "__spark_entry__.py").read_text()
     assert ".collect()" not in src

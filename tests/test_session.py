@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -32,3 +33,19 @@ def test_generated_classes_compile_once(spark):
     before = _compiled_classes(spark)
     surface()
     assert _compiled_classes(spark) - before == 0
+
+
+def test_origin_capture_is_off(spark):
+    """`build_session` turns off PySpark's per-call origin capture
+    (~5 Py4J round-trips per `functions.*` call or Column operator)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_runtime_error_keeps_its_class_without_origin_capture(spark):
+    """With origin capture off an ANSI runtime error still surfaces with
+    its error class; only the Python call-site fragment is gone."""
+    from pyspark.errors import ArithmeticException
+
+    with pytest.raises(ArithmeticException) as err:
+        spark.range(1).select(F.lit(1) / F.lit(0)).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
