@@ -2,15 +2,18 @@
 
 Re-expresses the capabilities of ``open-data/harvester-FGP`` (a per-record
 Python CSW metadata harvester: record pull -> bilingual normalization ->
-bounding-box extraction) as vectorized Arrow/pandas-UDF stages over
+bounding-box extraction) as native and Arrow-batched stages over
 Iceberg/Parquet tables of Common-Crawl-style web pages
 ``pages(url, warc_ts, html, text, lang)``.
 
 NOT a port: the reference has no planner, no columnar execution and no
 parallelism (SURVEY.md §3.1); every operator here is a Spark-first
 re-expression of the *semantics* (SURVEY.md §2) using the DataFrame API,
-Catalyst/AQE, and Arrow-batched pandas UDFs only where built-ins cannot
-express the kernel (text extraction, geo mining, cell encode, exact PIP).
+Catalyst/AQE, and Arrow-batched Python only where built-ins cannot
+express the kernel. The pages -> records path has exactly one Python
+stage, a fused ``mapInArrow`` (HTML extraction, geo mining, exact PIP);
+its twin (``engine="native"``) runs text-bearing rows with zero Python:
+a JVM-regex miner and a higher-order-function ray cast.
 
 Layout
 ------

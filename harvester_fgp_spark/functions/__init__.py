@@ -1,1 +1,1 @@
-"""Pure (Spark-free) kernels wrapped by the pandas-UDF operator layer."""
+"""Pure (Spark-free) kernels called by the Arrow-batched operator stages."""

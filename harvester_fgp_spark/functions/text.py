@@ -2,11 +2,12 @@
 
 ``extract_text`` is the single source of truth for the byte-identity
 invariant (BASELINE.json:15 "byte-identical extracted text per url"):
-the Spark pandas-UDF path (operators.extract) and the plain-Python pytest
-oracle both call THIS function, and tests assert byte equality per url
-(SURVEY §5.2-1). Re-expresses the reference's record normalization
-([REF? harvest_hnap.py] — XML XPath extraction) for HTML pages; keep it
-dependency-free (stdlib html parsing only) and strictly deterministic.
+the fused ``mapInArrow`` stage (plans.pipeline, html-only rows) and the
+plain-Python pytest oracle both call THIS function, and tests assert
+byte equality per url (SURVEY §5.2-1). Re-expresses the reference's
+record normalization ([REF? harvest_hnap.py] — XML XPath extraction) for
+HTML pages; keep it dependency-free (stdlib html parsing only) and
+strictly deterministic.
 """
 
 from __future__ import annotations
@@ -77,72 +78,22 @@ def extract_text(html: bytes | None) -> str | None:
 
 
 # --- E2: geo-payload mining ------------------------------------------------
+# Both patterns are ASCII-only (re.ASCII): \s, \d and case folding mean
+# what they mean in Java regex (operators.extract.payloads_native_col)
+# and in RE2, so an NBSP or em space is not a separator, and "weſt:"
+# (long s) is not "west:".
 # Decimal coordinate pair: "45.4215, -75.6972" (lat, lon).
 COORD_PAIR_RE = re.compile(
     r"(?<![\d.-])(-?(?:90(?:\.0+)?|[0-8]?\d(?:\.\d+)?))\s*,\s*"
-    r"(-?(?:180(?:\.0+)?|1[0-7]\d(?:\.\d+)?|\d?\d(?:\.\d+)?))(?![\d.])"
+    r"(-?(?:180(?:\.0+)?|1[0-7]\d(?:\.\d+)?|\d?\d(?:\.\d+)?))(?![\d.])",
+    re.ASCII,
 )
 # Bbox phrase: "west: -141.00 east: -52.00 south: 42.00 north: 70.00".
 BBOX_RE = re.compile(
     r"west:\s*(-?\d+(?:\.\d+)?)\s+east:\s*(-?\d+(?:\.\d+)?)\s+"
     r"south:\s*(-?\d+(?:\.\d+)?)\s+north:\s*(-?\d+(?:\.\d+)?)",
-    re.IGNORECASE,
+    re.IGNORECASE | re.ASCII,
 )
-# Cheap native pre-filter (P5): pushed down BEFORE the UDF miner so the
-# Arrow boundary only sees plausible rows. Keep in sync with the two
-# patterns above.
-COORD_PREFILTER_RE = r"(-?\d+\.\d+\s*,\s*-?\d+\.\d+)|(?i)west:\s*-?\d"
-
-
-def mine_payloads_batch(texts) -> list[list[dict]]:
-    """Batched E2 miner over a pandas Series — the pandas-UDF hot path.
-
-    Semantics identical to ``mine_payloads`` (property-tested in
-    tests/test_text_kernels.py::test_batch_miner_equals_scalar): bboxes
-    first in match order, then points in match order, same range checks.
-    extractall amortizes the per-row call/dict overhead; bbox spans are
-    masked (length-preserving) before point extraction, but only on the
-    minority of rows that contain a bbox — e.g. "north: 4, 5.5" must not
-    leak the bbox's trailing number into a point pair.
-    """
-    t = texts.reset_index(drop=True).fillna("")
-    out: list[list[dict]] = [[] for _ in range(len(t))]
-    bb = t.str.extractall(BBOX_RE)
-    bb_rows: set[int] = set()
-    if len(bb):
-        rows = bb.index.get_level_values(0).to_numpy()
-        bb_rows = set(rows.tolist())
-        w = bb[0].astype(float).to_numpy()
-        e = bb[1].astype(float).to_numpy()
-        s = bb[2].astype(float).to_numpy()
-        n = bb[3].astype(float).to_numpy()
-        # west > east is LEGAL (ISO 19115 bbox crossing the antimeridian,
-        # e.g. Fiji/Alaska pages) — only range violations are dropped
-        ok = (
-            (-180.0 <= w) & (w <= 180.0) & (-180.0 <= e) & (e <= 180.0)
-            & (s <= n) & (-90.0 <= s) & (n <= 90.0)
-        )
-        for r, wv, sv, ev, nv in zip(rows[ok], w[ok], s[ok], e[ok], n[ok]):
-            out[r].append(
-                {"kind": "bbox", "lat": None, "lon": None,
-                 "west": wv, "south": sv, "east": ev, "north": nv}
-            )
-    if bb_rows:
-        t = t.copy()
-        for r in bb_rows:
-            t.iat[r] = BBOX_RE.sub(lambda m: " " * len(m.group(0)), t.iat[r])
-    pts = t.str.extractall(COORD_PAIR_RE)
-    if len(pts):
-        rows = pts.index.get_level_values(0).to_numpy()
-        lat = pts[0].astype(float).to_numpy()
-        lon = pts[1].astype(float).to_numpy()
-        ok = (-90.0 <= lat) & (lat <= 90.0) & (-180.0 <= lon) & (lon <= 180.0)
-        for r, la, lo in zip(rows[ok], lat[ok], lon[ok]):
-            out[r].append(
-                {"kind": "point", "lat": la, "lon": lo,
-                 "west": None, "south": None, "east": None, "north": None}
-            )
-    return out
 
 
 def mine_payloads_flat(texts):
@@ -341,96 +292,6 @@ def quality_score(text: str | None) -> float:
     sw_ratio = sum(1 for w in words if w in sw) / len(words)
     sw_score = min(1.0, sw_ratio * 4.0)
     return round((len_score + wl_score + punct_score + sw_score) / 4.0, 6)
-
-
-def detect_lang_batch(texts):
-    """Vectorized twin of ``detect_lang`` over a pandas Series.
-
-    Same semantics, property-tested equal per row (test_textops_native);
-    stopword membership is ``np.isin`` over the flattened word array with
-    bincount re-aggregation; the argmax preserves the scalar kernel's tie
-    order (en, fr, es, de — first max wins).
-
-    MEASURED SLOWER than the scalar kernel (0.62s vs 0.083s / 5000
-    driver docs): findall dominates both paths and the object-array
-    explode + isin costs more than per-row set probing saves. Kept as
-    the property-tested reference; production uses the fused scalar
-    ``lang_quality`` (operators.textops.lang_quality_udf).
-    """
-    import numpy as np
-    import pandas as pd
-
-    t = texts.reset_index(drop=True).fillna("")
-    w500 = t.str.lower().str.findall(_WORD_RE).str[:500]
-    n = len(t)
-    nw = w500.str.len().to_numpy(dtype=np.int64)
-    flat = w500.explode()
-    mask = flat.notna().to_numpy()
-    vals = flat.to_numpy(dtype=object)[mask]
-    row_idx = flat.index.to_numpy(dtype=np.int64)[mask]
-    order = ("en", "fr", "es", "de")
-    hits = np.zeros((len(order), n), dtype=np.int64)
-    for i, lang in enumerate(order):
-        sw = np.array(sorted(_STOPWORDS[lang]), dtype=object)
-        member = np.isin(vals, sw)
-        hits[i] = np.bincount(row_idx[member], minlength=n)
-    best_idx = hits.argmax(axis=0)  # first max in dict order == scalar kernel
-    best_hits = hits.max(axis=0)
-    thresh = np.maximum(2, nw // 50)
-    langs = np.array(order, dtype=object)[best_idx]
-    out = np.where((nw == 0) | (best_hits < thresh), "und", langs)
-    return pd.Series(out, dtype=object)
-
-
-def quality_score_batch(texts):
-    """Vectorized twin of ``quality_score``: identical IEEE op order per
-    row (left-associative component sum, single divisions), so outputs are
-    bit-identical to the scalar kernel — only the regex scans and stopword
-    membership are hoisted to whole-batch operations. The final round(x, 6)
-    stays Python's correctly-rounded round (np.round's scale-rint-unscale
-    can differ at ulp boundaries); it is O(rows) trivial arithmetic, not a
-    per-row kernel.
-
-    MEASURED SLOWER than the scalar kernel (same story as
-    ``detect_lang_batch`` — see its docstring); production uses the fused
-    scalar ``lang_quality``."""
-    import numpy as np
-    import pandas as pd
-
-    t = texts.reset_index(drop=True).fillna("")
-    n = t.str.len().to_numpy(dtype=np.int64)
-    words = t.str.lower().str.findall(_WORD_RE)
-    nw = words.str.len().to_numpy(dtype=np.int64)
-    flat = words.explode()
-    mask = flat.notna().to_numpy()
-    flat_w = flat[flat.notna()]
-    row_idx = flat.index.to_numpy(dtype=np.int64)[mask]
-    wlens = flat_w.str.len().to_numpy(dtype=np.int64)
-    rows = len(t)
-    # integer char sums are exact in float64 far beyond any document size
-    sum_wlen = np.bincount(row_idx, weights=wlens, minlength=rows)
-    sw = np.array(sorted(_STOPWORDS["en"] | _STOPWORDS["fr"]), dtype=object)
-    member = np.isin(flat_w.to_numpy(dtype=object), sw)
-    sw_hits = np.bincount(row_idx[member], minlength=rows)
-    n_punct = t.str.count(_PUNCT_RE).to_numpy(dtype=np.int64)
-
-    nw_safe = np.where(nw == 0, 1, nw)
-    n_safe = np.where(n == 0, 1, n)
-    mean_wl = sum_wlen / nw_safe
-    punct_ratio = n_punct / n_safe
-    sw_ratio = sw_hits / nw_safe
-
-    len_score = np.minimum(1.0, n / 1000.0)
-    wl_score = np.where((mean_wl >= 3.0) & (mean_wl <= 10.0), 1.0, 0.5)
-    punct_score = np.where(
-        punct_ratio < 0.1, 1.0, np.maximum(0.0, 1.0 - punct_ratio)
-    )
-    sw_score = np.minimum(1.0, sw_ratio * 4.0)
-    q = (len_score + wl_score + punct_score + sw_score) / 4.0
-    out = [
-        0.0 if nw[i] == 0 else round(float(q[i]), 6) for i in range(rows)
-    ]
-    return pd.Series(out, dtype=np.float64)
 
 
 def lang_quality(text: str | None) -> tuple[str, float]:

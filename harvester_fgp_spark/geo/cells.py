@@ -252,25 +252,6 @@ def split_rings_dateline(rings: list) -> list:
     return [part for rx, ry in rings for part in split_ring_at_dateline(rx, ry)]
 
 
-def cover_bboxes_batch(
-    west: np.ndarray,
-    south: np.ndarray,
-    east: np.ndarray,
-    north: np.ndarray,
-    level: int = COVER_LEVEL,
-) -> list[np.ndarray]:
-    """Batched G2 for the pandas-UDF path: one cover array per input bbox."""
-    out: list[np.ndarray] = []
-    for w, s, e, n in zip(west, south, east, north):
-        if not (
-            np.isfinite(w) and np.isfinite(s) and np.isfinite(e) and np.isfinite(n)
-        ):
-            out.append(np.empty(0, dtype=np.int64))
-        else:
-            out.append(cover_bbox(float(w), float(s), float(e), float(n), level))
-    return out
-
-
 def morton_interleave_sql(x_expr: str, y_expr: str, level: int) -> str:
     """ANSI-SQL longhand for interleave_xy — the DuckDB oracle for G1.
 

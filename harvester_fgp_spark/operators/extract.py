@@ -2,112 +2,19 @@
 
 Re-expresses the reference harvester's per-record XML field extraction
 ([REF? harvest_hnap.py] — XPath + dict assembly, one record at a time) as
-Arrow-batched columnar stages. The kernels live in functions.text so the
-pytest oracle and the UDF path share one implementation (byte-identity
-invariant, BASELINE.json:15).
+native column expressions. The one Python stage of the pages -> records
+path is the fused ``mapInArrow`` in plans.pipeline; it and the pytest
+oracles call the kernels in functions.text (byte-identity invariant,
+BASELINE.json:15). The miner also has a pure-JVM form here
+(``payloads_native_col``), property-tested equal to the Python kernel.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import IntegerType, LongType, StringType
 
-from ..functions import text as _text
-from ..schemas import PAYLOADS_TYPE
-
-# --- E1: text extraction ----------------------------------------------------
-
-
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """html binary -> canonical text; Series.map over the Arrow batch.
-
-    The per-element work is the stdlib HTML parser (no vectorized parser
-    exists in-sandbox); batching still amortizes the JVM<->Python transfer,
-    which is the expensive part at scale.
-    """
-    # per-row-ok: stdlib HTMLParser is stateful per document; no
-    # vectorized HTML parser exists in-sandbox
-    return html.map(lambda b: _text.extract_text(bytes(b)) if b is not None else None)
-
-
-# --- E2: geo-payload miner ---------------------------------------------------
-
-
-@pandas_udf(PAYLOADS_TYPE)
-def mine_payloads_udf(text: pd.Series) -> pd.Series:
-    # per-row-ok: scalar map measured FASTER than the extractall batch
-    # kernel here (0.54s vs 0.60s / 20k rows; MultiIndex assembly cost) —
-    # mine_payloads_batch remains as the property-tested alternative.
-    return text.map(_text.mine_payloads)
-
-
-from pyspark.sql.types import StructField, StructType
-
-_EXTRACT_MINE_TYPE = StructType(
-    [
-        StructField("extracted_text", StringType(), True),
-        StructField("payloads", PAYLOADS_TYPE, True),
-    ]
-)
-
-
-@pandas_udf(_EXTRACT_MINE_TYPE)
-def extract_mine_udf(text: pd.Series, html: pd.Series) -> pd.DataFrame:
-    """Fused E1+E2: one Python stage instead of two.
-
-    Every chained ArrowEvalPython node costs a separate Python worker per
-    task (creation serialized JVM-side), so fusing consecutive Python
-    stages halves worker count and removes one Arrow round trip — this
-    measurably dominates pipeline scaling at high parallelism. Uses the
-    materialized text when present; extracts from html only when missing
-    (byte-identical path, same extract_text kernel).
-    """
-    et = [
-        t if t is not None else (_text.extract_text(bytes(h)) if h is not None else None)
-        for t, h in zip(text, html)
-    ]
-    return pd.DataFrame(
-        {"extracted_text": et, "payloads": [_text.mine_payloads(t) for t in et]}
-    )
-
-
-def with_extracted_payloads(df: DataFrame) -> DataFrame:
-    """P5 prefilter -> fused E1+E2 -> posexplode (the pipeline hot path).
-
-    The rlike prefilter applies to rows that already carry text; rows with
-    only html pass through to the extraction side of the fused kernel.
-    """
-    # substring contains() is ~10x cheaper than Java-regex rlike on the
-    # full corpus and is a strict SUPERSET of minable rows (a coord pair
-    # needs a comma; a bbox phrase contains "west:" — lower() because
-    # BBOX_RE is case-insensitive, so "WEST:" must pass too; the OR
-    # short-circuits, so lower() only runs on comma-free rows) — false
-    # positives just yield empty payload arrays that posexplode drops
-    prefilter = (
-        F.col("text").isNull()
-        | F.col("text").contains(",")
-        | F.lower(F.col("text")).contains("west:")
-    )
-    # null html JVM-side when text is present so the (large) html bytes
-    # never cross the Arrow boundary for already-extracted pages
-    html_in = F.when(F.col("text").isNull(), F.col("html"))
-    em = df.filter(prefilter).withColumn(
-        "_em", extract_mine_udf(F.col("text"), html_in)
-    )
-    return (
-        em.withColumn("extracted_text", F.col("_em.extracted_text"))
-        .select(
-            "*",
-            F.posexplode(F.col("_em.payloads")).alias("payload_idx", "payload"),
-        )
-        .select("*", "payload.*")
-        .drop("payload", "_em")
-    )
-
+from . import geo as G
 
 # Java-regex twins of the Python miner patterns (functions.text). Java
 # supports the same inline-(?i), single-char lookbehind, and lookahead,
@@ -125,8 +32,8 @@ COORD_RE_J = (
 )
 
 # NB: built lazily inside the function — a module-level F.lit(...) needs
-# an active SparkContext at import time (same worker-reimport gotcha as
-# DDL-string pandas_udf types).
+# an active SparkContext at import time, which a worker re-importing this
+# module does not have.
 def _dnull() -> Column:
     return F.lit(None).cast("double")
 
@@ -181,46 +88,57 @@ def payloads_native_col(text: Column) -> Column:
 
 
 def with_payloads(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """P5 prefilter -> E2 mine -> posexplode to one row per payload.
+    """P5 prefilter -> E2 mine (``payloads_native_col``) -> posexplode to
+    one row per payload, plus its representative point (``pt_lat``,
+    ``pt_lon``: the point itself, or the bbox center, wrap-aware across
+    the antimeridian). Zero Python: the whole stage stays in codegen.
 
-    The rlike prefilter is NATIVE and sits before the UDF so predicate
-    pushdown / column pruning still reach the scan (SURVEY §4: predicates
-    cannot push through ArrowEvalPython). posexplode (not explode) emits
-    the payload ordinal for free — the E7 record id needs it, and reading
-    it off the array position avoids a row_number window (= one whole
+    The prefilter is a strict SUPERSET of minable rows: a coord pair
+    needs a comma and a bbox phrase contains "west:" (lower() because
+    the bbox pattern is case-insensitive; the OR short-circuits, so
+    lower() only runs on comma-free rows). Substring contains() is ~10x
+    cheaper than a regex; false positives just yield empty payload
+    arrays that posexplode drops. posexplode (not explode) emits the
+    payload ordinal for free — the E7 record id needs it, and reading it
+    off the array position avoids a row_number window (= one whole
     shuffle) downstream.
     """
+    text = F.col(text_col)
+    kind = F.col("kind")
     return (
-        df.filter(
-            F.col(text_col).contains(",")
-            | F.lower(F.col(text_col)).contains("west:")
-        )
+        df.filter(text.contains(",") | F.lower(text).contains("west:"))
         .select(
             "*",
-            F.posexplode(mine_payloads_udf(F.col(text_col))).alias(
+            F.posexplode(payloads_native_col(text)).alias(
                 "payload_idx", "payload"
             ),
         )
         .select("*", "payload.*")
         .drop("payload")
+        .withColumn(
+            "pt_lat",
+            F.when(kind == "point", F.col("lat")).otherwise(
+                (F.col("south") + F.col("north")) / F.lit(2.0)
+            ),
+        )
+        .withColumn(
+            "pt_lon",
+            F.when(kind == "point", F.col("lon")).otherwise(
+                G.bbox_center_lon_col(F.col("west"), F.col("east"))
+            ),
+        )
     )
 
 
 # --- E3: bilingual normalization ---------------------------------------------
 
 
-@pandas_udf(StringType())
-def nfc_udf(s: pd.Series) -> pd.Series:
-    """Unicode NFC via the vectorized pandas string path."""
-    return s.str.normalize("NFC")
-
-
 def with_bilingual(df: DataFrame, col: str, out_prefix: str) -> DataFrame:
     """Pair en/fr field values into *_en / *_fr columns keyed off lang.
 
     Replaces the HNAP PT_FreeText pairing ([REF? harvest_hnap.py]):
-    fully native when/coalesce — the NFC pass is the only UDF and is
-    applied once upstream by the pipeline.
+    fully native when/coalesce. Values arrive NFC-normalized: E1
+    (``functions.text.extract_text``) normalizes once, upstream.
     """
     is_fr = F.col("lang") == F.lit("fr")
     return df.withColumn(

@@ -4,16 +4,16 @@ Division of labor, chosen for scale:
 - NATIVE Spark expressions (whole-stage codegen, no Python): cell encode
   (G1 — Morton interleave via the magic-number spread, pure shift/mask
   ops), tile assign (G7 point path), cell parent (G3), haversine (G6).
-- Arrow-batched pandas UDFs wrapping the numpy kernels: bbox cover (G2,
-  variable fan-out), exact PIP (G4 — broadcast PolygonIndex, deserialized
-  once per worker, not once per batch). A numpy G1 twin exists for
-  kernel-level tests and as the oracle for the native expression.
-
-The PIP join is two-phase (SURVEY §2.5 J1 + §2.4 G4): a coarse broadcast
-equi-join on COVER_LEVEL cell prefixes prunes the candidate space JVM-side,
-then the exact ray cast runs only on candidates. At 10^12 pages the coarse
-join is what keeps the Python boundary traffic proportional to candidate
-pairs, not to all pages.
+- Exact PIP (G4) has two forms. ``build_polygon_index``
+  makes the broadcast ``PolygonIndex`` that the pipeline's fused
+  ``mapInArrow`` stage probes (R-tree candidates, vectorized ray cast);
+  ``pip_join_native`` is the zero-Python form — a coarse broadcast
+  equi-join on COVER_LEVEL cells prunes candidates JVM-side, then a
+  higher-order ray cast decides membership. The numpy G1 kernel
+  (geo.cells.encode) is the test oracle for the native cell encode.
+- Python only where the kernel has no native form: polygon
+  rasterization (``polygon_tiles``, mapInPandas) and ring
+  simplification (``simplify_rings``, one pandas UDF).
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType
 from pyspark.sql.window import Window
 
 from ..geo import cells as _cells
@@ -76,51 +76,6 @@ def cell_encode_col(
     x = F.greatest(zero, F.least(nmax, x)).cast("long")
     y = F.greatest(zero, F.least(nmax, y)).cast("long")
     return _spread_bits_col(x).bitwiseOR(F.shiftleft(_spread_bits_col(y), 1))
-
-
-def cell_encode_udf(level: int = _cells.DEFAULT_LEVEL):
-    @pandas_udf(LongType())
-    def _encode(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        out = _cells.encode(
-            lon.to_numpy(dtype=np.float64, na_value=np.nan),
-            lat.to_numpy(dtype=np.float64, na_value=np.nan),
-            level,
-        )
-        res = pd.Series(out)
-        res[lon.isna() | lat.isna()] = None
-        return res
-
-    return _encode
-
-
-def with_cell(
-    df: DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    level: int = _cells.DEFAULT_LEVEL,
-    out: str = "cell_id",
-) -> DataFrame:
-    return df.withColumn(out, cell_encode_col(F.col(lon_col), F.col(lat_col), level))
-
-
-# --- G2: bbox -> cover ----------------------------------------------------------
-
-
-def cover_udf(level: int = _cells.COVER_LEVEL):
-    @pandas_udf(ArrayType(LongType()))
-    def _cover(
-        west: pd.Series, south: pd.Series, east: pd.Series, north: pd.Series
-    ) -> pd.Series:
-        covers = _cells.cover_bboxes_batch(
-            west.to_numpy(dtype=np.float64, na_value=np.nan),
-            south.to_numpy(dtype=np.float64, na_value=np.nan),
-            east.to_numpy(dtype=np.float64, na_value=np.nan),
-            north.to_numpy(dtype=np.float64, na_value=np.nan),
-            level,
-        )
-        return pd.Series([c.tolist() for c in covers])
-
-    return _cover
 
 
 # --- G3: cell parent (NATIVE — stays in codegen) --------------------------------
@@ -233,52 +188,6 @@ def build_polygon_index(polygons_pdf: pd.DataFrame) -> _pip.PolygonIndex:
     return _pip.PolygonIndex(polygons_pdf["polygon_id"].tolist(), rings)
 
 
-def pip_join(
-    spark: SparkSession,
-    points: DataFrame,
-    polygons_pdf: pd.DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    how: str = "inner",
-) -> DataFrame:
-    """G4: annotate each point row with its matching polygon_id.
-
-    Exact PIP via mapInPandas over the broadcast PolygonIndex (R-tree
-    candidate gen + vectorized ray cast, all numpy). `how='inner'` keeps
-    matches only; `how='left'` keeps unmatched points with null polygon_id.
-    One input row can yield multiple output rows (overlapping polygons) —
-    hence mapInPandas, not a scalar UDF.
-    """
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    idx = build_polygon_index(polygons_pdf)
-    b = spark.sparkContext.broadcast(idx)
-    # never .add() onto points.schema — it mutates the cached StructType
-    out_schema = StructType(
-        list(points.schema.fields) + [StructField("polygon_id", StringType(), True)]
-    )
-    cols = [f.name for f in points.schema.fields]
-    keep_unmatched = how == "left"
-
-    def _match(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        index = b.value  # deserialized once per worker process
-        for pdf in batches:
-            lon = pdf[lon_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            lat = pdf[lat_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            pts_i, polys_i = index.match_points(lon, lat)
-            matched = pdf.iloc[pts_i][cols].copy()
-            matched["polygon_id"] = np.array(index.polygon_ids, dtype=object)[polys_i]
-            if keep_unmatched:
-                unmatched_mask = np.ones(len(pdf), dtype=bool)
-                unmatched_mask[np.unique(pts_i)] = False
-                rest = pdf.iloc[np.nonzero(unmatched_mask)[0]][cols].copy()
-                rest["polygon_id"] = None
-                matched = pd.concat([matched, rest], ignore_index=True)
-            yield matched
-
-    return points.mapInPandas(_match, out_schema)
-
-
 def _polygon_cell_map_rows(polygons_pdf: pd.DataFrame) -> list[tuple]:
     """Driver-side (tiny dimension): COVER_LEVEL cell -> candidate
     polygons, each carrying its polygon_id and a FLAT edge array across
@@ -342,10 +251,11 @@ def pip_join_native(
     The crossing arithmetic replicates geo.pip.points_in_ring op-for-op
     (same IEEE order; horizontal edges yield NaN/inf in the dead branch
     of the conjunction exactly like the numpy errstate-ignored kernel),
-    so matches are IDENTICAL to the mapInPandas path — candidate-set
-    differences (R-tree bbox vs cover cells) cannot matter because both
-    are supersets and the exact test decides membership. Identity is
-    asserted in tests/test_native_pipeline.py.
+    so matches are IDENTICAL to ``PolygonIndex.match_points`` (the fused
+    stage's PIP) — candidate-set differences (R-tree bbox vs cover
+    cells) cannot matter because both are supersets and the exact test
+    decides membership. Identity is asserted in
+    tests/test_native_pipeline.py and tests/test_dateline_polygons.py.
     """
     rows = _polygon_cell_map_rows(polygons_pdf)
     cmap = spark.createDataFrame(rows, _CELL_MAP_SCHEMA)
@@ -1122,7 +1032,7 @@ def simplify_rings(
     rebuilt natively by ``filter(arrays_zip(...))`` — the Python
     boundary carries only doubles in / booleans out, never structs.
     Per-row kernel cost is O(n log n) on vertex count; batches amortize
-    Arrow transfer exactly like the G2 cover UDF.
+    the Arrow transfer.
     """
     from pyspark.sql.types import BooleanType
 

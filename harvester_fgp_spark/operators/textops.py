@@ -22,16 +22,6 @@ from pyspark.sql.types import (
 from ..functions import text as _text
 
 
-@pandas_udf(StringType())
-def detect_lang_udf(text: pd.Series) -> pd.Series:
-    return _text.detect_lang_batch(text)
-
-
-@pandas_udf(DoubleType())
-def quality_udf(text: pd.Series) -> pd.Series:
-    return _text.quality_score_batch(text)
-
-
 _LANG_QUALITY_TYPE = StructType(
     [
         StructField("detected_lang", StringType(), True),
@@ -45,15 +35,15 @@ def lang_quality_udf(text: pd.Series) -> pd.DataFrame:
     """Fused lang-ID + quality in ONE Python pass (the production path).
 
     Measured on 5000 driver docs (round 3): scalar kernels are 0.083s +
-    0.095s; the findall regex scan is ~90% of each, and the np.isin-based
+    0.095s; the findall regex scan is ~90% of each, and np.isin-based
     batch twins came out 6x SLOWER (object-array materialization costs
-    more than the per-row set lookups they replace). Fusing shares the
+    more than the per-row set lookups they replace), so they were
+    deleted. Fusing shares the
     single dominant findall between both outputs — the only real win.
     """
     # per-row-ok: measured — Python-set stopword membership is C-speed
     # dict probing; every batch reconstruction tried (np.isin on object
-    # and on siphashed uint64 arrays) lost to it. See functions.text
-    # batch kernels for the property-tested alternatives + numbers.
+    # and on siphashed uint64 arrays) lost to it (numbers above).
     pairs = text.map(_text.lang_quality)
     return pd.DataFrame(
         {

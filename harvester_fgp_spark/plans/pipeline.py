@@ -87,7 +87,7 @@ def _fused_mine_match(bidx, keep_text: bool = True):
             pt_lat = np.where(is_pt, lat, (south + north) / 2.0)
             # wrap-aware center: west > east = antimeridian bbox
             pt_lon = np.where(is_pt, lon, _cells.bbox_center_lon(west, east))
-            # left-join semantics identical to operators.geo.pip_join:
+            # left-join semantics identical to operators.geo.pip_join_native:
             # one row per (payload, polygon) match; unmatched keep null
             pts_i, polys_i = index.match_points(pt_lon, pt_lat)
             unmatched = np.ones(len(rows_i), dtype=bool)
@@ -121,15 +121,15 @@ def mine_records(
     polygons_pdf: pd.DataFrame,
     cell_level: int = _cells.DEFAULT_LEVEL,
     tile_z: int = _tiles.DEFAULT_TILE_Z,
-    verify_extraction: bool = False,
     keep_text: bool = True,
     engine: str = "fused",
 ) -> DataFrame:
     """pages + polygons -> normalized records (FIXTURES.md §3 core fields).
 
-    `verify_extraction=True` adds the E1 output column (`extracted_text`)
-    for byte-identity checks; production leaves it off so the html column
-    is pruned from the scan when text is already materialized.
+    `keep_text=True` keeps the E1 text (`extracted_text`: the page's
+    `text`, or `extract_text(html)` when `text` is null) and the fields
+    derived from it; `keep_text=False` drops them at the source, so
+    aggregate consumers never move page text through the plan.
 
     `engine` selects the payload+PIP stage (round 3; output is
     record-identical, asserted in tests/test_native_pipeline.py):
@@ -137,13 +137,14 @@ def mine_records(
         R-tree PIP, see _fused_mine_match). The only choice for
         html-only corpora.
       - "native": rows that carry text run a ZERO-Python plan — the
-        regex miner as codegen expressions (payloads_native_col) and
-        exact PIP as a broadcast join + higher-order ray cast
-        (pip_join_native); html-only rows still route through the fused
-        Python stage and union back in.
+        JVM miner (operators.extract.with_payloads) and exact PIP as a
+        broadcast join + higher-order ray cast (pip_join_native);
+        html-only rows still route through the fused Python stage and
+        union back in. It is also the twin the fused engine's output is
+        checked against (perfbench's flagship digest).
 
     History (round 3, 2M pages, local[32], a 32-core host, when the
-    fused stage was mapInPandas): steady-state fused won (1.9-2.4 s vs
+    fused stage was a pandas map): steady-state fused won (1.9-2.4 s vs
     native 2.6-3.0 s), cold-start native won (5.3 s vs 8.3 s, no
     worker-spawn storm). Those numbers are not comparators for the
     mapInArrow stage; perfbench/ (`flagship` workload) is the same-host
@@ -154,69 +155,15 @@ def mine_records(
     valid, _quarantine = E.split_valid(pages)
     df = valid.filter(F.col("lang").isin("en", "fr"))
 
-    if verify_extraction:
-        # byte-identity branch: force extraction from html for every row,
-        # then the modular (unfused) stages
-        df = df.withColumn("extracted_text", E.extract_text_udf("html"))
-        df = E.with_payloads(df, "extracted_text")
-        df = df.withColumn(
-            "pt_lat",
-            F.when(F.col("kind") == "point", F.col("lat")).otherwise(
-                (F.col("south") + F.col("north")) / 2
-            ),
-        ).withColumn(
-            "pt_lon",
-            F.when(F.col("kind") == "point", F.col("lon")).otherwise(
-                G.bbox_center_lon_col(F.col("west"), F.col("east"))
-            ),
-        )
-        df = df.select(
-            "url", "warc_ts", "lang", "extracted_text", "payload_idx",
-            "kind", "lat", "lon", "west", "south", "east", "north",
-            "pt_lat", "pt_lon",
-        )
-        df = G.pip_join(spark, df, polygons_pdf, lon_col="pt_lon",
-                        lat_col="pt_lat", how="left")
-    elif engine == "native":
+    if engine == "native":
         # round-3 zero-Python plan for text-bearing rows: native regex
         # miner (codegen) + broadcast higher-order PIP; html-only rows
         # fall back to the fused Python stage and union in
-        text_prefilter = F.col("text").isNotNull() & (
-            F.col("text").contains(",")
-            | F.lower(F.col("text")).contains("west:")
-        )
         base_cols = ["url", "warc_ts", "lang"] + (
             ["extracted_text"] if keep_text else []
         )
-        pay = (
-            df.filter(text_prefilter)
-            .select(
-                "url",
-                "warc_ts",
-                "lang",
-                F.col("text").alias("extracted_text"),
-                F.posexplode(
-                    E.payloads_native_col(F.col("text"))
-                ).alias("payload_idx", "payload"),
-            )
-            .select(
-                *(["url", "warc_ts", "lang", "extracted_text"]),
-                "payload_idx",
-                "payload.*",
-            )
-        )
-        if not keep_text:
-            pay = pay.drop("extracted_text")
-        pay = pay.withColumn(
-            "pt_lat",
-            F.when(F.col("kind") == "point", F.col("lat")).otherwise(
-                (F.col("south") + F.col("north")) / F.lit(2.0)
-            ),
-        ).withColumn(
-            "pt_lon",
-            F.when(F.col("kind") == "point", F.col("lon")).otherwise(
-                G.bbox_center_lon_col(F.col("west"), F.col("east"))
-            ),
+        pay = E.with_payloads(df, "text").withColumnRenamed(
+            "text", "extracted_text"
         )
         nat = G.pip_join_native(
             spark, pay, polygons_pdf, lon_col="pt_lon", lat_col="pt_lat",

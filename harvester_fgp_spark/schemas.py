@@ -44,21 +44,6 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
-# One mined geo-payload (E2 output element). kind: 'point' | 'bbox'.
-PAYLOAD_STRUCT = StructType(
-    [
-        StructField("kind", StringType(), False),
-        StructField("lat", DoubleType(), True),
-        StructField("lon", DoubleType(), True),
-        StructField("west", DoubleType(), True),
-        StructField("south", DoubleType(), True),
-        StructField("east", DoubleType(), True),
-        StructField("north", DoubleType(), True),
-    ]
-)
-
-PAYLOADS_TYPE = ArrayType(PAYLOAD_STRUCT)
-
 # FGP-collection-style join dimension (FIXTURES.md §2) — broadcast side.
 RING_POINT = StructType(
     [StructField("x", DoubleType(), False), StructField("y", DoubleType(), False)]

@@ -40,21 +40,14 @@ def stream_tile_counts(
     window: str = "1 hour",
     tile_z: int = 8,
 ) -> DataFrame:
-    """pages stream -> per-(event-time window, tile) payload counts."""
+    """pages stream -> per-(event-time window, tile) payload counts.
+
+    Zero Python: the miner is the JVM one (``extract.with_payloads``),
+    shared with ``mine_records(engine="native")``.
+    """
     df = pages.withWatermark("warc_ts", watermark)
     df = df.filter(F.col("lang").isin("en", "fr"))
     df = E.with_payloads(df, "text")
-    df = df.withColumn(
-        "pt_lat",
-        F.when(F.col("kind") == "point", F.col("lat")).otherwise(
-            (F.col("south") + F.col("north")) / 2
-        ),
-    ).withColumn(
-        "pt_lon",
-        F.when(F.col("kind") == "point", F.col("lon")).otherwise(
-            G.bbox_center_lon_col(F.col("west"), F.col("east"))
-        ),
-    )
     tx, ty = G.tile_cols(F.col("pt_lon"), F.col("pt_lat"), tile_z)
     df = df.withColumn("tile_x", tx).withColumn("tile_y", ty)
     return df.groupBy(

@@ -8,69 +8,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from harvester_fgp_spark.geo import cells as C
 from harvester_fgp_spark.geo import tiles as T
-from harvester_fgp_spark.operators import geo as G
-
-
-def test_cell_encode_udf_matches_native(spark):
-    pdf = pd.DataFrame(
-        {
-            "lon": np.random.default_rng(3).uniform(-179, 179, 200),
-            "lat": np.random.default_rng(4).uniform(-89, 89, 200),
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    out = df.select(
-        G.cell_encode_col(F.col("lon"), F.col("lat"), 12).alias("native"),
-        G.cell_encode_udf(12)(F.col("lon"), F.col("lat")).alias("numpy"),
-    ).collect()
-    assert all(r.native == r.numpy for r in out)
-
-
-def test_with_cell_wrapper(spark):
-    df = spark.createDataFrame(pd.DataFrame({"lon": [10.0], "lat": [20.0]}))
-    row = G.with_cell(df, level=8).first()
-    assert row.cell_id == int(C.encode(np.array([10.0]), np.array([20.0]), 8)[0])
-
-
-def test_cover_udf_matches_kernel(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {"w": [-100.0], "s": [45.0], "e": [-95.0], "n": [50.0]}
-        )
-    )
-    got = df.select(
-        G.cover_udf(5)(F.col("w"), F.col("s"), F.col("e"), F.col("n")).alias("c")
-    ).first()["c"]
-    exp = C.cover_bboxes_batch(
-        np.array([-100.0]), np.array([45.0]), np.array([-95.0]), np.array([50.0]), 5
-    )[0]
-    assert sorted(got) == sorted(exp.tolist())
-
-
-def test_nfc_udf_normalizes(spark):
-    import unicodedata
-
-    from harvester_fgp_spark.operators.extract import nfc_udf
-
-    decomposed = "Montréal"  # e + combining accent
-    df = spark.createDataFrame(pd.DataFrame({"s": [decomposed]}))
-    out = df.select(nfc_udf(F.col("s")).alias("n")).first()["n"]
-    assert out == unicodedata.normalize("NFC", decomposed) == "Montréal"
-
-
-def test_with_extracted_payloads_matches_fused_counts(spark):
-    """The modular (unfused) E1+E2 path mines the same payload multiset as
-    the scalar kernel — it is the documented alternative, not dead code."""
-    from harvester_fgp_spark.functions.text import mine_payloads
-    from harvester_fgp_spark.operators.extract import with_extracted_payloads
-    from harvester_fgp_spark.synth import generate_pages, pages_df
-
-    pages = pages_df(spark, 300, seed=42)
-    got = with_extracted_payloads(pages).count()
-    pdf = generate_pages(300, seed=42)
-    assert got == sum(len(mine_payloads(t)) for t in pdf["text"])
 
 
 def test_tile_bounds_roundtrip():

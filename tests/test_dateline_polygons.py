@@ -4,8 +4,9 @@ rasterize correctly on BOTH sides of ±180.
 
 The treatment is ring splitting at ±180 into in-range parts
 (geo.cells.split_ring_at_dateline), flowing through every consumer:
-PolygonIndex (mapInPandas PIP), the cell-map (native PIP join), and the
-tile rasterizer. Both PIP paths are asserted IDENTICAL on the fixture.
+PolygonIndex (the fused stage's PIP), the cell-map (native PIP join),
+and the tile rasterizer. Both PIP paths are asserted IDENTICAL on the
+fixture.
 """
 
 from __future__ import annotations
@@ -89,11 +90,16 @@ def _expected():
 
 
 def test_pip_both_paths_match_dateline_polygon(spark):
-    pts = _points_df(spark)
+    """The fused stage's PIP (``PolygonIndex.match_points``) and the
+    zero-Python ``pip_join_native`` both match the fixture exactly."""
+    idx = G.build_polygon_index(POLYS_PDF)
+    lon = np.array([c[0] for c in CASES], dtype=np.float64)
+    lat = np.array([c[1] for c in CASES], dtype=np.float64)
+    pts_i, polys_i = idx.match_points(lon, lat)
     got_py = sorted(
-        (r["pt_id"], r["polygon_id"])
-        for r in G.pip_join(spark, pts, POLYS_PDF, how="inner").collect()
+        (int(i), idx.polygon_ids[p]) for i, p in zip(pts_i, polys_i)
     )
+    pts = _points_df(spark)
     got_nat = sorted(
         (r["pt_id"], r["polygon_id"])
         for r in G.pip_join_native(spark, pts, POLYS_PDF, how="inner").collect()

@@ -114,3 +114,19 @@ def test_entry_module_has_no_collect():
     src = (ENGINE.parent / "__spark_entry__.py").read_text()
     assert ".collect()" not in src
     assert ".rdd" not in src
+
+
+def test_pages_to_records_path_has_one_python_stage():
+    """The pages -> records path keeps exactly one Python stage, the fused
+    ``mapInArrow`` in plans/pipeline.py: no pandas UDF or pandas map may
+    come back into the modules that build it (the streaming dedup's
+    ``applyInPandasWithState`` is a different job and is not matched)."""
+    pat = re.compile(r"pandas_udf|mapInPandas")
+    offenders = []
+    for rel in (
+        "operators/extract.py", "plans/pipeline.py", "streaming/pipeline.py"
+    ):
+        for i, line in enumerate((ENGINE / rel).read_text().splitlines(), 1):
+            if pat.search(line):
+                offenders.append(f"{rel}:{i}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)

@@ -18,7 +18,7 @@ def test_native_miner_equals_python_kernel(spark):
     """payloads_native_col (Java regex + codegen) vs mine_payloads
     (Python re) over synth pages + adversarial fixtures — exact per-row
     payload-list equality, including ordinals, antimeridian boxes, bbox
-    masking, and range rejections."""
+    masking, range rejections and non-ASCII whitespace/case folds."""
     pages = pages_df(spark, 2000, seed=42).select("url", "text")
     extra = spark.createDataFrame(
         [
@@ -28,6 +28,10 @@ def test_native_miner_equals_python_kernel(spark):
             ("u4", "no geo here at all"),
             ("u5", "999.0, 999.0 edge -90.0, -180.0 and 90, 180"),
             ("u6", "45.5,-75.25 then west: 10 east: -10 south: 5 north: 0"),
+            # non-ASCII separators / case folds: Java regex is ASCII-only
+            ("u7", "45.5,\u00a0-75.25"),
+            ("u8", "west:\u2003-80.5\u2003east: -70.25 south: 40.75 north: 50.1"),
+            ("u9", "we\u017ft: -80.5 east: -70.25 south: 40.75 north: 50.1"),
         ],
         "url string, text string",
     )

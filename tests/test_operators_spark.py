@@ -87,18 +87,28 @@ def test_native_haversine_matches_numpy(spark):
 
 
 def test_extract_byte_identity_through_spark(spark):
-    """BASELINE.json:15 — byte-identical extracted text per url (E1)."""
-    from harvester_fgp_spark.functions.text import extract_text
+    """BASELINE.json:15 — byte-identical extracted text per url (E1),
+    through the production path: with ``text`` nulled, every page goes
+    through the fused stage's html extraction, and every record carries
+    ``extract_text(html)`` byte for byte."""
+    from pyspark.sql.types import StringType
 
-    pages = pages_df(spark, 500, seed=42)
-    got = (
-        pages.select("url", E.extract_text_udf("html").alias("et"))
+    from harvester_fgp_spark.functions.text import extract_text
+    from harvester_fgp_spark.plans.pipeline import mine_records
+
+    pages = pages_df(spark, 500, seed=42).withColumn(
+        "text", F.lit(None).cast(StringType())
+    )
+    recs = (
+        mine_records(spark, pages, generate_polygons(30, seed=42), keep_text=True)
+        .select("url", "extracted_text")
         .toPandas()
-        .set_index("url")["et"]
     )
     pdf = generate_pages(500, seed=42)
-    for url, html in zip(pdf["url"], pdf["html"]):
-        assert got[url].encode("utf-8") == extract_text(html).encode("utf-8")
+    html = dict(zip(pdf["url"], pdf["html"]))
+    assert recs["url"].nunique() > 100
+    for url, et in zip(recs["url"], recs["extracted_text"]):
+        assert et.encode("utf-8") == extract_text(html[url]).encode("utf-8")
 
 
 def test_mine_explode_counts(spark):
@@ -124,7 +134,7 @@ def test_pip_join_matches_brute_force(spark):
         }
     )
     got = (
-        G.pip_join(spark, spark.createDataFrame(pts), ppdf)
+        G.pip_join_native(spark, spark.createDataFrame(pts), ppdf, how="inner")
         .select("pid", "polygon_id")
         .toPandas()
     )
@@ -141,7 +151,9 @@ def test_pip_join_matches_brute_force(spark):
 def test_pip_join_left_keeps_unmatched(spark):
     ppdf = generate_polygons(10, seed=42)
     pts = pd.DataFrame({"pid": [0, 1], "lon": [0.0, 10.0], "lat": [0.0, 10.0]})
-    out = G.pip_join(spark, spark.createDataFrame(pts), ppdf, how="left").toPandas()
+    out = G.pip_join_native(
+        spark, spark.createDataFrame(pts), ppdf, how="left"
+    ).toPandas()
     assert len(out) == 2
     assert out["polygon_id"].isna().all()  # equator points match no Canada polygon
 

@@ -43,6 +43,17 @@ def test_streaming_tile_counts_matches_batch(spark, tmp_path):
     assert got.total == exp
 
 
+def test_streaming_tile_counts_plan_has_zero_python(spark):
+    """stream_tile_counts mines with the JVM miner: applied to a batch
+    pages frame (the watermark is a no-op in batch), its executed plan
+    has no Python stage."""
+    agg = stream_tile_counts(pages_df(spark, 200, seed=42), window="6 hours")
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    for node in ("ArrowEvalPython", "MapInPandas", "BatchEvalPython", "MapInArrow"):
+        assert node not in plan, node
+    assert agg.count() > 0
+
+
 def test_stateful_dedup_across_micro_batches(spark, tmp_path):
     """applyInPandasWithState: first-seen urls emitted once, later crawls
     of the same url suppressed even when they arrive in later batches."""

@@ -13,6 +13,8 @@ def test_extract_text_basic():
 def test_extract_text_entities_and_unicode():
     html = "<p>café &amp; crème</p>".encode()
     assert T.extract_text(html) == "café & crème"
+    # decomposed input (e + combining acute) comes out NFC-composed
+    assert T.extract_text("<p>Montre\u0301al</p>".encode()) == "Montréal"
 
 
 def test_extract_text_none_and_bad_bytes():
@@ -96,33 +98,40 @@ def test_shingles():
     assert s1 == s2 and len(s1) == 3
 
 
-def test_batch_miner_equals_scalar():
-    """The extractall hot path must match the scalar oracle exactly."""
-    import pandas as pd
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
+#: Texts whose only separator or case fold is non-ASCII: an NBSP after
+#: the comma, em spaces inside a bbox phrase, and a long s (U+017F) in
+#: "west:". The miner's patterns are ASCII-only, like Java regex and
+#: RE2, so none of them is a payload.
+NON_ASCII_NON_PAYLOADS = [
+    "45.5,\u00a0-75.25",
+    "west:\u2003-80.5\u2003east: -70.25 south: 40.75 north: 50.1",
+    "we\u017ft: -80.5 east: -70.25 south: 40.75 north: 50.1",
+]
 
-    from harvester_fgp_spark.synth import generate_pages
 
-    pdf = generate_pages(2000, seed=42)
-    batch = T.mine_payloads_batch(pdf["text"])
-    for text, got in zip(pdf["text"], batch):
-        assert got == T.mine_payloads(text)
-    # adversarial edge cases incl. the bbox-masking interaction
-    cases = [
-        None, "", "no geo here", "45.5, -75.5",
-        "west: 1 east: 2 south: 3 north: 4, 5.5",   # masked trailing comma
-        "west: 10 east: -10 south: 0 north: 5",       # inverted -> dropped
-        "91.0, 10.0 45.0, 181.0",                     # out of range
-        "west: -80.5 east: -70.2 south: 40.1 north: 50.9 then 49.1, -100.2",
-        "1.5, 2.5 3.5, 4.5 5.5, 6.5",                 # many points
-    ]
-    got = T.mine_payloads_batch(pd.Series(cases))
-    for text, g in zip(cases, got):
-        assert g == T.mine_payloads(text), text
+def _flat_payload_lists(texts) -> dict[int, list]:
+    """Run ``mine_payloads_flat`` and rebuild per-row payload lists in the
+    scalar kernel's dict form, checking the ordinal contract on the way."""
+    import numpy as np
+
+    rows, pidx, kind, lat, lon, w, s, e, n = T.mine_payloads_flat(texts)
+
+    def _v(x):
+        return None if np.isnan(x) else float(x)
+
+    got: dict[int, list] = {}
+    for i in range(len(rows)):
+        got.setdefault(int(rows[i]), []).append(
+            {"kind": str(kind[i]), "lat": _v(lat[i]), "lon": _v(lon[i]),
+             "west": _v(w[i]), "south": _v(s[i]), "east": _v(e[i]),
+             "north": _v(n[i])}
+        )
+        assert pidx[i] == len(got[int(rows[i])]) - 1  # ordinal contract
+    return got
 
 
 def test_batch_miner_property_random_text():
+    """The batch (flat-array) miner == scalar oracle on random fragments."""
     import numpy as np
     import pandas as pd
 
@@ -133,14 +142,13 @@ def test_batch_miner_property_random_text():
         "".join(rng.choice(frags, size=rng.integers(0, 30)))
         for _ in range(500)
     ]
-    got = T.mine_payloads_batch(pd.Series(texts))
-    for text, g in zip(texts, got):
-        assert g == T.mine_payloads(text), repr(text)
+    got = _flat_payload_lists(pd.Series(texts))
+    for r, text in enumerate(texts):
+        assert got.get(r, []) == T.mine_payloads(text), repr(text)
 
 
 def test_flat_miner_equals_scalar():
     """mine_payloads_flat (the fused-stage hot path) == scalar oracle."""
-    import numpy as np
     import pandas as pd
 
     from harvester_fgp_spark.synth import generate_pages
@@ -153,22 +161,14 @@ def test_flat_miner_equals_scalar():
         "west: -80.5 east: -70.2 south: 40.1 north: 50.9 then 49.1, -100.2",
         "1.5, 2.5 3.5, 4.5 5.5, 6.5",
         "WEST: -1.5 EAST: 0.5 SOUTH: -2.25 NORTH: 2.5",  # case-insensitive
+        *NON_ASCII_NON_PAYLOADS,
     ]
     texts = pd.Series(list(generate_pages(2000, seed=42)["text"]) + cases)
-    rows, pidx, kind, lat, lon, w, s, e, n = T.mine_payloads_flat(texts)
-    # rebuild per-row payload lists from the flat arrays
-    got: dict[int, list] = {}
-    for i in range(len(rows)):
-        def _v(x):
-            return None if np.isnan(x) else float(x)
-        got.setdefault(int(rows[i]), []).append(
-            {"kind": str(kind[i]), "lat": _v(lat[i]), "lon": _v(lon[i]),
-             "west": _v(w[i]), "south": _v(s[i]), "east": _v(e[i]),
-             "north": _v(n[i])}
-        )
-        assert pidx[i] == len(got[int(rows[i])]) - 1  # ordinal contract
+    got = _flat_payload_lists(texts)
     for r, text in enumerate(texts):
         assert got.get(r, []) == T.mine_payloads(text), f"row {r}: {text!r}"
+    for text in NON_ASCII_NON_PAYLOADS:
+        assert T.mine_payloads(text) == [], repr(text)
 
 
 # --- near-dup band tokenizer / word hasher ---------------------------------

@@ -1,6 +1,6 @@
-"""Round-3 kernel hardening: the batch-vectorized lang/quality kernels
-must equal the scalar oracles per row, and the now-native token count /
-fingerprint expressions must equal the Python kernels bit-for-bit."""
+"""Round-3 kernel hardening: the fused lang/quality kernel must equal the
+scalar oracles per row, and the now-native token count / fingerprint
+expressions must equal the Python kernels bit-for-bit."""
 
 from __future__ import annotations
 
@@ -27,21 +27,6 @@ def _texts() -> pd.Series:
         ]
     )
     return pd.concat([pdf["text"], extra], ignore_index=True)
-
-
-def test_detect_lang_batch_equals_scalar():
-    texts = _texts()
-    got = T.detect_lang_batch(texts)
-    exp = [T.detect_lang(t) for t in texts]
-    assert list(got) == exp
-
-
-def test_quality_batch_equals_scalar_bitwise():
-    texts = _texts()
-    got = T.quality_score_batch(texts)
-    exp = [T.quality_score(t) for t in texts]
-    # bit-identical, not approx: same IEEE op order by construction
-    assert list(got) == exp
 
 
 def test_fused_lang_quality_equals_canonical_kernels():
