@@ -1,4 +1,4 @@
-.PHONY: test package bench scaling oracle
+.PHONY: test package bench scaling oracle loc
 
 # Tier-1 (ROADMAP.md): size Spark to this host's cores, not the
 # session.py fallback, and report every failure instead of stopping.
@@ -20,3 +20,8 @@ scaling:
 # same core sizing as `test`: an unset SPARK_GRAFT_CPUS means local[32]
 oracle:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" python tools/check_oracle.py
+
+# engine lines of code, the figure CHANGES.md records for every change
+loc:
+	@find harvester_fgp_spark __spark_entry__.py -name '*.py' -not -path '*__pycache__*' \
+	  | xargs cat | wc -l

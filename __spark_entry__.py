@@ -2481,14 +2481,15 @@ _HRS_LEVEL = 6
 def _q_hilbert_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G1c consumer (round 7): bbox -> EXACT Hilbert id-range cover
     (driver-side planning over the same int64 arithmetic as the executor
-    encode) -> OR-of-BETWEEN filter on the id — lon/lat are never
+    encode) -> broadcast range join on the id — lon/lat are never
     consulted after the encode, so the ranges alone select the rows.
     The DuckDB oracle picks the SAME docs by the quantized grid
     rectangle directly (no Hilbert, no ranges): one wrong, missing, or
     over-wide range hash-fails; per-cell counts also pin the id values.
     This is the planning half of a Hilbert-sorted range SCAN — on a
-    sorted table the same predicate prunes parquet row groups
-    (bench/bench_hilbert_scan.py measures it against Morton)."""
+    sorted table the same cover as a ``range_set_filter`` predicate
+    prunes parquet row groups (bench/bench_hilbert_scan.py measures it
+    against Morton)."""
     pts = D.points_from_documents(spark, sf_dir)
     hdf = G.with_hilbert(pts, "lon", "lat", level=_HRS_LEVEL, out="hid")
     lon_min, lat_min, lon_max, lat_max = _HRS_BBOX

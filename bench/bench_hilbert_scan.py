@@ -6,8 +6,9 @@ Setup: N seed-42 uniform points, written TWICE as parquet sorted by the
 level-L Hilbert id and by the level-L Morton id (same rows, same
 row-group size — pyarrow writer so row-group boundaries are exact).
 For one query bbox, each table is scanned through
-``hilbert_range_scan(strategy="filter")`` / its Morton twin, i.e. an
-OR-of-BETWEEN literal predicate pushed to the parquet reader.
+``range_set_filter`` over its curve's range cover
+(``hilbert_range_cover`` / the Morton twin), i.e. an OR-of-BETWEEN
+literal predicate pushed to the parquet reader.
 
 Reported, per curve:
 - ranges in the (coalesced) cover

@@ -246,7 +246,6 @@ def minhash_near_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.8,
-    broadcast_candidates: "bool | None" = None,
 ) -> DataFrame:
     """All (id_a < id_b) pairs with verified shingle-Jaccard >= threshold.
 
@@ -278,13 +277,11 @@ def minhash_near_dup_pairs(
         .agg(F.collect_list(F.col(id_col)).alias("_ids"))
         .filter(F.size("_ids") > 1)
     )
-    return _verify_bucket_pairs(
-        docs, buckets, id_col, text_col, threshold, broadcast_candidates
-    )
+    return _verify_bucket_pairs(docs, buckets, id_col, text_col, threshold)
 
 
-#: Auto mode (broadcast_candidates=None) broadcasts the candidate set
-#: only below this many bucket pairs: 500k pairs explode to 1M
+#: The verify tail broadcasts the candidate set only at or below this
+#: many counted pairs: 500k pairs explode to 1M
 #: (id_a, id_b, _id) rows (~50 B each serialized, ≈50 MB) — comfortably
 #: inside executor/driver broadcast budgets; above it the text-fetch
 #: join plans shuffled and AQE owns the final strategy.
@@ -297,7 +294,6 @@ def _verify_bucket_pairs(
     id_col: str,
     text_col: str,
     threshold: float,
-    broadcast_candidates: "bool | None",
 ) -> DataFrame:
     """Shared LSH tail (round 5, extracted from minhash_near_dup_pairs
     for the simhash path): bucket id-lists -> native pair expansion ->
@@ -305,29 +301,20 @@ def _verify_bucket_pairs(
     verify. ``buckets`` must carry an ``_ids`` array column with > 1
     entries per row; every other column is ignored.
 
-    ``broadcast_candidates=None`` (the default since round 6) AUTO-SIZES
-    the decision instead of making the caller know their corpus's dup
-    density up front (round-5 watch item: the unconditional broadcast is
-    O(candidate pairs), so a duplicate-heavy 100 TB corpus would OOM the
-    driver). Auto mode localCheckpoints the bucket table — ONE
+    The broadcast decision is SIZED, not asked of the caller (an
+    unconditional broadcast is O(candidate pairs), so a duplicate-heavy
+    corpus would OOM the driver): localCheckpoint the bucket table — ONE
     materialization of the expensive signature subtree, no second UDF
-    pass — then counts sum(k*(k-1)/2) over bucket sizes and broadcasts
-    only under MAX_BROADCAST_PAIRS. Explicit True/False still force the
-    strategy and keep the whole plan lazy (no count job). The single
-    non-iterative localCheckpoint here does not hit the compounding-
-    origin-stats hazard that _stats_reset_checkpoint exists for."""
-    dedup_pairs = True
-    if broadcast_candidates is None:
-        buckets = buckets.localCheckpoint()
-        k = F.size("_ids").cast("long")
-        n_pairs = (
-            buckets.agg(F.sum(k * (k - F.lit(1)) / F.lit(2)).alias("n")).first()["n"]
-            or 0
-        )
-        broadcast_candidates = n_pairs <= MAX_BROADCAST_PAIRS
-        # small candidate sets verify cheaply either way — the distinct
-        # exchange only pays for itself once band-repeat volume is real
-        dedup_pairs = n_pairs > MAX_BROADCAST_PAIRS // 2
+    pass — then count sum(k*(k-1)/2) over bucket sizes and broadcast
+    only at or below MAX_BROADCAST_PAIRS. The single non-iterative
+    localCheckpoint here does not hit the compounding-origin-stats
+    hazard that _stats_reset_checkpoint exists for."""
+    buckets = buckets.localCheckpoint()
+    k = F.size("_ids").cast("long")
+    n_pairs = (
+        buckets.agg(F.sum(k * (k - F.lit(1)) / F.lit(2)).alias("n")).first()["n"]
+        or 0
+    )
     pair = F.filter(
         F.flatten(
             F.transform(
@@ -337,14 +324,16 @@ def _verify_bucket_pairs(
         ),
         lambda p: p["id_a"] < p["id_b"],
     )
-    # one row per pair; the same pair may repeat across bands — the final
-    # per-pair groupBy in the shared tail dedups, saving a distinct here
+    # one row per pair per band; the shared tail dedups the repeats
     pairs = buckets.select(F.explode(pair).alias("p")).select(
         "p.id_a", "p.id_b"
     )
     return _verify_candidate_pairs(
-        docs, pairs, id_col, text_col, threshold, broadcast_candidates,
-        dedup_pairs=dedup_pairs,
+        docs, pairs, id_col, text_col, threshold,
+        broadcast=n_pairs <= MAX_BROADCAST_PAIRS,
+        # small candidate sets verify cheaply either way — the distinct
+        # exchange only pays for itself once band-repeat volume is real
+        dedup_pairs=n_pairs > MAX_BROADCAST_PAIRS // 2,
     )
 
 
@@ -354,7 +343,7 @@ def _verify_candidate_pairs(
     id_col: str,
     text_col: str,
     threshold: float,
-    broadcast_candidates: bool,
+    broadcast: bool,
     dedup_pairs: bool = True,
 ) -> DataFrame:
     """Shared exact-verify tail over a raw (id_a, id_b) candidate frame
@@ -365,10 +354,11 @@ def _verify_candidate_pairs(
     The candidate pair set is USUALLY small (LSH banding exists
     precisely to make it so) -> broadcast it and STREAM the corpus
     through one hash join. It is O(candidate pairs), NOT bounded —
-    hence the callers' auto-sizing; a forced broadcast_candidates=False
-    drops the hint and the join plans shuffled (AQE may still convert
-    back to broadcast at runtime). Results are identical in all modes
-    (tests/test_round3_fixes.py, tests/test_round6_fixes.py).
+    hence the callers count it and pass ``broadcast`` only at or below
+    MAX_BROADCAST_PAIRS; above it the hint is dropped and the join plans
+    shuffled (AQE may still convert back to broadcast at runtime).
+    Results are identical either way
+    (tests/test_round6_fixes.py::test_auto_broadcast_flips_on_dup_heavy_corpus).
 
     Round 8 (guide §2.3 "shuffle keys, not payloads"): near-dup pairs
     repeat across LSH bands (~10-16 copies each at the fixture's
@@ -385,7 +375,7 @@ def _verify_candidate_pairs(
     cands = pairs.select(
         "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("_id")
     )
-    if broadcast_candidates:
+    if broadcast:
         cands = F.broadcast(cands)
     fetched = docs.select(id_col, text_col).join(
         cands, F.col(id_col) == F.col("_id")
@@ -516,7 +506,6 @@ def minhash_incremental_pairs(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_candidates: "bool | None" = None,
     max_bucket_size: "int | None" = MAX_INCREMENTAL_BUCKET,
 ) -> DataFrame:
     """Near-dup pairs for an INCREMENTAL batch against itself plus the
@@ -542,8 +531,9 @@ def minhash_incremental_pairs(
     never built — and every exclusion is reported via ``warnings.warn``
     with bucket count, worst size, and skipped-pair volume, so silent
     under-reporting is impossible. ``max_bucket_size=None`` restores the
-    single-pass unguarded plan (fully lazy when broadcast_candidates is
-    explicit).
+    single-pass unguarded plan. Either way the candidate pairs are
+    localCheckpointed and counted, and broadcast into the verify join
+    only at or below MAX_BROADCAST_PAIRS.
 
     Identity guarantee (pytest): stored(batch1) + incremental(batch2)
     ∪ batch1-internal pairs == one-shot pairs over batch1 ∪ batch2.
@@ -647,11 +637,10 @@ def minhash_incremental_pairs(
     pairs = buckets.select(F.explode(pair).alias("p")).select(
         "p.id_a", "p.id_b"
     )
-    if broadcast_candidates is None:
-        pairs = pairs.localCheckpoint()
-        broadcast_candidates = pairs.count() <= MAX_BROADCAST_PAIRS
+    pairs = pairs.localCheckpoint()
     return _verify_candidate_pairs(
-        corpus, pairs, id_col, text_col, threshold, broadcast_candidates
+        corpus, pairs, id_col, text_col, threshold,
+        broadcast=pairs.count() <= MAX_BROADCAST_PAIRS,
     )
 
 
@@ -990,7 +979,6 @@ def simhash_near_dup_pairs(
     text_col: str = "text",
     threshold: float = 0.8,
     band_bits: int = 16,
-    broadcast_candidates: "bool | None" = None,
 ) -> DataFrame:
     """SimHash-banded near-dup pairs with the EXACT gram-Jaccard verify
     stage (round 5) — the simhash twin of minhash_near_dup_pairs, same
@@ -1019,9 +1007,7 @@ def simhash_near_dup_pairs(
         .agg(F.collect_list(F.col(id_col)).alias("_ids"))
         .filter(F.size("_ids") > 1)
     )
-    return _verify_bucket_pairs(
-        docs, buckets, id_col, text_col, threshold, broadcast_candidates
-    )
+    return _verify_bucket_pairs(docs, buckets, id_col, text_col, threshold)
 
 
 def ngram_jaccard_pairs(

@@ -490,9 +490,7 @@ def knn_join(
     cand_id: str,
     level: int = _cells.DEFAULT_LEVEL,
     prefix_level: int = 4,
-    broadcast_candidates: bool = True,
     expand_underfilled: bool = True,
-    salt: int | None = None,
     exact: bool = False,
     rank_round: int | None = None,
 ) -> DataFrame:
@@ -540,18 +538,12 @@ def knn_join(
     Both sides must carry `cell_id` at `level` plus lat/lon columns named
     (q_lat, q_lon) / (c_lat, c_lon).
 
-    Contract: `broadcast_candidates=True` (the default) is only valid for
-    dimension-sized candidate sets (e.g. collection centroids, <= a few
-    hundred MB serialized). For large-x-large kNN pass False — the prefix
-    equi-join then plans as a shuffled SMJ/SHJ, which is the 10^12 shape —
-    and pass `salt` (from joins.choose_salt_factor over the prefix column)
-    when the cell histogram is skewed: dense urban prefixes are exactly
-    the hot-key case J7 exists for, and AQE's skew split cannot divide a
-    single hot KEY across tasks.
+    Contract: the candidates are ALWAYS broadcast — every prefix pass
+    streams the queries through one broadcast hash join — so
+    `candidates` must be dimension-sized (e.g. collection centroids,
+    <= a few hundred MB serialized). Large-x-large kNN is out of scope.
     """
     from pyspark.sql.window import Window
-
-    from .joins import salted_join
 
     def _pass(pfx_level: int, qs: DataFrame) -> DataFrame:
         q = qs.withColumn(
@@ -560,12 +552,7 @@ def knn_join(
         c = candidates.withColumn(
             "_pfx", cell_parent_col(F.col("cell_id"), level, pfx_level)
         ).drop("cell_id")
-        if broadcast_candidates:
-            return q.join(F.broadcast(c), "_pfx").drop("_pfx")
-        if salt and salt > 1:
-            # probe = queries (skewed on dense prefixes), build = candidates
-            return salted_join(q, c, "_pfx", salt=salt).drop("_pfx")
-        return q.join(c, "_pfx").drop("_pfx")
+        return q.join(F.broadcast(c), "_pfx").drop("_pfx")
 
     def _rank(pairs: DataFrame) -> DataFrame:
         d_raw = haversine_km_col(
@@ -1152,61 +1139,11 @@ def bbox_overlap_join(
 # --- G1c: Hilbert curve encode (NATIVE, S2-style locality) -------------------------
 
 
-def hilbert_encode_col(lon: Column, lat: Column, level: int) -> Column:
-    """Hilbert-curve cell id at ``level`` (side 2^level), fully native —
-    the locality-optimal alternative to the Morton id (S2's choice):
-    consecutive ids are grid-ADJACENT (unit-step path, pytest-verified),
-    so a rectangle range-query covers FEWER contiguous id runs than the
-    Morton id — measured 8.1 vs 14.3 runs per 8x8 window at level 6
-    (the Moon et al. 1996 clustering metric a range scan cares about;
-    mean neighbor |delta-id| actually favors Morton and is the wrong
-    measure).
-
-    Same grid quantization as ``cell_encode_col`` (x from lon, y from
-    90-lat), same prefix-hierarchy property (``id >> 2`` IS the parent
-    id at level-1 — verified property, like the Morton shift), so the
-    J3 prefix range join works unchanged on either id.
-
-    Hilbert-STYLE, not any specific library's byte layout (same
-    disclaimer as the S2-style Morton id). The per-level rotation makes
-    each level's (x, y) reference both prior columns, so the expression
-    doubles per level — capped at level 8 (256-node expression, fine
-    for codegen); use a Morton id or a two-stage encode for finer grids.
-    """
-    if not (1 <= level <= 8):
-        raise ValueError("hilbert_encode_col supports level in [1, 8]")
-    n = 1 << level
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    y = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(float(n)))
-    nmax, zero = F.lit(n - 1), F.lit(0)
-    x = F.greatest(zero, F.least(nmax, x)).cast("long")
-    y = F.greatest(zero, F.least(nmax, y)).cast("long")
-    d = F.lit(0).cast("long")
-    for i in range(level - 1, -1, -1):
-        s = 1 << i
-        rx = F.when(x.bitwiseAND(F.lit(s)) > 0, 1).otherwise(0)
-        ry = F.when(y.bitwiseAND(F.lit(s)) > 0, 1).otherwise(0)
-        d = d + F.lit(s * s).cast("long") * (rx * 3).bitwiseXOR(ry).cast(
-            "long"
-        )
-        # quadrant-scoped rotation (mirror-then-swap when ry == 0)
-        nx = F.when(
-            ry == 0,
-            F.when(rx == 1, F.lit(s - 1) - y).otherwise(y),
-        ).otherwise(x)
-        ny = F.when(
-            ry == 0,
-            F.when(rx == 1, F.lit(s - 1) - x).otherwise(x),
-        ).otherwise(y)
-        x, y = nx, ny
-    return d
-
-
 def hilbert_sql_ctes(
     lon_expr: str, lat_expr: str, level: int, key_cols: str
 ) -> "tuple[str, str]":
-    """DuckDB longhand twin of ``hilbert_encode_col`` as per-level CTEs
-    (linear SQL growth where inline expressions would double per level).
+    """DuckDB longhand twin of ``with_hilbert`` as per-level CTEs
+    (linear SQL growth where inline expressions would triple per level).
     Returns (cte_body, final_relation_name); the final relation exposes
     ``key_cols`` plus ``hd`` (the Hilbert id). Generated beside the
     native builder so the two cannot drift."""
@@ -1257,17 +1194,23 @@ def with_hilbert(
     level: int = 8,
     out: str = "hilbert_id",
 ) -> DataFrame:
-    """DataFrame-level Hilbert encode with LINEAR plan growth: each
-    rotation level is its own projection, and CollapseProject keeps the
-    stages separate (the level's x/y aliases are non-cheap and each
-    referenced ~3 times downstream, which is exactly the case the
-    optimizer refuses to re-inline).
+    """Hilbert-curve cell id at ``level`` (side 2^level), fully native —
+    the locality-optimal alternative to the Morton id (S2's choice):
+    consecutive ids are grid-ADJACENT (unit-step path, pytest-verified),
+    so a rectangle range-query covers FEWER contiguous id runs than the
+    Morton id — measured 8.1 vs 14.3 runs per 8x8 window at level 6
+    (the Moon et al. 1996 clustering metric a range scan cares about).
+    Same grid quantization as ``cell_encode_col`` (x from lon, y from
+    90-lat) and the same prefix hierarchy (``id >> 2`` IS the parent id
+    at level-1). Hilbert-STYLE, not any specific library's byte layout.
 
-    Why it exists: ``hilbert_encode_col`` is a single expression whose
-    tree TRIPLES per level — at level 5 that's ~seconds of Column
-    construction + Janino compile PER PLAN (measured: the 5k-row gate
-    query spent 3 s on a 0.3 s job). The staged builder is
-    value-identical (pytest parity) and supports deeper levels.
+    LINEAR plan growth: each rotation level is its own projection, and
+    CollapseProject keeps the stages separate (the level's x/y aliases
+    are non-cheap and each referenced ~3 times downstream, which is
+    exactly the case the optimizer refuses to re-inline). A single
+    Column expression would TRIPLE per level — at level 5 that was
+    ~seconds of Column construction + Janino compile PER PLAN (the
+    5k-row gate query spent 3 s on a 0.3 s job).
     """
     if not (1 <= level <= 16):
         raise ValueError("level in [1, 16]")
@@ -1521,7 +1464,6 @@ def hilbert_range_scan(
     max_ranges: "int | None" = 64,
     lon_col: "str | None" = None,
     lat_col: "str | None" = None,
-    strategy: str = "join",
 ) -> DataFrame:
     """Filter a Hilbert-keyed frame to a bbox via the range cover. When
     the cover is coalesced (``max_ranges``), lon/lat columns MUST be
@@ -1531,21 +1473,19 @@ def hilbert_range_scan(
     gaps); with ``max_ranges=None`` the ranges alone are already exact
     and no residual is needed.
 
-    ``strategy`` picks how the range set meets the rows:
-
-    - ``"join"`` (default): broadcast the [lo, hi] table and join on
-      ``id BETWEEN lo AND hi`` — a <= 64-row nested-loop probe per row.
-      REQUIRED when ``id_col`` was just computed by ``with_hilbert``:
-      a literal predicate gets pushed through every staged rotation
-      projection, re-inlining the per-level expression that triples per
-      level (measured: ONE equality inlined to a ~1 MB condition at
-      level 6 — the plan-time explosion the staged encode exists to
-      avoid). The join keeps the id as a once-computed attribute, and
-      scales to arbitrarily long covers without growing the plan.
-    - ``"filter"``: literal OR-of-BETWEEN — use on a STORED id column
-      (a Hilbert-sorted table), where pushdown is the whole point: the
-      comparisons reach the parquet reader and prune row groups via
-      min/max stats (bench/bench_hilbert_scan.py measures it).
+    The range set meets the rows through a broadcast [lo, hi] table
+    joined on ``id BETWEEN lo AND hi`` — a <= 64-row nested-loop probe
+    per row. This is REQUIRED when ``id_col`` was just computed by
+    ``with_hilbert``: a literal predicate gets pushed through every
+    staged rotation projection, re-inlining the per-level expression
+    that triples per level (measured: ONE equality inlined to a ~1 MB
+    condition at level 6). The join keeps the id as a once-computed
+    attribute, and scales to arbitrarily long covers without growing
+    the plan. For a STORED id column (a Hilbert-sorted table), where
+    scan pushdown is the point, filter with
+    ``range_set_filter(col, hilbert_range_cover(...))`` instead: the
+    literal comparisons reach the parquet reader and prune row groups
+    via min/max stats (bench/bench_hilbert_scan.py measures it).
     """
     if max_ranges is not None and (lon_col is None or lat_col is None):
         raise ValueError(
@@ -1556,19 +1496,11 @@ def hilbert_range_scan(
     ranges = hilbert_range_cover(
         lon_min, lat_min, lon_max, lat_max, level, max_ranges
     )
-    if strategy == "filter":
-        out = df.filter(range_set_filter(F.col(id_col), ranges))
-    elif strategy == "join":
-        rng = df.sparkSession.createDataFrame(
-            ranges, "_rlo long, _rhi long"
-        )
-        out = df.join(
-            F.broadcast(rng),
-            (F.col(id_col) >= F.col("_rlo"))
-            & (F.col(id_col) <= F.col("_rhi")),
-        ).drop("_rlo", "_rhi")
-    else:
-        raise ValueError("strategy must be 'join' or 'filter'")
+    rng = df.sparkSession.createDataFrame(ranges, "_rlo long, _rhi long")
+    out = df.join(
+        F.broadcast(rng),
+        (F.col(id_col) >= F.col("_rlo")) & (F.col(id_col) <= F.col("_rhi")),
+    ).drop("_rlo", "_rhi")
     if max_ranges is not None and lon_col is not None and lat_col is not None:
         n = 1 << level
         x = F.floor(

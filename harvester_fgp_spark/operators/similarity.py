@@ -85,7 +85,6 @@ def cosine_topk(
     c_id: str = "c_id",
     q_emb: str = "q_emb",
     c_emb: str = "c_emb",
-    n_blocks: "int | None" = None,
 ) -> DataFrame:
     """Exact top-k per query — O(Q x N) pair arithmetic, vectorized.
 
@@ -96,10 +95,11 @@ def cosine_topk(
     all get computed — exactness requires it — but now inside a cogrouped
     Arrow kernel that runs the dot products as ~d vectorized numpy passes
     per (candidate-block x query-set) tile: candidates hash into
-    scale-adaptive blocks, queries replicate to every block (Q x n_blocks
-    rows of metadata-sized shuffle, guide §2.3), and each block emits
-    only its margin-guarded top-k superset (~k rows per query per block),
-    so the O(Q x N) pair stream never hits a shuffle. A native
+    n_blocks = max(2 x defaultParallelism, 8) blocks, queries replicate
+    to every block (Q x n_blocks rows of metadata-sized shuffle, guide
+    §2.3), and each block emits only its margin-guarded top-k superset
+    (~k rows per query per block), so the O(Q x N) pair stream never
+    hits a shuffle. A native
     round + row_number window over ~k x n_blocks rows per query finishes.
 
     BIT-EXACT by construction, not approximately equal: the kernel
@@ -113,8 +113,7 @@ def cosine_topk(
     vectors have no cosine and drop out.
     """
     spark = queries.sparkSession
-    if n_blocks is None:
-        n_blocks = max(int(spark.sparkContext.defaultParallelism) * 2, 8)
+    n_blocks = max(int(spark.sparkContext.defaultParallelism) * 2, 8)
     q_id_t = queries.schema[q_id].dataType.simpleString()
     c_id_t = candidates.schema[c_id].dataType.simpleString()
     blocks = spark.range(n_blocks).select(F.col("id").cast("int").alias("_blk"))

@@ -411,9 +411,9 @@ def repetition_stats(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    sep: str = " ",
 ) -> DataFrame:
     """Gopher-style within-document repetition signals, shuffle-free.
+    Words are ``split(" ")``-exact tokens.
 
     Per document: duplicate-word fraction (1 - distinct/total words),
     top-bigram fraction (occurrences of the most frequent word bigram /
@@ -424,25 +424,19 @@ def repetition_stats(
     §4.2): ZERO shuffles — all three fractions are per-document, so the
     bigram frequency table never needed to leave the row, yet rounds 3-7
     exploded one row per bigram STRING and ran two corpus-wide groupBys
-    (~15M exploded strings at sf1.0; 5.9 s). Default path (``sep=" "``):
-    ONE zero-copy Arrow kernel (functions.tokens) tokenizes split(" ")-
-    exact, hashes words and bigrams in ~k vectorized passes, and derives
+    (~15M exploded strings at sf1.0; 5.9 s). Now ONE zero-copy Arrow
+    kernel (functions.tokens) tokenizes split(" ")-exact, hashes words
+    and bigrams in ~k vectorized passes, and derives
     the per-doc stats from lexsorted runs (n_distinct = run count,
     top_bigram_n = max run length); the only Python stage in the plan,
     no shuffle at all. Counts are hash-based, so a within-document
     64-bit collision could in principle merge two runs; output verified
     row-exact vs the exploding string plan at sf0.01/0.1/1.0 and against
-    the DuckDB string-longhand oracle (tools/check_oracle.py). Non-space
-    separators keep a native staged-HOF plan (same shape, interpreted
-    per-element) because ``sep`` is a regex there. Fractions are emitted
-    as exact micro-unit BIGINTs (single-division IEEE order mirrored by
-    the oracle).
+    the DuckDB string-longhand oracle (tools/check_oracle.py). Fractions
+    are emitted as exact micro-unit BIGINTs (single-division IEEE order
+    mirrored by the oracle).
     """
-    per_doc = (
-        _repetition_per_doc_arrow(docs, id_col, text_col)
-        if sep == " "
-        else _repetition_per_doc_native(docs, id_col, text_col, sep)
-    )
+    per_doc = _repetition_per_doc_arrow(docs, id_col, text_col)
 
     def _micro_frac(num: Column, den: Column) -> Column:
         frac = num.cast("double") / den.cast("double")
@@ -533,75 +527,3 @@ def _repetition_per_doc_arrow(
             )
 
     return src.mapInArrow(_stats, schema)
-
-
-def _repetition_per_doc_native(
-    docs: DataFrame, id_col: str, text_col: str, sep: str
-) -> DataFrame:
-    """Native staged-HOF fallback for regex separators: hash bigrams
-    in-row (one xxhash64 per word, xxhash64 over the word-hash pair),
-    array_sort, and read the frequency stats off the sorted runs. Each
-    derived array gets its own .select() stage: CollapseProject keeps
-    multi-use non-cheap aliases staged (the with_hilbert lesson), so
-    the sort runs once per row, not once per consumer."""
-    words = F.split(F.col(text_col), sep)
-    nw = F.size(words)
-    wh = F.transform(words, lambda w: F.xxhash64(w))
-    base = docs.select(
-        F.col(id_col),
-        nw.alias("n_words"),
-        F.size(F.array_distinct(words)).alias("n_distinct_words"),
-        F.when(
-            nw >= 2,
-            F.zip_with(
-                F.slice(wh, 1, nw - 1),
-                F.slice(wh, 2, nw - 1),
-                lambda a, b: F.xxhash64(a, b),
-            ),
-        )
-        .otherwise(F.array().cast("array<bigint>"))
-        .alias("_bh"),
-    )
-    srt = base.select(
-        id_col,
-        "n_words",
-        "n_distinct_words",
-        F.size("_bh").alias("n_bigrams"),
-        F.array_sort("_bh").alias("_s"),
-    )
-    nb = F.col("n_bigrams")
-    s = F.col("_s")
-    # run starts in the sorted hash array (0-based; F.get returns NULL
-    # out of range, and TRUE OR NULL short-circuits the j=0 edge)
-    starts = F.filter(
-        F.sequence(F.lit(0), nb - 1),
-        lambda j: (j == 0) | (F.get(s, j) != F.get(s, j - 1)),
-    )
-    runs_stage = srt.select(
-        id_col,
-        "n_words",
-        "n_distinct_words",
-        "n_bigrams",
-        F.when(nb >= 1, starts)
-        .otherwise(F.array().cast("array<int>"))
-        .alias("_starts"),
-    )
-    st = F.col("_starts")
-    run_len = F.zip_with(
-        st,
-        F.concat(
-            F.slice(st, 2, F.greatest(F.size(st) - 1, F.lit(0))),
-            F.array(nb),
-        ),
-        lambda a, b: b - a,
-    )
-    return runs_stage.select(
-        id_col,
-        "n_words",
-        "n_distinct_words",
-        F.col("n_bigrams").cast("long").alias("n_bigrams"),
-        F.coalesce(F.array_max(run_len), F.lit(0))
-        .cast("long")
-        .alias("top_bigram_n"),
-        F.size(st).cast("long").alias("n_distinct_bigrams"),
-    )

@@ -132,7 +132,8 @@ def mine_records(
     aggregate consumers never move page text through the plan.
 
     `engine` selects the payload+PIP stage (round 3; output is
-    record-identical, asserted in tests/test_native_pipeline.py):
+    record-identical, asserted in tests/test_native_pipeline.py); any
+    other value raises ValueError:
       - "fused": ONE mapInArrow stage (extract -> mine -> explode ->
         R-tree PIP, see _fused_mine_match). The only choice for
         html-only corpora.
@@ -152,6 +153,8 @@ def mine_records(
     the better shape for short jobs / micro-batches and for clusters
     where Python workers contend with executors for memory.
     """
+    if engine not in ("fused", "native"):
+        raise ValueError(f"engine must be 'fused' or 'native', not {engine!r}")
     valid, _quarantine = E.split_valid(pages)
     df = valid.filter(F.col("lang").isin("en", "fr"))
 

@@ -331,7 +331,6 @@ def verify_lineage(
     out_dir: str,
     checkpoint_dir: str,
     stage: str = "records",
-    per_batch: bool = False,
 ) -> DataFrame:
     """Audit: recompute per-tile row counts + fingerprints from the parquet
     actually on disk and anti-check them against the committed lineage.
@@ -340,11 +339,13 @@ def verify_lineage(
     bytes reproduce its commit marker (the resume-trust invariant). Tiles
     are compared at tile grain (lineage rows are per (partition, tile);
     they are re-aggregated here because the on-disk layout no longer knows
-    producing partitions).
+    producing partitions). Works on either sink's output: the streaming
+    sink's ``batch_id`` partition column tells the two apart.
     """
+    disk = spark.read.parquet(out_dir)
+    per_batch = "batch_id" in disk.columns
     written = (
-        spark.read.parquet(out_dir)
-        .groupBy("tile_id")
+        disk.groupBy("tile_id")
         .agg(
             F.count("*").alias("disk_rows"),
             F.format_string(
@@ -361,13 +362,15 @@ def verify_lineage(
     # (current_timestamp is constant per write query), so keeping the
     # max(completed_at) rows keeps exactly one commit's partition rows,
     # even when the replay partitioned the data differently.
-    #   per_batch=False (batch sink): latest commit per tile_id — dynamic
-    #     overwrite means the last writer owns the whole tile directory,
-    #     whatever its run_id (covers same-run replays AND new-run reruns).
-    #   per_batch=True (streaming sink): latest commit per (run_id,
-    #     tile_id); batch_id is encoded in run_id ("<run>-b<N>") and tiles
-    #     legitimately accumulate rows across batches, so batches must
-    #     still SUM while each batch's replays collapse.
+    #   batch sink (no batch_id on disk): latest commit per tile_id —
+    #     dynamic overwrite means the last writer owns the whole tile
+    #     directory, whatever its run_id (covers same-run replays AND
+    #     new-run reruns).
+    #   streaming sink (partitioned by (tile_id, batch_id)): latest
+    #     commit per (run_id, tile_id); batch_id is encoded in run_id
+    #     ("<run>-b<N>") and tiles legitimately accumulate rows across
+    #     batches, so batches must still SUM while each batch's replays
+    #     collapse.
     cp = _with_commit_token(
         _read_checkpoint(spark, checkpoint_dir).filter(F.col("stage") == stage)
     )
@@ -411,22 +414,14 @@ def resume_filter(
     spark: SparkSession,
     checkpoint_dir: str,
     stage: str = "records",
-    broadcast_done: bool = True,
 ) -> DataFrame:
     """S6: drop tiles already committed (left-anti join on tile_id).
 
-    ``broadcast_done=True`` (default) force-broadcasts the completed-tile
-    set — right for the common resume case (up to ~10^7 distinct 8-byte
-    tile ids ≈ tens of MB). For a checkpoint spanning ~10^8+ tiles pass
-    False: the anti-join then plans as a shuffled join on tile_id (AQE
-    may still downgrade to broadcast at runtime if the set turns out
-    small), instead of materializing the whole set on the driver
-    (round 5 — same guarded-broadcast contract as knn_join and
-    minhash_near_dup_pairs)."""
+    The completed-tile set is always broadcast: up to ~10^7 distinct
+    8-byte tile ids is tens of MB, and the pending side streams through
+    one broadcast hash anti-join."""
     done = completed_tiles(spark, checkpoint_dir, stage)
-    if broadcast_done:
-        done = F.broadcast(done)
-    return pending.join(done, "tile_id", "left_anti")
+    return pending.join(F.broadcast(done), "tile_id", "left_anti")
 
 
 def compact_records(
@@ -470,10 +465,9 @@ def compact_records(
     if cluster == "hilbert":
         from ..operators.geo import bbox_center_lon_col, with_hilbert
 
-        # STAGED encode, never the single hilbert_encode_col expression:
-        # its tree triples per level and Janino takes minutes compiling
-        # the level-8 form (the round-6 plan-time lesson, re-hit here);
-        # the staged projections are linear and the helper columns are
+        # with_hilbert stages one projection per level, so the plan
+        # stays linear (a single expression would triple per level and
+        # take Janino minutes at level 8); the helper columns are
         # dropped before the write, so the output schema is unchanged
         df = df.withColumn(
             "_hlat",
@@ -565,7 +559,6 @@ def _vacuum_swap(
 def vacuum_checkpoint(
     spark: SparkSession,
     checkpoint_dir: str,
-    aggressive: bool = False,
     runs: "list[str] | None" = None,
 ) -> None:
     """Compact the append-only lineage table to the rows verify_lineage
@@ -573,16 +566,13 @@ def vacuum_checkpoint(
     rows while overwriting the data in place, so a long-lived pipeline's
     checkpoint table grows with replay count, not data.
 
-    Grain (review-hardened): the DEFAULT reduction keeps the latest
-    commit per (stage, run_id, tile) — replays of one run/batch
-    collapse, but commits are NEVER merged across run_ids. That is safe
-    for BOTH sinks unconditionally: streaming lineage encodes batch_id
-    in run_id and tiles legitimately accumulate rows across batches, so
-    a per-(stage, tile) reduction would permanently delete earlier
-    batches' commits and turn the per_batch audit red on correct data.
-    ``aggressive=True`` opts into per-(stage, tile) — correct ONLY for a
-    checkpoint dir that has never taken streaming commits (dynamic
-    overwrite means the last batch writer owns the whole tile).
+    Grain (review-hardened): the reduction keeps the latest commit per
+    (stage, run_id, tile) — replays of one run/batch collapse, but
+    commits are NEVER merged across run_ids. That is safe for BOTH sinks
+    unconditionally: streaming lineage encodes batch_id in run_id and
+    tiles legitimately accumulate rows across batches, so a per-(stage,
+    tile) reduction would permanently delete earlier batches' commits
+    and turn the streaming audit red on correct data.
 
     Durability (review-hardened): the reduced table is FIRST written to
     a sibling temp directory straight off the source read (the source
@@ -612,8 +602,7 @@ def vacuum_checkpoint(
     dir under dot-prefixed names, which Spark's partition discovery
     ignores, so a crash mid-swap never corrupts reads of the rest of
     the table; any orphaned ``.vacuum-old-*`` is auto-restored on the
-    next vacuum of that stage. ``aggressive`` (cross-run merging) is
-    whole-table by nature and is refused on a partitioned dir.
+    next vacuum of that stage.
     """
     import os
     import shutil
@@ -623,11 +612,6 @@ def vacuum_checkpoint(
         e.startswith("stage=") for e in os.listdir(checkpoint_dir)
     )
     if partitioned:
-        if aggressive:
-            raise ValueError(
-                "aggressive vacuum merges commits across run_ids (whole-"
-                "table); not supported on a partitioned checkpoint dir"
-            )
         wanted = set(runs) if runs is not None else None
         matched: set = set()
         for sd in sorted(os.listdir(checkpoint_dir)):
@@ -684,13 +668,10 @@ def vacuum_checkpoint(
             "runs= targeting requires a partitioned checkpoint dir "
             "(write_records_and_checkpoint(partition_lineage=True))"
         )
-    keys = (
-        ["stage", "tile_id"] if aggressive else ["stage", "run_id", "tile_id"]
-    )
     _vacuum_swap(
         spark,
         checkpoint_dir,
-        keys,
+        ["stage", "run_id", "tile_id"],
         checkpoint_dir.rstrip("/") + ".vacuum-tmp",
         checkpoint_dir.rstrip("/") + ".vacuum-old",
     )

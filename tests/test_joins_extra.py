@@ -59,26 +59,6 @@ def test_knn_ring_expansion_fills_sparse_neighborhoods(spark):
     assert {r["count"] for r in got} == {3} and len(got) == 5
 
 
-def test_knn_salted_equals_unsalted(spark):
-    """J7 wired into the G5 prefix join: salted kNN == unsalted kNN."""
-    rng = np.random.default_rng(33)
-    # hot prefix: 300 of 400 candidates in one dense cluster
-    c_lat = np.concatenate([rng.uniform(50.0, 50.5, 300), rng.uniform(42, 70, 100)])
-    c_lon = np.concatenate([rng.uniform(-100.5, -100.0, 300), rng.uniform(-140, -60, 100)])
-    q = pd.DataFrame({"qid": np.arange(20), "q_lat": rng.uniform(49.8, 50.7, 20),
-                      "q_lon": rng.uniform(-100.8, -99.8, 20)})
-    c = pd.DataFrame({"cid": np.arange(400), "c_lat": c_lat, "c_lon": c_lon})
-    qdf = spark.createDataFrame(q).withColumn(
-        "cell_id", G.cell_encode_col(F.col("q_lon"), F.col("q_lat"), 12))
-    cdf = spark.createDataFrame(c).withColumn(
-        "cell_id", G.cell_encode_col(F.col("c_lon"), F.col("c_lat"), 12))
-    kw = dict(k=5, query_id="qid", cand_id="cid", prefix_level=4,
-              broadcast_candidates=False, expand_underfilled=True)
-    plain = {(r.qid, r.cid) for r in G.knn_join(qdf, cdf, **kw).collect()}
-    salted = {(r.qid, r.cid) for r in G.knn_join(qdf, cdf, salt=8, **kw).collect()}
-    assert plain == salted and len(plain) == 100  # 20 queries x k=5
-
-
 def test_asof_tolerance_and_forward(spark):
     """merge_asof surface: forward direction + tolerance vs brute force."""
     import datetime as dt

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from harvester_fgp_spark.functions.text import mine_payloads
@@ -70,6 +71,15 @@ def test_native_engine_record_identical_to_fused(spark):
         kb = sorted(map(tuple, b))
         assert len(ka) > 100
         assert ka == kb, f"keep_text={keep_text}"
+
+
+def test_unknown_engine_is_refused(spark):
+    """A misspelt engine must fail at build time, not silently run the
+    fused plan."""
+    pages = pages_df(spark, 20, seed=3)
+    polys = generate_polygons(5, seed=3)
+    with pytest.raises(ValueError, match="engine"):
+        mine_records(spark, pages, polys, engine="nativ")
 
 
 def test_native_text_plan_has_zero_python(spark):

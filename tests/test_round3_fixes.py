@@ -5,9 +5,9 @@
    audit has to reduce to the latest commit before aggregating.
 2. stream_dedup_first_seen must emit the MIN warc_ts of the trigger, not
    an arbitrary chunk's first row (shuffle-order nondeterminism).
-3. minhash_near_dup_pairs(broadcast_candidates=False) — the guard for
-   duplicate-heavy corpora where the candidate id set outgrows a
-   broadcast — must return identical pairs.
+3. minhash_near_dup_pairs on a duplicate-heavy corpus — where the
+   candidate pair set outgrows MAX_BROADCAST_PAIRS and the verify join
+   plans shuffled — must return the identical pairs.
 4. The A4 centroid kernel's centi-degree rounding breaks ties exactly
    like the DuckDB oracle's FLOOR(x*100 + 0.5) longhand.
 """
@@ -60,7 +60,7 @@ def test_verify_lineage_streaming_replayed_batch(spark, tmp_path):
     C.write_stream_batch(b0, out, cp, run_id="s", batch_id=0)
     C.write_stream_batch(b1, out, cp, run_id="s", batch_id=1)
     C.write_stream_batch(b1, out, cp, run_id="s", batch_id=1)  # replayed batch
-    assert C.verify_lineage(spark, out, cp, per_batch=True).count() == 0
+    assert C.verify_lineage(spark, out, cp).count() == 0
 
 
 def test_stream_first_seen_emits_min_warc_ts(spark, tmp_path):
@@ -110,8 +110,8 @@ def test_stream_first_seen_emits_min_warc_ts(spark, tmp_path):
     assert rows[0].warc_ts == pd.Timestamp("2024-01-02")
 
 
-def test_minhash_unbroadcast_candidates_identical(spark, sf_dir):
-    from harvester_fgp_spark.operators.dedup import minhash_near_dup_pairs
+def test_minhash_unbroadcast_candidates_identical(spark, sf_dir, monkeypatch):
+    from harvester_fgp_spark.operators import dedup
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -119,8 +119,9 @@ def test_minhash_unbroadcast_candidates_identical(spark, sf_dir):
         .select("doc_id", "text")
     )
     corpus = docs.unionByName(docs.withColumn("doc_id", F.col("doc_id") + 10000))
-    a = minhash_near_dup_pairs(corpus).collect()
-    b = minhash_near_dup_pairs(corpus, broadcast_candidates=False).collect()
+    a = dedup.minhash_near_dup_pairs(corpus).collect()
+    monkeypatch.setattr(dedup, "MAX_BROADCAST_PAIRS", 0)
+    b = dedup.minhash_near_dup_pairs(corpus).collect()
     key = lambda r: (r.id_a, r.id_b)  # noqa: E731
     assert sorted(map(key, a)) == sorted(map(key, b))
     assert len(a) >= 100  # the planted duplicates are found

@@ -123,10 +123,6 @@ def test_partitioned_vacuum_touches_only_target_runs(spark, tmp_path):
     assert full.filter(F.col("run_id") == "r2").count() == n_r2
     assert CP.verify_lineage(spark, out, cp).count() == 0
 
-    # aggressive (cross-run merge) is whole-table: refused when partitioned
-    with pytest.raises(ValueError):
-        CP.vacuum_checkpoint(spark, cp, aggressive=True)
-
 
 def test_partitioned_vacuum_crash_recovery(spark, tmp_path):
     """A crash between the two swap renames leaves the only copy of a
@@ -149,21 +145,6 @@ def test_partitioned_vacuum_crash_recovery(spark, tmp_path):
     CP.vacuum_checkpoint(spark, cp, runs=["r2"])
     assert os.path.isdir(leaf)
     assert CP.verify_lineage(spark, out, cp).count() == 0
-
-
-def test_resume_filter_unbroadcast_identical(spark, tmp_path):
-    """broadcast_done=False (the 10^8-tile shape) must keep the result
-    identical to the broadcast default — only the plan changes."""
-    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
-    recs = _records(spark)
-    CP.write_records_and_checkpoint(recs, out, cp, "r1")
-    a = CP.resume_filter(recs, spark, cp).count()
-    b = CP.resume_filter(recs, spark, cp, broadcast_done=False).count()
-    assert a == b == 0  # everything committed -> nothing pending
-    fresh = recs.withColumn("tile_id", F.col("tile_id") + 1)
-    a2 = CP.resume_filter(fresh, spark, cp).count()
-    b2 = CP.resume_filter(fresh, spark, cp, broadcast_done=False).count()
-    assert a2 == b2 > 0
 
 
 def test_runs_filter_requires_partitioned_dir(spark, tmp_path):

@@ -10,6 +10,7 @@ import pyspark.sql.functions as F
 import pytest
 
 import __spark_entry__ as E
+from tests.conftest import plan_string as _plan
 
 
 def test_session_window_boundary_semantics(spark):
@@ -101,42 +102,41 @@ def _dup_corpus(spark):
     return spark.createDataFrame(base + dups, "doc_id long, text string")
 
 
+def _pairs_and_plan(df):
+    """Plan and verified pairs with size-based broadcasting off, so the
+    plan shows only the operator's own broadcast choice."""
+    spark = df.sparkSession
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        return sorted(map(tuple, df.collect())), _plan(df)
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
 def test_minhash_auto_broadcast_parity(spark):
-    """Auto mode (broadcast_candidates=None, the round-6 default) must
-    return exactly the forced-broadcast / forced-shuffle pair sets."""
+    """A small candidate set (far below MAX_BROADCAST_PAIRS) is
+    broadcast — the candidate pairs, never the corpus — and every planted
+    twin is verified."""
     from harvester_fgp_spark.operators.dedup import minhash_near_dup_pairs
 
-    corpus = _dup_corpus(spark)
-    auto = sorted(map(tuple, minhash_near_dup_pairs(corpus).collect()))
-    forced = sorted(
-        map(
-            tuple,
-            minhash_near_dup_pairs(corpus, broadcast_candidates=True).collect(),
-        )
-    )
-    assert auto == forced and len(auto) >= 10
+    pairs, plan = _pairs_and_plan(minhash_near_dup_pairs(_dup_corpus(spark)))
+    bcast = plan.split("BroadcastExchange", 1)[1]
+    assert "explode(array(id_a" in bcast and "FileScan" not in bcast
+    assert {(i, i + 1000) for i in range(10)} <= {p[:2] for p in pairs}
 
 
 def test_auto_broadcast_flips_on_dup_heavy_corpus(spark, monkeypatch):
     """With MAX_BROADCAST_PAIRS forced to 0 every corpus counts as
-    dup-heavy: the auto path must take the shuffled plan and still return
-    the identical verified pairs (driver-OOM guard, round-5 watch item)."""
+    dup-heavy: the verify join must take the shuffled plan and still
+    return the identical verified pairs (driver-OOM guard)."""
     from harvester_fgp_spark.operators import dedup
 
-    monkeypatch.setattr(dedup, "MAX_BROADCAST_PAIRS", 0)
     corpus = _dup_corpus(spark)
-    shuffled_auto = sorted(
-        map(tuple, dedup.minhash_near_dup_pairs(corpus).collect())
-    )
-    forced = sorted(
-        map(
-            tuple,
-            dedup.minhash_near_dup_pairs(
-                corpus, broadcast_candidates=True
-            ).collect(),
-        )
-    )
-    assert shuffled_auto == forced
+    auto, _ = _pairs_and_plan(dedup.minhash_near_dup_pairs(corpus))
+    monkeypatch.setattr(dedup, "MAX_BROADCAST_PAIRS", 0)
+    shuffled, plan = _pairs_and_plan(dedup.minhash_near_dup_pairs(corpus))
+    assert "BroadcastExchange" not in plan
+    assert shuffled == auto and len(auto) >= 10
 
 
 def test_partition_lineage_reads_numeric_run_id_as_string(spark, tmp_path):

@@ -320,24 +320,6 @@ def test_repetition_stats_shuffle_free(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
-def test_repetition_stats_custom_sep_matches_arrow_path(spark):
-    """The regex-separator fallback is a different physical plan (staged
-    native HOFs, still shuffle-free); on single-space text both paths
-    must agree row-for-row."""
-    docs = spark.createDataFrame(
-        [(0, "a b a b a"), (1, "x y z"), (2, "solo"), (3, "t t t t")],
-        "doc_id long, text string",
-    )
-    arrow_rows = {
-        r["doc_id"]: r.asDict() for r in repetition_stats(docs).collect()
-    }
-    native = repetition_stats(docs, sep="[ ]")
-    plan = plan_string(native)
-    assert "Exchange" not in plan and "MapInArrow" not in plan
-    native_rows = {r["doc_id"]: r.asDict() for r in native.collect()}
-    assert arrow_rows == native_rows
-
-
 # --- track stops (stay-point detection) -------------------------------------
 
 
@@ -729,118 +711,6 @@ def test_bbox_overlap_join_property_random_levels(spark):
     assert all((i, i) in set(exp) for i in range(n))
 
 
-# --- Hilbert encode ---------------------------------------------------------
-
-
-def _ref_hilbert(level, x, y):
-    d = 0
-    s = 1 << (level - 1)
-    while s > 0:
-        rx = 1 if (x & s) > 0 else 0
-        ry = 1 if (y & s) > 0 else 0
-        d += s * s * ((3 * rx) ^ ry)
-        if ry == 0:
-            if rx == 1:
-                x = s - 1 - x
-                y = s - 1 - y
-            x, y = y, x
-        s //= 2
-    return d
-
-
-def test_hilbert_matches_reference_and_is_unit_step(spark):
-    from harvester_fgp_spark.operators.geo import hilbert_encode_col
-
-    level, n = 4, 16
-    # one point per grid cell (cell centers)
-    rows = [
-        (
-            (gx + 0.5) / n * 360.0 - 180.0,
-            90.0 - (gy + 0.5) / n * 180.0,
-            gx,
-            gy,
-        )
-        for gx in range(n)
-        for gy in range(n)
-    ]
-    df = spark.createDataFrame(
-        rows, "lon double, lat double, gx int, gy int"
-    ).select(
-        "gx", "gy", hilbert_encode_col(F.col("lon"), F.col("lat"), level).alias("hd")
-    )
-    pdf = df.toPandas()
-    # reference parity on every cell
-    for r in pdf.itertuples(index=False):
-        assert r.hd == _ref_hilbert(level, r.gx, r.gy), (r.gx, r.gy)
-    # bijective + unit-step path (THE Hilbert property)
-    path = pdf.sort_values("hd")[["gx", "gy"]].to_numpy()
-    assert len(set(pdf.hd)) == n * n
-    steps = np.abs(np.diff(path, axis=0)).sum(axis=1)
-    assert (steps == 1).all()
-
-
-def test_hilbert_prefix_hierarchy_and_locality(spark):
-    from harvester_fgp_spark.operators.geo import (
-        cell_encode_col,
-        hilbert_encode_col,
-    )
-
-    rng = np.random.default_rng(41)
-    pdf = pd.DataFrame(
-        {
-            "lon": rng.uniform(-179, 179, 300),
-            "lat": rng.uniform(-85, 85, 300),
-        }
-    )
-    df = spark.createDataFrame(pdf).select(
-        hilbert_encode_col(F.col("lon"), F.col("lat"), 6).alias("h6"),
-        hilbert_encode_col(F.col("lon"), F.col("lat"), 5).alias("h5"),
-    )
-    out = df.toPandas()
-    # id >> 2 IS the parent id — the same shift J3 uses on Morton cells
-    assert (out.h6 // 4 == out.h5).all()
-
-    # locality: a rectangle range-query covers FEWER contiguous id runs
-    # under Hilbert than Morton (Moon et al. 1996 — the actual metric a
-    # range scan cares about; mean neighbor |Δid| favors Morton and is
-    # the wrong measure). Measured here: ~8.1 vs ~14.3 runs per 8x8
-    # window at level 6.
-    level, n = 6, 64
-    rows = [
-        (
-            (gx + 0.5) / n * 360.0 - 180.0,
-            90.0 - (gy + 0.5) / n * 180.0,
-            gx,
-            gy,
-        )
-        for gx in range(n)
-        for gy in range(n)
-    ]
-    grid = spark.createDataFrame(rows, "lon double, lat double, gx int, gy int")
-    enc = grid.select(
-        "gx",
-        "gy",
-        hilbert_encode_col(F.col("lon"), F.col("lat"), level).alias("h"),
-        cell_encode_col(F.col("lon"), F.col("lat"), level).alias("m"),
-    ).toPandas()
-    hmap = {(r.gx, r.gy): r.h for r in enc.itertuples(index=False)}
-    mmap = {(r.gx, r.gy): r.m for r in enc.itertuples(index=False)}
-
-    def runs(ids):
-        ids = np.sort(np.array(ids))
-        return 1 + int((np.diff(ids) > 1).sum())
-
-    rng2 = np.random.default_rng(1)
-    h_runs, m_runs = [], []
-    for _ in range(100):
-        x0 = int(rng2.integers(0, n - 8))
-        y0 = int(rng2.integers(0, n - 8))
-        cells = [(x0 + i, y0 + j) for i in range(8) for j in range(8)]
-        h_runs.append(runs([hmap[c] for c in cells]))
-        m_runs.append(runs([mmap[c] for c in cells]))
-    assert np.mean(h_runs) < np.mean(m_runs)
-
-
 def test_radius_search_is_equi_join(spark):
     """The geohash expansion must reach the join as an equi-join on the
     cell string — a nested-loop fallback would mean the candidate
@@ -851,32 +721,6 @@ def test_radius_search_is_equi_join(spark):
     plan = plan_string(df)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_with_hilbert_matches_expression_and_goes_deeper(spark):
-    from harvester_fgp_spark.operators.geo import (
-        hilbert_encode_col,
-        with_hilbert,
-    )
-
-    rng = np.random.default_rng(77)
-    pdf = pd.DataFrame(
-        {
-            "lon": rng.uniform(-180, 180, 400),
-            "lat": rng.uniform(-90, 90, 400),
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    both = with_hilbert(df, "lon", "lat", level=6, out="h_staged").select(
-        "h_staged",
-        hilbert_encode_col(F.col("lon"), F.col("lat"), 6).alias("h_expr"),
-    )
-    out = both.toPandas()
-    assert (out.h_staged == out.h_expr).all()
-    # the staged builder reaches levels the single expression can't
-    deep = with_hilbert(df, "lon", "lat", level=12, out="h12").toPandas()
-    assert deep.h12.between(0, (1 << 24) - 1).all()
-    assert deep.h12.nunique() > 390  # 4096^2 cells: 400 points spread out
 
 
 def test_hilbert_decode_roundtrips(spark):
