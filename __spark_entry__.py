@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from harvester_fgp_spark.geo.cells import morton_interleave_sql
+from harvester_fgp_spark.geo.cells import bbox_grid, morton_interleave_sql
 from harvester_fgp_spark.operators import geo as G
 from harvester_fgp_spark.plans import derived as D
 from harvester_fgp_spark.sources.tables import read_testdata
@@ -124,17 +124,12 @@ def _boxes_with_cover(spark: SparkSession) -> DataFrame:
     """Boxes + exploded COVER_LEVEL cell cover — fully NATIVE G2 for
     rectangles: sequence() + explode + Morton interleave in codegen."""
     bx = D.boxes(spark)
-    x0, y1 = D.grid_xy_cols(F.col("west"), F.col("south"), CELL_LEVEL)
-    x1, y0 = D.grid_xy_cols(F.col("east"), F.col("north"), CELL_LEVEL)
+    x0, y1 = G.grid_xy_cols(F.col("west"), F.col("south"), CELL_LEVEL)
+    x1, y0 = G.grid_xy_cols(F.col("east"), F.col("north"), CELL_LEVEL)
     return (
         bx.withColumn("gx", F.explode(F.sequence(x0, x1)))
         .withColumn("gy", F.explode(F.sequence(y0, y1)))
-        .withColumn(
-            "cover_cell",
-            G._spread_bits_col(F.col("gx")).bitwiseOR(
-                F.shiftleft(G._spread_bits_col(F.col("gy")), 1)
-            ),
-        )
+        .withColumn("cover_cell", G.morton_col(F.col("gx"), F.col("gy")))
     )
 
 
@@ -447,8 +442,8 @@ def _q_geo_bbox_cover_wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified per box against the DuckDB longhand (mixed fixture: 1/3
     ordinary boxes exercise the straight branch)."""
     bx = D.wrapped_boxes(spark)
-    x0, y1 = D.grid_xy_cols(F.col("west"), F.col("south"), CELL_LEVEL)
-    x1, y0 = D.grid_xy_cols(F.col("east"), F.col("north"), CELL_LEVEL)
+    x0, y1 = G.grid_xy_cols(F.col("west"), F.col("south"), CELL_LEVEL)
+    x1, y0 = G.grid_xy_cols(F.col("east"), F.col("north"), CELL_LEVEL)
     nmax = F.lit((1 << CELL_LEVEL) - 1).cast("long")
     zero = F.lit(0).cast("long")
     xs = F.when(
@@ -464,12 +459,7 @@ def _q_geo_bbox_cover_wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ctr_tile_y", ty.cast("long"))
         .withColumn("gx", F.explode(xs))
         .withColumn("gy", F.explode(F.sequence(y0, y1)))
-        .withColumn(
-            "cover_cell",
-            G._spread_bits_col(F.col("gx")).bitwiseOR(
-                F.shiftleft(G._spread_bits_col(F.col("gy")), 1)
-            ),
-        )
+        .withColumn("cover_cell", G.morton_col(F.col("gx"), F.col("gy")))
     )
     return covered.groupBy("box_id", "ctr_tile_x", "ctr_tile_y").agg(
         F.count("*").alias("n_cells"),
@@ -2529,21 +2519,8 @@ def _q_geo_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # integer geohash-2 WORD as the join key (the base32 string is just
     # a rendering of these bits — joining on the long skips 9 big char-
     # builder expressions per row; measured 4.2 s -> see commit)
-    def _gh2_word(lon: "F.Column", lat: "F.Column") -> "tuple":
-        nq = 1 << 5
-        lonq = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(nq)))
-        latq = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(nq)))
-        lonq = F.greatest(F.lit(0), F.least(F.lit(nq - 1), lonq)).cast("long")
-        latq = F.greatest(F.lit(0), F.least(F.lit(nq - 1), latq)).cast("long")
-        return lonq, latq
-
-    def _word(lonq: "F.Column", latq: "F.Column") -> "F.Column":
-        return G._spread_bits_col(latq).bitwiseOR(
-            F.shiftleft(G._spread_bits_col(lonq), 1)
-        )
-
-    nq = 1 << 5
-    q_lonq, q_latq = _gh2_word(F.col("q_lon"), F.col("q_lat"))
+    nq = 1 << 5  # cells per axis at precision 2
+    q_lonq, q_latq = G.geohash_quantize_col(F.col("q_lon"), F.col("q_lat"), 2)
     qq = qs.select("q_id", "q_lat", "q_lon",
                    q_lonq.alias("_lq"), q_latq.alias("_tq"))
     offs = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
@@ -2572,15 +2549,15 @@ def _q_geo_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             "q_lat",
             "q_lon",
-            _word(F.col("_nb.lq"), F.col("_nb.tq")).alias("ghw"),
+            G.morton_col(F.col("_nb.tq"), F.col("_nb.lq")).alias("ghw"),
         )
     )
-    c_lonq, c_latq = _gh2_word(F.col("lon"), F.col("lat"))
+    c_lonq, c_latq = G.geohash_quantize_col(F.col("lon"), F.col("lat"), 2)
     cand = pts.select(
         F.col("doc_id").alias("c_id"),
         F.col("lat").alias("c_lat"),
         F.col("lon").alias("c_lon"),
-        _word(c_lonq, c_latq).alias("ghw"),
+        G.morton_col(c_latq, c_lonq).alias("ghw"),
     )
     d_units = F.round(
         F.round(
@@ -3023,10 +3000,10 @@ def _text_analysis_oracle(
 def oracle_sql() -> dict[str, str]:
     pts = D.POINTS_SQL
     boxes = D.BOXES_SQL
-    gx5, gy5 = D.grid_xy_sql("lon", "lat", CELL_LEVEL)
+    gx5, gy5 = G.grid_xy_sql("lon", "lat", CELL_LEVEL)
     morton5 = morton_interleave_sql("gx", "gy", CELL_LEVEL)
-    bgx0, bgy1 = D.grid_xy_sql("west", "south", CELL_LEVEL)
-    bgx1, bgy0 = D.grid_xy_sql("east", "north", CELL_LEVEL)
+    bgx0, bgy1 = G.grid_xy_sql("west", "south", CELL_LEVEL)
+    bgx1, bgy0 = G.grid_xy_sql("east", "north", CELL_LEVEL)
     merc = 85.05112878
 
     def _tile_sql(z: int) -> tuple[str, str]:
@@ -3162,24 +3139,11 @@ def oracle_sql() -> dict[str, str]:
     hrs_ctes, hrs_final = G.hilbert_sql_ctes(
         "lon", "lat", _HRS_LEVEL, "doc_id"
     )
-    import numpy as _np
-
-    from harvester_fgp_spark.geo import cells as _hrs_cells
-
-    _hrs_n = 1 << _HRS_LEVEL
-    _hx0, _hy1 = _hrs_cells.lonlat_to_xy(
-        _np.array([_HRS_BBOX[0]]), _np.array([_HRS_BBOX[1]]), _HRS_LEVEL
-    )
-    _hx1, _hy0 = _hrs_cells.lonlat_to_xy(
-        _np.array([_HRS_BBOX[2]]), _np.array([_HRS_BBOX[3]]), _HRS_LEVEL
-    )
+    _hx0, _hx1, _hy0, _hy1 = bbox_grid(*_HRS_BBOX, _HRS_LEVEL)
+    _hgx, _hgy = G.grid_xy_sql("lon", "lat", _HRS_LEVEL)
     hrs_rect = (
-        f"GREATEST(0, LEAST({_hrs_n - 1}, CAST(FLOOR((lon + 180.0) / 360.0 "
-        f"* {float(_hrs_n)}) AS BIGINT))) BETWEEN {int(_hx0[0])} "
-        f"AND {int(_hx1[0])} AND "
-        f"GREATEST(0, LEAST({_hrs_n - 1}, CAST(FLOOR((90.0 - lat) / 180.0 "
-        f"* {float(_hrs_n)}) AS BIGINT))) BETWEEN {int(_hy0[0])} "
-        f"AND {int(_hy1[0])}"
+        f"{_hgx} BETWEEN {_hx0} AND {_hx1} AND "
+        f"{_hgy} BETWEEN {_hy0} AND {_hy1}"
     )
     ghp = G.geohash_sql_parts("lon", "lat", 6)
     ghn = G.geohash_sql_parts("lon", "lat", 6, "lonq2", "latq2")

@@ -82,9 +82,9 @@ def string_buffers(col) -> "tuple[np.ndarray, np.ndarray]":
 
 
 def space_token_arrays(
-    offsets: np.ndarray, data: np.ndarray, sep: int = 32
+    offsets: np.ndarray, data: np.ndarray
 ) -> "tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]":
-    """Vectorized split-on-byte tokenization for a whole batch.
+    """Vectorized split-on-space (0x20) tokenization for a whole batch.
 
     Returns ``(token_doc, starts, lengths, n_tok)``: one entry per token
     in (doc, position) order, absolute byte starts into ``data``, and
@@ -96,7 +96,7 @@ def space_token_arrays(
     arbitrarily)."""
     n_docs = len(offsets) - 1
     lo, hi = int(offsets[0]), int(offsets[-1])
-    spos = np.flatnonzero(data[lo:hi] == sep).astype(np.int64) + lo
+    spos = np.flatnonzero(data[lo:hi] == 0x20).astype(np.int64) + lo
     # separators lie strictly inside their doc's [d0, d1) span
     spd = np.searchsorted(offsets[1:], spos, side="right")
     n_tok = np.bincount(spd, minlength=n_docs).astype(np.int64) + 1

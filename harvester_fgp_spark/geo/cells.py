@@ -86,6 +86,16 @@ def lonlat_to_xy(
     return x, y
 
 
+def bbox_grid(
+    west: float, south: float, east: float, north: float, level: int
+) -> tuple[int, int, int, int]:
+    """Grid rectangle ``(x0, x1, y0, y1)`` a bbox quantizes into at
+    ``level``: the SW corner gives (x0, y1) and the NE corner (x1, y0),
+    since y grows southward."""
+    x, y = lonlat_to_xy(np.array([west, east]), np.array([south, north]), level)
+    return int(x[0]), int(x[1]), int(y[1]), int(y[0])
+
+
 def interleave_xy(x: np.ndarray, y: np.ndarray) -> np.ndarray:
     """Morton interleave of grid positions -> int64 cell ids."""
     return (_part1by1(x) | (_part1by1(y) << np.uint64(1))).astype(np.int64)
@@ -158,21 +168,19 @@ def cover_bbox(
     """
     if south > north:
         return np.empty(0, dtype=np.int64)
-    x0, y1 = lonlat_to_xy(np.array([west]), np.array([south]), level)
-    x1, y0 = lonlat_to_xy(np.array([east]), np.array([north]), level)
-    n = np.int64(1) << np.int64(level)
+    x0, x1, y0, y1 = bbox_grid(west, south, east, north, level)
     if west > east:
         xs = np.unique(
             np.concatenate(
                 [
-                    np.arange(int(x0[0]), int(n), dtype=np.int64),
-                    np.arange(0, int(x1[0]) + 1, dtype=np.int64),
+                    np.arange(x0, 1 << level, dtype=np.int64),
+                    np.arange(0, x1 + 1, dtype=np.int64),
                 ]
             )
         )
     else:
-        xs = np.arange(int(x0[0]), int(x1[0]) + 1, dtype=np.int64)
-    ys = np.arange(int(y0[0]), int(y1[0]) + 1, dtype=np.int64)
+        xs = np.arange(x0, x1 + 1, dtype=np.int64)
+    ys = np.arange(y0, y1 + 1, dtype=np.int64)
     gx, gy = np.meshgrid(xs, ys)
     cells = interleave_xy(gx.ravel(), gy.ravel())
     cells.sort()

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import tokens as T
+from ..sources.tables import visible_entries
 
 NUM_PERM = 32
 NUM_BANDS = 8  # 4 rows per band
@@ -410,35 +411,16 @@ def _verify_candidate_pairs(
 BAND_KERNEL_VERSION = 2
 
 
-def _hadoop_path(spark, path: str):
-    """(FileSystem, Path) for ``path`` under the session's Hadoop conf."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
 def _store_kernel_version(spark, path: str) -> "int | None":
     """Version recorded in a band store's ``_kernel_version`` sidecar
     (underscore-prefixed: invisible to the data reads), or None when no
     marker exists. A marker that exists but cannot be read raises: an
     unreadable marker is damage, not a fresh store."""
     marker = f"{path}/_kernel_version"
-    fs, p = _hadoop_path(spark, marker)
-    if not fs.exists(p):
+    if visible_entries(spark, marker) is None:
         return None
     row = spark.read.parquet(marker).first()
     return None if row is None else int(row["kernel_version"])
-
-
-def _store_has_data(spark, path: str) -> bool:
-    """True when ``path`` holds any entry besides hidden (``_``/``.``)
-    ones — band partitions or files from some earlier writer."""
-    fs, p = _hadoop_path(spark, path)
-    if not fs.exists(p):
-        return False
-    return any(
-        not st.getPath().getName().startswith(("_", "."))
-        for st in fs.listStatus(p)
-    )
 
 
 def update_minhash_store(
@@ -465,7 +447,9 @@ def update_minhash_store(
     no marker (its era is unknown). An unreadable marker raises too."""
     spark = docs.sparkSession
     stored = _store_kernel_version(spark, path)
-    if stored is None and _store_has_data(spark, path):
+    # any visible entry is band data (partitions or files) from some
+    # earlier writer
+    if stored is None and visible_entries(spark, path):
         raise ValueError(
             f"minhash store {path} holds band data but no _kernel_version "
             "marker, so its signature-kernel era is unknown; rebuild the "
@@ -506,7 +490,6 @@ def minhash_incremental_pairs(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_bucket_size: "int | None" = MAX_INCREMENTAL_BUCKET,
 ) -> DataFrame:
     """Near-dup pairs for an INCREMENTAL batch against itself plus the
     signature store (update_minhash_store layout) — old signatures are
@@ -525,13 +508,12 @@ def minhash_incremental_pairs(
     but the STORE may carry foreign-writer rows, and a pathological hot
     bucket (boilerplate, contentless docs signed before the guard
     existed) would otherwise build one giant member array on a single
-    task. With ``max_bucket_size`` set (default), bucket sizes are
-    counted FIRST on the materialized fixed-width band rows and only
-    (1, max] buckets ever reach ``collect_list`` — the oversize array is
-    never built — and every exclusion is reported via ``warnings.warn``
-    with bucket count, worst size, and skipped-pair volume, so silent
-    under-reporting is impossible. ``max_bucket_size=None`` restores the
-    single-pass unguarded plan. Either way the candidate pairs are
+    task. So bucket sizes are counted FIRST on the materialized
+    fixed-width band rows and only (1, MAX_INCREMENTAL_BUCKET] buckets
+    ever reach ``collect_list`` — the oversize array is never built —
+    and every exclusion is reported via ``warnings.warn`` with bucket
+    count, worst size, and skipped-pair volume, so silent
+    under-reporting is impossible. The candidate pairs are
     localCheckpointed and counted, and broadcast into the verify join
     only at or below MAX_BROADCAST_PAIRS.
 
@@ -565,49 +547,43 @@ def minhash_incremental_pairs(
         .filter(F.col(id_col).isNotNull() & F.col("bh").isNotNull())
         .withColumn("_new", F.lit(0))
     )
-    if max_bucket_size is not None:
-        # The guard consumes the band union TWICE (size screen + member
-        # join) and Spark never CSEs multi-consumer subtrees — so
-        # materialize ONLY the new batch's rows (the part whose
-        # signature kernel must run once); the store side is already
-        # parquet and re-scans at columnar cost. Checkpointing the whole
-        # union would write O(store) rows into executor storage per
-        # batch, growing with every batch (round-7 review finding).
-        new_bands = new_bands.localCheckpoint()
+    # The guard consumes the band union TWICE (size screen + member
+    # join) and Spark never CSEs multi-consumer subtrees — so
+    # materialize ONLY the new batch's rows (the part whose signature
+    # kernel must run once); the store side is already parquet and
+    # re-scans at columnar cost. Checkpointing the whole union would
+    # write O(store) rows into executor storage per batch, growing with
+    # every batch (round-7 review finding).
+    new_bands = new_bands.localCheckpoint()
     allb = old_bands.unionByName(
         new_bands.select(id_col, "band", "bh", "_new")
     )
-    if max_bucket_size is not None:
-        sizes = allb.groupBy("band", "bh").agg(
-            F.count("*").alias("_k"), F.max("_new").alias("_has_new")
-        )
-        over = sizes.filter(F.col("_k") > max_bucket_size)
-        diag = over.agg(
-            F.count("*").alias("nb"),
-            F.max("_k").alias("mx"),
-            F.sum(
-                F.col("_k") * (F.col("_k") - F.lit(1)) / F.lit(2)
-            ).alias("np"),
-        ).first()
-        if diag["nb"]:
-            import warnings
+    cap = MAX_INCREMENTAL_BUCKET
+    sizes = allb.groupBy("band", "bh").agg(
+        F.count("*").alias("_k"), F.max("_new").alias("_has_new")
+    )
+    over = sizes.filter(F.col("_k") > cap)
+    diag = over.agg(
+        F.count("*").alias("nb"),
+        F.max("_k").alias("mx"),
+        F.sum(F.col("_k") * (F.col("_k") - F.lit(1)) / F.lit(2)).alias("np"),
+    ).first()
+    if diag["nb"]:
+        import warnings
 
-            warnings.warn(
-                f"minhash_incremental_pairs: EXCLUDED {diag['nb']} "
-                f"degenerate bucket(s) over max_bucket_size="
-                f"{max_bucket_size} (largest {diag['mx']} members, "
-                f"~{int(diag['np'])} candidate pairs skipped). These are "
-                "near-certainly contentless/boilerplate collisions; "
-                "raise max_bucket_size or clean the store if they are "
-                "real near-dup clusters.",
-                stacklevel=2,
-            )
-        ok = sizes.filter(
-            (F.col("_k") > 1)
-            & (F.col("_k") <= max_bucket_size)
-            & (F.col("_has_new") == 1)
-        ).select("band", "bh")
-        allb = allb.join(ok, ["band", "bh"])
+        warnings.warn(
+            f"minhash_incremental_pairs: EXCLUDED {diag['nb']} "
+            f"degenerate bucket(s) over MAX_INCREMENTAL_BUCKET={cap} "
+            f"(largest {diag['mx']} members, ~{int(diag['np'])} "
+            "candidate pairs skipped). These are near-certainly "
+            "contentless/boilerplate collisions; clean the store if "
+            "they are real near-dup clusters.",
+            stacklevel=2,
+        )
+    ok = sizes.filter(
+        (F.col("_k") > 1) & (F.col("_k") <= cap) & (F.col("_has_new") == 1)
+    ).select("band", "bh")
+    allb = allb.join(ok, ["band", "bh"])
     buckets = (
         allb.groupBy("band", "bh")
         .agg(

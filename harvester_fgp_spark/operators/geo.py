@@ -60,6 +60,34 @@ def _spread_bits_col(v: Column) -> Column:
     return v
 
 
+def grid_xy_cols(lon: Column, lat: Column, level: int) -> "tuple[Column, Column]":
+    """Level-k grid quantization (x from lon, y from 90-lat, clamped) as
+    native expressions — the ONE Spark form of geo.cells.lonlat_to_xy
+    (same IEEE op order), shared by every cell key, cover and Hilbert id."""
+    n = 1 << level
+    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
+    y = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(float(n)))
+    nmax, zero = F.lit(n - 1), F.lit(0)
+    return (
+        F.greatest(zero, F.least(nmax, x)).cast("long"),
+        F.greatest(zero, F.least(nmax, y)).cast("long"),
+    )
+
+
+def grid_xy_sql(lon_expr: str, lat_expr: str, level: int) -> "tuple[str, str]":
+    """DuckDB longhand twin of ``grid_xy_cols``."""
+    n = 1 << level
+    x = f"GREATEST(0, LEAST({n - 1}, CAST(FLOOR(({lon_expr} + 180.0) / 360.0 * {float(n)}) AS BIGINT)))"
+    y = f"GREATEST(0, LEAST({n - 1}, CAST(FLOOR((90.0 - {lat_expr}) / 180.0 * {float(n)}) AS BIGINT)))"
+    return x, y
+
+
+def morton_col(x: Column, y: Column) -> Column:
+    """Morton interleave of grid positions, x in the even bits — the
+    Spark twin of geo.cells.interleave_xy."""
+    return _spread_bits_col(x).bitwiseOR(F.shiftleft(_spread_bits_col(y), 1))
+
+
 def cell_encode_col(
     lon: Column, lat: Column, level: int = _cells.DEFAULT_LEVEL
 ) -> Column:
@@ -69,13 +97,7 @@ def cell_encode_col(
     quantization, same interleave); equality is property-tested in
     tests/test_operators_spark.py.
     """
-    n = 1 << level
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    y = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(float(n)))
-    nmax, zero = F.lit(n - 1), F.lit(0)
-    x = F.greatest(zero, F.least(nmax, x)).cast("long")
-    y = F.greatest(zero, F.least(nmax, y)).cast("long")
-    return _spread_bits_col(x).bitwiseOR(F.shiftleft(_spread_bits_col(y), 1))
+    return morton_col(*grid_xy_cols(lon, lat, level))
 
 
 # --- G3: cell parent (NATIVE — stays in codegen) --------------------------------
@@ -464,6 +486,9 @@ def cell_boundary_dist_km(lat: Column, lon: Column, level: int) -> Column:
     early and escalates to level 0.
     """
     n = float(1 << level)
+    # grid_xy_cols' quantizer WITHOUT its clamp and long cast: at lon ==
+    # +180 x is n, whose west edge is the point itself (bound <= 0 as
+    # documented above); the edges below need the raw doubles
     x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n))
     y = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(n))
     west = x / F.lit(n) * F.lit(360.0) - F.lit(180.0)
@@ -659,7 +684,7 @@ def geohash_col(lon: Column, lat: Column, precision: int = 6) -> Column:
     engine an interchange cell id alongside the S2-style Morton cell —
     prefix joins and range scans work identically on either.
     """
-    lon_q, lat_q = _geohash_quantize(lon, lat, precision)
+    lon_q, lat_q = geohash_quantize_col(lon, lat, precision)
     return _geohash_chars(lon_q, lat_q, precision)
 
 
@@ -669,9 +694,12 @@ def _geohash_precision_check(precision: int) -> int:
     return 5 * precision // 2
 
 
-def _geohash_quantize(
+def geohash_quantize_col(
     lon: Column, lat: Column, precision: int
 ) -> "tuple[Column, Column]":
+    """(lon_q, lat_q): the geohash grid at ``precision`` (5*precision/2
+    bits per axis, lat measured from the south pole, clamped);
+    ``morton_col(lat_q, lon_q)`` is the integer geohash word."""
     half_bits = _geohash_precision_check(precision)
     n = float(1 << half_bits)
     nmax = F.lit((1 << half_bits) - 1)
@@ -685,9 +713,7 @@ def _geohash_quantize(
 def _geohash_chars(lon_q: Column, lat_q: Column, precision: int) -> Column:
     # geohash bit 0 (MSB) is a lon bit; with even total bits the MSB sits
     # at an odd LSB-position, so lon takes the shifted spread lane
-    word = _spread_bits_col(lat_q).bitwiseOR(
-        F.shiftleft(_spread_bits_col(lon_q), 1)
-    )
+    word = morton_col(lat_q, lon_q)
     alphabet = F.array(*[F.lit(c) for c in GEOHASH_BASE32])
     chars = [
         F.element_at(
@@ -719,7 +745,7 @@ def geohash_neighbors_col(
     """
     half_bits = _geohash_precision_check(precision)
     n = 1 << half_bits
-    lon_q, lat_q = _geohash_quantize(lon, lat, precision)
+    lon_q, lat_q = geohash_quantize_col(lon, lat, precision)
     out = []
     for dx in (-1, 0, 1):
         for dy in (-1, 0, 1):
@@ -1078,8 +1104,6 @@ def bbox_overlap_join(
     join shuffles on an int cell key so AQE skew-split applies to dense
     cells. Pick ``level`` so typical boxes cover a handful of cells.
     """
-    from ..plans.derived import grid_xy_cols
-
     def _cover(df: DataFrame, pre: str) -> DataFrame:
         x0, y1 = grid_xy_cols(F.col("west"), F.col("south"), level)
         x1, y0 = grid_xy_cols(F.col("east"), F.col("north"), level)
@@ -1214,19 +1238,12 @@ def with_hilbert(
     """
     if not (1 <= level <= 16):
         raise ValueError("level in [1, 16]")
-    n = 1 << level
-    x = F.floor(
-        (F.col(lon_col) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))
-    )
-    y = F.floor(
-        (F.lit(90.0) - F.col(lat_col)) / F.lit(180.0) * F.lit(float(n))
-    )
-    nmax, zero = F.lit(n - 1), F.lit(0)
+    x, y = grid_xy_cols(F.col(lon_col), F.col(lat_col), level)
     base = [F.col(c) for c in df.columns]
     staged = df.select(
         *base,
-        F.greatest(zero, F.least(nmax, x)).cast("long").alias("_hx"),
-        F.greatest(zero, F.least(nmax, y)).cast("long").alias("_hy"),
+        x.alias("_hx"),
+        y.alias("_hy"),
         F.lit(0).cast("long").alias("_hd"),
     )
     for i in range(level - 1, -1, -1):
@@ -1376,15 +1393,7 @@ def _cover_grid(
     clamped), as flat meshgrid arrays."""
     if lon_max < lon_min or lat_max < lat_min:
         raise ValueError("bbox must satisfy lon_min<=lon_max, lat_min<=lat_max")
-    n = 1 << level
-    gx0, gy1 = _cells.lonlat_to_xy(
-        np.array([lon_min]), np.array([lat_min]), level
-    )
-    gx1, gy0 = _cells.lonlat_to_xy(
-        np.array([lon_max]), np.array([lat_max]), level
-    )
-    x0, x1 = int(gx0[0]), int(gx1[0])
-    y0, y1 = int(gy0[0]), int(gy1[0])
+    x0, x1, y0, y1 = _cells.bbox_grid(lon_min, lat_min, lon_max, lat_max, level)
     n_cells = (x1 - x0 + 1) * (y1 - y0 + 1)
     if n_cells > MAX_COVER_CELLS:
         raise ValueError(
@@ -1396,7 +1405,6 @@ def _cover_grid(
         np.arange(x0, x1 + 1, dtype=np.int64),
         np.arange(y0, y1 + 1, dtype=np.int64),
     )
-    _ = n  # quantization already clamped to [0, n)
     return xs.ravel(), ys.ravel()
 
 
@@ -1502,26 +1510,9 @@ def hilbert_range_scan(
         (F.col(id_col) >= F.col("_rlo")) & (F.col(id_col) <= F.col("_rhi")),
     ).drop("_rlo", "_rhi")
     if max_ranges is not None and lon_col is not None and lat_col is not None:
-        n = 1 << level
-        x = F.floor(
-            (F.col(lon_col) + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))
+        x, y = grid_xy_cols(F.col(lon_col), F.col(lat_col), level)
+        x0, x1, y0, y1 = _cells.bbox_grid(
+            lon_min, lat_min, lon_max, lat_max, level
         )
-        y = F.floor(
-            (F.lit(90.0) - F.col(lat_col)) / F.lit(180.0) * F.lit(float(n))
-        )
-        nmax, zero = F.lit(n - 1), F.lit(0)
-        x = F.greatest(zero, F.least(nmax, x)).cast("long")
-        y = F.greatest(zero, F.least(nmax, y)).cast("long")
-        gx0, gy1 = _cells.lonlat_to_xy(
-            np.array([lon_min]), np.array([lat_min]), level
-        )
-        gx1, gy0 = _cells.lonlat_to_xy(
-            np.array([lon_max]), np.array([lat_max]), level
-        )
-        out = out.filter(
-            (x >= int(gx0[0]))
-            & (x <= int(gx1[0]))
-            & (y >= int(gy0[0]))
-            & (y <= int(gy1[0]))
-        )
+        out = out.filter((x >= x0) & (x <= x1) & (y >= y0) & (y <= y1))
     return out

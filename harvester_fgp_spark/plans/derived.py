@@ -111,27 +111,6 @@ WRAP_BOXES_SQL = f"""
 """
 
 
-def grid_xy_cols(lon: F.Column, lat: F.Column, level: int) -> tuple[F.Column, F.Column]:
-    """Level-k grid quantization as NATIVE expressions (mirrors
-    geo.cells.lonlat_to_xy, same IEEE op order as GRID_XY_SQL)."""
-    n = 1 << level
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n)))
-    y = F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(float(n)))
-    nmax = F.lit(n - 1)
-    zero = F.lit(0)
-    return (
-        F.greatest(zero, F.least(nmax, x)).cast("long"),
-        F.greatest(zero, F.least(nmax, y)).cast("long"),
-    )
-
-
-def grid_xy_sql(lon_expr: str, lat_expr: str, level: int) -> tuple[str, str]:
-    n = 1 << level
-    x = f"GREATEST(0, LEAST({n - 1}, CAST(FLOOR(({lon_expr} + 180.0) / 360.0 * {float(n)}) AS BIGINT)))"
-    y = f"GREATEST(0, LEAST({n - 1}, CAST(FLOOR((90.0 - {lat_expr}) / 180.0 * {float(n)}) AS BIGINT)))"
-    return x, y
-
-
 # DBSCAN fixtures (round 3): every document becomes an integer
 # centi-degree point (same multipliers as points_from_documents, NOT
 # divided by 100 — the whole pipeline stays in int64 so the brute-force

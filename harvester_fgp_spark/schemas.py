@@ -11,10 +11,17 @@ with one it runs none. Only tests infer a fixture schema, to check these
 constants against the files (`tests/test_schemas.py`): a declared field
 the file lacks would read as an all-null column instead of failing.
 
+The checkpoint lineage table is read with `CHECKPOINT_SCHEMA` too
+(`sinks.checkpoint._read_checkpoint`): it is append-only and outlives
+engine versions, so its schema is declared rather than inferred from
+whichever file a read samples. The read runs no job, a column an older
+file lacks reads as NULL, and Hive partition columns keep their declared
+STRING type.
+
 Schema inference remains only where the engine reads back files it wrote
 itself, which carry the schema they were written with: the date-partitioned
-pages layout, checkpoint records and lineage, the MinHash store, a
-persisted IVF index and the streaming dedup text store.
+pages layout, checkpoint records, the MinHash store, a persisted IVF index
+and the streaming dedup text store.
 """
 
 from __future__ import annotations
@@ -62,51 +69,6 @@ POLYGONS_SCHEMA = StructType(
     ]
 )
 
-# Normalized-record output (FIXTURES.md §3) — field-for-field reconstruction
-# of the reference harvester's CKAN-ish record (SURVEY §1.1, [REF?]-grade).
-RECORD_SCHEMA = StructType(
-    [
-        StructField("record_id", StringType(), False),
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), False),
-        StructField("title_en", StringType(), True),
-        StructField("title_fr", StringType(), True),
-        StructField("notes_en", StringType(), True),
-        StructField("notes_fr", StringType(), True),
-        StructField("keywords", ArrayType(StringType()), True),
-        StructField("topic_category", StringType(), True),
-        StructField("frequency", StringType(), True),
-        StructField("spatial", StringType(), True),
-        StructField("kind", StringType(), False),
-        StructField("lat", DoubleType(), True),
-        StructField("lon", DoubleType(), True),
-        StructField("west", DoubleType(), True),
-        StructField("south", DoubleType(), True),
-        StructField("east", DoubleType(), True),
-        StructField("north", DoubleType(), True),
-        StructField("cell_id", LongType(), True),
-        StructField("polygon_id", StringType(), True),
-        StructField("tile_z", IntegerType(), True),
-        StructField("tile_x", IntegerType(), True),
-        StructField("tile_y", IntegerType(), True),
-        StructField("extracted_text", StringType(), True),
-    ]
-)
-
-# Checkpoint / lineage table (FIXTURES.md §4, BASELINE.json:14).
-CHECKPOINT_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("stage", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("tile_id", LongType(), False),
-        StructField("row_count", LongType(), False),
-        StructField("input_fingerprint", StringType(), False),
-        StructField("completed_at", TimestampType(), False),
-    ]
-)
-
-
 def _nullable(*fields: tuple[str, object]) -> StructType:
     # a file source reads every column as nullable, declared or inferred
     return StructType([StructField(n, t, True) for n, t in fields])
@@ -117,6 +79,22 @@ _I, _L, _D, _S = IntegerType(), LongType(), DoubleType(), StringType()
 # UTC adjustment, which Spark infers as timestamp_ntz; declaring it
 # TimestampType would change what date_format and casts print
 _NTZ = TimestampNTZType()
+
+# Checkpoint / lineage table (FIXTURES.md §4, BASELINE.json:14), in the
+# column order ``sinks.checkpoint.lineage_rows`` writes. Lineage files
+# from before ``commit_token`` existed read it as NULL; with the
+# ``stage=/run_id=`` layout the two partition columns keep these STRING
+# types instead of whatever the directory names would infer.
+CHECKPOINT_SCHEMA = _nullable(
+    ("run_id", _S),
+    ("stage", _S),
+    ("partition_id", _I),
+    ("tile_id", _L),
+    ("row_count", _L),
+    ("input_fingerprint", _S),
+    ("completed_at", TimestampType()),
+    ("commit_token", _S),
+)
 
 # Driver-provided oracle tables (TESTDATA.md), in the column order of the
 # files. Pinned equal to the inferred schemas at sf0.001/0.01/0.1 and to

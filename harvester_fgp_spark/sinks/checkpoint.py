@@ -28,17 +28,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.geo import packed_tile_col
+from ..schemas import CHECKPOINT_SCHEMA
+from ..sources.tables import visible_entries
 
-CHECKPOINT_COLS = (
-    "run_id",
-    "stage",
-    "partition_id",
-    "tile_id",
-    "row_count",
-    "input_fingerprint",
-    "completed_at",
-    "commit_token",
-)
+CHECKPOINT_COLS = tuple(CHECKPOINT_SCHEMA.fieldNames())
+# the stage=/run_id= layout keeps these in directory names, not in files
+LINEAGE_PARTITION_COLS = ("stage", "run_id")
 
 
 def _overwrite_mode_dynamic(spark: SparkSession):
@@ -104,77 +99,39 @@ def lineage_rows(records: DataFrame, run_id: str, stage: str) -> DataFrame:
     )
 
 
-def _with_commit_token(cp: DataFrame) -> DataFrame:
-    """Checkpoint tables written before the commit_token column existed
-    read without it; treat those rows as the empty token (sorts before
-    any real token, so a tokened rewrite of the same tick wins). Mixed
-    tables (legacy + tokened files under one dir, read with mergeSchema)
-    surface legacy rows as NULL tokens — coalesce them to '' so the
-    struct max never has to order against NULL."""
-    if "commit_token" not in cp.columns:
-        cp = cp.withColumn("commit_token", F.lit(""))
-    else:
-        cp = cp.withColumn(
-            "commit_token", F.coalesce(F.col("commit_token"), F.lit(""))
-        )
-    return cp
-
-
-def _no_partition_type_inference(spark: SparkSession):
-    """Context manager: disable partitionColumnTypeInference for one read
-    and RESTORE the caller's value after (round-6 advice): with
-    ``partition_lineage=True`` the run_id/stage values live in directory
-    names, and inference would read a numeric-looking run_id ('20260817')
-    back as INT and a date-shaped one as DATE — silently changing the
-    column type vs the flat layout and breaking string comparisons (and
-    zero-padded ids like '0123' would not even round-trip through a
-    cast-back). Both lineage layouts must read with run_id/stage as
-    STRING, exactly as written."""
-    import contextlib
-
-    @contextlib.contextmanager
-    def _cm():
-        key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-        prior = spark.conf.get(key, None)
-        spark.conf.set(key, "false")
-        try:
-            yield
-        finally:
-            if prior is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prior)
-
-    return _cm()
-
-
 def _read_checkpoint(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    """Read the lineage table with mergeSchema=true (round-4 advice): the
-    dir is append-mode, so post-upgrade it mixes files with and without
-    commit_token. Default schema inference samples ONE file — if it picks
-    a legacy file the commit_token column is silently dropped for ALL
-    rows and the same-tick tie-break goes inert. mergeSchema unions the
-    file schemas so tokened rows keep their tokens. Partition-column type
-    inference is off for the same read (see
-    ``_no_partition_type_inference``)."""
-    with _no_partition_type_inference(spark):
-        return spark.read.option("mergeSchema", "true").parquet(checkpoint_dir)
+    """The lineage table, read with its declared ``CHECKPOINT_SCHEMA``
+    in ``CHECKPOINT_COLS`` order: no footer job, rows from files written
+    before ``commit_token`` existed read it as NULL, and in the
+    ``stage=/run_id=`` layout both stay STRING (a run_id like '0123'
+    would otherwise infer as an int)."""
+    return (
+        spark.read.schema(CHECKPOINT_SCHEMA)
+        .parquet(checkpoint_dir)
+        .select(*CHECKPOINT_COLS)
+    )
 
 
 def _latest_commits(cp: DataFrame, keys: list[str]) -> DataFrame:
     """Reduce lineage rows to the LATEST commit per key group: max by
     (completed_at, commit_token) — the struct max is lexicographic, so
     equal-tick commits resolve deterministically to ONE whole commit
-    instead of keeping both (see lineage_rows on commit_token)."""
+    instead of keeping both (see lineage_rows on commit_token). A
+    legacy row's NULL token orders as '', before any real token, so a
+    tokened rewrite in the same tick wins."""
     tagged = cp.withColumn(
-        "_cmt", F.struct(F.col("completed_at"), F.col("commit_token"))
+        "_cmt",
+        F.struct(
+            F.col("completed_at"),
+            F.coalesce(F.col("commit_token"), F.lit("")),
+        ),
     )
     latest = tagged.groupBy(*keys).agg(F.max("_cmt").alias("_cmt"))
     return tagged.join(latest, [*keys, "_cmt"], "left_semi").drop("_cmt")
 
 
 def _check_lineage_layout(
-    checkpoint_dir: str, partition_lineage: bool, spark: "SparkSession | None" = None
+    checkpoint_dir: str, partition_lineage: bool, spark: SparkSession
 ) -> None:
     """A checkpoint dir must be flat or partitioned from its first write
     — Spark cannot read a mix (conflicting directory structures), and
@@ -182,43 +139,13 @@ def _check_lineage_layout(
     Enforced here rather than by docstring (round-5 review): appending
     the wrong layout corrupts the table silently until the next read.
 
-    Non-local URIs (hdfs://, s3a://) list through the Hadoop FileSystem
-    API when a session is available (round-6 advice): the mixed-layout
-    corruption this guards against is MOST likely in the object-store
-    deployments ``partition_lineage`` targets, so silently skipping them
-    would disable the guard exactly where it matters. The Hadoop path
-    resolves the URI with the same configuration the subsequent write
-    uses, so the two can never disagree about which directory they mean.
+    The listing goes through the session's Hadoop FileSystem
+    (``visible_entries``), which resolves the path with the same
+    configuration the subsequent write uses, so the two can never
+    disagree about which directory they mean — on a local disk, HDFS or
+    an object store alike.
     """
-    import os
-
-    entries: "list[str] | None" = None
-    try:
-        path = _local_path(checkpoint_dir)
-    except ValueError:
-        if spark is None:
-            import warnings
-
-            warnings.warn(
-                f"lineage layout enforcement skipped for {checkpoint_dir!r}: "
-                "non-local URI and no SparkSession to list it through",
-                stacklevel=2,
-            )
-            return
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(checkpoint_dir)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
-            return
-        entries = [
-            st.getPath().getName()
-            for st in fs.listStatus(hpath)
-            if not st.getPath().getName().startswith((".", "_"))
-        ]
-    else:
-        if not os.path.isdir(path):
-            return
-        entries = [e for e in os.listdir(path) if not e.startswith((".", "_"))]
+    entries = visible_entries(spark, checkpoint_dir)
     if not entries:
         return
     existing_partitioned = any(e.startswith("stage=") for e in entries)
@@ -281,7 +208,7 @@ def write_records_and_checkpoint(
             )
             lw = lineage_rows(tiled, run_id, stage).write.mode("append")
             if partition_lineage:
-                lw = lw.partitionBy("stage", "run_id")
+                lw = lw.partitionBy(*LINEAGE_PARTITION_COLS)
             lw.parquet(checkpoint_dir)
     finally:
         tiled.unpersist()
@@ -320,7 +247,7 @@ def write_stream_batch(
                 tiled, f"{run_id}-b{batch_id}", stage
             ).write.mode("append")
             if partition_lineage:
-                lw = lw.partitionBy("stage", "run_id")
+                lw = lw.partitionBy(*LINEAGE_PARTITION_COLS)
             lw.parquet(checkpoint_dir)
     finally:
         tiled.unpersist()
@@ -371,9 +298,7 @@ def verify_lineage(
     #     ("<run>-b<N>") and tiles legitimately accumulate rows across
     #     batches, so batches must still SUM while each batch's replays
     #     collapse.
-    cp = _with_commit_token(
-        _read_checkpoint(spark, checkpoint_dir).filter(F.col("stage") == stage)
-    )
+    cp = _read_checkpoint(spark, checkpoint_dir).filter(F.col("stage") == stage)
     keys = ["run_id", "tile_id"] if per_batch else ["tile_id"]
     committed = (
         _latest_commits(cp, keys)
@@ -401,11 +326,12 @@ def verify_lineage(
 
 
 def completed_tiles(spark: SparkSession, checkpoint_dir: str, stage: str = "records") -> DataFrame:
-    try:
-        with _no_partition_type_inference(spark):
-            cp = spark.read.parquet(checkpoint_dir)
-    except Exception:
+    """Tile ids committed for ``stage``. Only an absent checkpoint dir
+    means nothing is done: a damaged table fails the read instead of
+    resuming from nothing."""
+    if visible_entries(spark, checkpoint_dir) is None:
         return spark.createDataFrame([], "tile_id long")
+    cp = _read_checkpoint(spark, checkpoint_dir)
     return cp.filter(F.col("stage") == stage).select("tile_id").distinct()
 
 
@@ -538,9 +464,11 @@ def _local_path(uri: str) -> str:
 def _vacuum_swap(
     spark: SparkSession, d: str, keys: list[str], tmp: str, old: str
 ) -> None:
-    """Reduce one directory to its latest commits and swap it in place
-    (temp-write + two renames; crash between the renames auto-recovers
-    on the next call by restoring ``old``)."""
+    """Reduce one directory to its latest commits per ``keys`` and swap
+    it in place (temp-write + two renames; crash between the renames
+    auto-recovers on the next call by restoring ``old``). A partition
+    column that is not a key lives in the directory name, not in ``d``'s
+    files (it reads as NULL there), so it is not written back."""
     import os
     import shutil
 
@@ -548,8 +476,11 @@ def _vacuum_swap(
         shutil.move(old, d)
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
-    cp = _with_commit_token(_read_checkpoint(spark, d))
-    reduced = _latest_commits(cp, keys)
+    own = [
+        c for c in CHECKPOINT_COLS
+        if c in keys or c not in LINEAGE_PARTITION_COLS
+    ]
+    reduced = _latest_commits(_read_checkpoint(spark, d), keys).select(*own)
     reduced.write.mode("overwrite").parquet(tmp)
     shutil.move(d, old)
     shutil.move(tmp, d)

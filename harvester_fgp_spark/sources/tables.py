@@ -52,6 +52,19 @@ def read_all_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: read_testdata(spark, sf_dir, t) for t in TESTDATA_SCHEMAS}
 
 
+def visible_entries(spark: SparkSession, path: str) -> "list[str] | None":
+    """Names of the entries under ``path`` that readers see (not ``_``-
+    or ``.``-prefixed), listed through the session's Hadoop FileSystem so
+    the path resolves exactly as a Spark read or write of it would (a
+    scheme-less path included); None when ``path`` does not exist."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return None
+    names = (st.getPath().getName() for st in fs.listStatus(p))
+    return [n for n in names if not n.startswith(("_", "."))]
+
+
 def write_bucketed(
     df: DataFrame,
     table: str,

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from ..operators import extract as E
 from ..operators import geo as G
 from ..schemas import PAGES_SCHEMA
+from ..sources.tables import visible_entries
 
 
 def read_pages_stream(
@@ -305,11 +306,7 @@ def stream_dedup_incremental_store(
         # existence via the Hadoop FileSystem API, NOT os.path — an
         # hdfs://-or-s3a:// store would read as "absent" to os.path and
         # silently degrade every batch to within-batch-only dedup
-        # (the round-5 non-local-URI lesson, applied up front)
-        hpath = spark._jvm.org.apache.hadoop.fs.Path(bands_dir)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        have_store = bool(fs.exists(hpath))
-        if have_store:
+        if visible_entries(spark, bands_dir) is not None:
             corpus = (
                 spark.read.parquet(texts_dir)
                 .select(id_col, text_col)

@@ -23,6 +23,20 @@ if _repo not in sys.path:
     sys.path.insert(0, _repo)
 
 
+# flags only the batch path reads (argparse dests)
+_BATCH_ONLY = (
+    "engine",
+    "cell_level",
+    "tile_z",
+    "partition_lineage",
+    "resume",
+    "compact",
+    "vacuum_checkpoint",
+    "vacuum_runs",
+    "verify_lineage",
+)
+
+
 def parse_args(argv: list[str]) -> argparse.Namespace:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--pages", required=True)
@@ -48,7 +62,8 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
         action="store_true",
         help="treat --pages as a streaming source directory: run the SAME "
         "pipeline per micro-batch via foreachBatch with exactly-once "
-        "per-(tile,batch) commits; processes available input then stops",
+        "per-(tile,batch) commits; processes available input then stops "
+        "(batch-only flags such as --resume or --tile-z are refused)",
     )
     p.add_argument("--stream-checkpoint", default=None,
                    help="Structured Streaming checkpoint location "
@@ -97,7 +112,20 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--cell-level", type=int, default=12)
     p.add_argument("--tile-z", type=int, default=8)
     p.add_argument("--snapshot-id", type=int, default=None)
-    return p.parse_args(argv)
+    args = p.parse_args(argv)
+    if args.stream:
+        # the stream branch runs its own sink and returns before the
+        # batch steps: refuse these rather than silently ignore them
+        ignored = [
+            "--" + dest.replace("_", "-")
+            for dest in _BATCH_ONLY
+            if getattr(args, dest) != p.get_default(dest)
+        ]
+        if ignored:
+            p.error(
+                "--stream cannot honour batch-only flags: " + ", ".join(ignored)
+            )
+    return args
 
 
 def main(argv: list[str]) -> None:

@@ -7,12 +7,16 @@ uninterrupted run.
 
 from __future__ import annotations
 
+import datetime
+
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from harvester_fgp_spark.sinks import checkpoint as C
 from harvester_fgp_spark.plans.pipeline import mine_records
 from harvester_fgp_spark.synth import generate_polygons, pages_df
+from tests.conftest import count_jobs
 
 
 def _records(spark):
@@ -204,3 +208,118 @@ def test_vacuum_checkpoint_preserves_audit_semantics(spark, tmp_path):
     assert C.verify_lineage(spark, out, cp).count() == 0
     done = {r.tile_id for r in C.completed_tiles(spark, cp).collect()}
     assert len(done) == n_tiles
+
+
+def _tokenless_append(spark, cp):
+    """Append a copy of the lineage rows as a pre-commit_token writer
+    would have written them (no commit_token column)."""
+    legacy = C._read_checkpoint(spark, cp).drop("commit_token")
+    legacy.write.mode("append").parquet(cp)
+
+
+def test_latest_commits_tokenless_legacy_rows(spark, tmp_path):
+    """Lineage files written before commit_token existed read it as
+    NULL, which orders as the empty token: among themselves the later
+    tick still wins."""
+    t1 = datetime.datetime(2026, 1, 1, 12, 0, 0)
+    t2 = datetime.datetime(2026, 1, 1, 12, 0, 1)
+    cp = str(tmp_path / "cp")
+    spark.createDataFrame(
+        [("r1", "records", 0, 7, 10, "aa", t1), ("r1", "records", 0, 7, 20, "ab", t2)],
+        "run_id string, stage string, partition_id int, tile_id long, "
+        "row_count long, input_fingerprint string, completed_at timestamp",
+    ).write.parquet(cp)
+    legacy = C._read_checkpoint(spark, cp)
+    assert legacy.columns == list(C.CHECKPOINT_COLS)
+    reduced = C._latest_commits(legacy, ["tile_id"]).collect()
+    assert len(reduced) == 1 and reduced[0]["row_count"] == 20
+    assert reduced[0]["commit_token"] is None
+
+
+def test_mixed_schema_checkpoint_audit_stays_green(spark, tmp_path):
+    """Legacy (tokenless) lineage files next to tokened files in one dir:
+    the audit must still see commit_token on the tokened rows and reduce
+    the doubled commit away — zero discrepancies."""
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    C.write_records_and_checkpoint(_records(spark), out, cp, "r1")
+    _tokenless_append(spark, cp)
+    assert C.verify_lineage(spark, out, cp).count() == 0
+    # and vacuum (same declared-schema read) collapses to one commit's rows
+    n_before = C._read_checkpoint(spark, cp).count()
+    C.vacuum_checkpoint(spark, cp)
+    assert C._read_checkpoint(spark, cp).count() < n_before
+    assert C.verify_lineage(spark, out, cp).count() == 0
+
+
+def test_mixed_schema_tokens_not_dropped(spark, tmp_path):
+    """The declared-schema read of a mixed dir: tokened rows keep their
+    token whichever file a read would have sampled, legacy rows read as
+    NULL."""
+    out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
+    C.write_records_and_checkpoint(_records(spark), out, cp, "r1")
+    _tokenless_append(spark, cp)
+    toks = [
+        r.commit_token
+        for r in C._read_checkpoint(spark, cp).select("commit_token").collect()
+    ]
+    assert any(t is None for t in toks) and any(t for t in toks)
+
+
+def test_layout_check_non_local_uri_uses_hadoop_fs(spark, tmp_path):
+    """Layout enforcement lists the checkpoint dir through the Hadoop
+    FileSystem API (Hadoop's LocalFileSystem here; HDFS or an object
+    store in production), so it resolves the path as the write does."""
+    d = tmp_path / "cp"
+    (d / "stage=records").mkdir(parents=True)
+    (d / "stage=records" / "part-0.parquet").write_bytes(b"")
+
+    # partitioned dir + flat write -> must raise
+    with pytest.raises(ValueError, match="partitioned but this write is flat"):
+        C._check_lineage_layout(str(d), False, spark)
+    # matching layout passes; missing dir passes
+    C._check_lineage_layout(str(d), True, spark)
+    C._check_lineage_layout(str(tmp_path / "absent"), True, spark)
+
+
+def test_read_checkpoint_runs_no_job(spark, tmp_path):
+    """The lineage table is read with its declared schema: building the
+    read runs no footer/schema-merge job, in either layout."""
+    recs = _records(spark)
+    flat, part = str(tmp_path / "flat"), str(tmp_path / "part")
+    C.write_records_and_checkpoint(recs, str(tmp_path / "o1"), flat, "r1")
+    C.write_records_and_checkpoint(
+        recs, str(tmp_path / "o2"), part, "r1", partition_lineage=True
+    )
+    for cp in (flat, part):
+        assert count_jobs(spark, lambda cp=cp: C._read_checkpoint(spark, cp)) == 0
+
+
+def test_resume_filter_raises_on_unreadable_lineage(spark, tmp_path):
+    """Only an absent checkpoint dir means "nothing done": an unreadable
+    lineage file, or a plain file where the dir should be, fails the
+    resume instead of silently re-running every pending tile."""
+    pending = spark.range(20).select(F.col("id").alias("tile_id"))
+    absent = str(tmp_path / "absent")
+    assert C.resume_filter(pending, spark, absent).count() == 20
+
+    damaged = tmp_path / "damaged"
+    damaged.mkdir()
+    (damaged / "part-00000.parquet").write_bytes(b"not parquet")
+    plain = tmp_path / "plain"
+    plain.write_bytes(b"not a directory")
+    for cp in (damaged, plain):
+        with pytest.raises(Exception):
+            C.resume_filter(pending, spark, str(cp)).count()
+
+
+@pytest.mark.parametrize("flags", [["--tile-z", "6"], ["--partition-lineage"]])
+def test_stream_refuses_batch_only_flags(flags):
+    """--stream returns before the batch steps, so a batch-only flag
+    would be silently ignored: the CLI refuses it instead."""
+    from jobs.run_pipeline import parse_args
+
+    base = ["--pages", "p", "--out", "o", "--checkpoint", "c", "--run-id", "r"]
+    assert parse_args(base + ["--stream"]).stream
+    assert not parse_args(base + flags).stream
+    with pytest.raises(SystemExit):
+        parse_args(base + ["--stream", *flags])

@@ -130,3 +130,41 @@ def test_pages_to_records_path_has_one_python_stage():
             if pat.search(line):
                 offenders.append(f"{rel}:{i}: {line.strip()}")
     assert not offenders, "\n".join(offenders)
+
+
+def test_entry_names_no_private_engine_helper():
+    """The query surface builds on the engine's public helpers: a
+    ``G._x`` / ``D._x`` reach-in is an inline copy of a format (a cell
+    key, a quantizer) that can drift from the operator's own."""
+    src = (ENGINE.parent / "__spark_entry__.py").read_text()
+    hits = re.findall(r"\b[GD]\._\w+", src)
+    assert not hits, hits
+
+
+def test_operators_do_not_import_plans():
+    """``operators/`` sits below ``plans/``: shared builders (the grid
+    quantizer, the Morton interleave) live in the operator modules."""
+    pat = re.compile(
+        r"^\s*(?:from|import)\s+(?:\.\.plans|harvester_fgp_spark\.plans)\b",
+        re.M,
+    )
+    offenders = []
+    for path in (ENGINE / "operators").rglob("*.py"):
+        src = path.read_text()
+        for m in pat.finditer(src):
+            line = src[: m.start()].count("\n") + 1
+            offenders.append(f"{path.name}:{line}: {m.group(0).strip()}")
+    assert not offenders, "\n".join(offenders)
+
+
+def test_sinks_read_lineage_with_declared_schema():
+    """The lineage table is read with ``schemas.CHECKPOINT_SCHEMA``: a
+    declared schema reads a missing column as NULL, runs no job and keeps
+    partition columns at their declared types, so schema-merge and
+    partition-inference switches have no place in the sinks."""
+    offenders = []
+    for path in (ENGINE / "sinks").rglob("*.py"):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if "mergeSchema" in line or "partitionColumnTypeInference" in line:
+                offenders.append(f"{path.name}:{i}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)

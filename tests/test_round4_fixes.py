@@ -47,25 +47,6 @@ def test_latest_commits_breaks_same_tick_ties(spark):
     assert reduced[0]["row_count"] == 15
 
 
-def test_latest_commits_tokenless_legacy_rows(spark):
-    """Pre-commit_token checkpoint tables read with the empty token: a
-    tokened rewrite in the same tick beats them; among themselves the
-    later tick still wins."""
-    import datetime
-
-    t1 = datetime.datetime(2026, 1, 1, 12, 0, 0)
-    t2 = datetime.datetime(2026, 1, 1, 12, 0, 1)
-    legacy = spark.createDataFrame(
-        [("r1", "records", 0, 7, 10, "aa", t1), ("r1", "records", 0, 7, 20, "ab", t2)],
-        "run_id string, stage string, partition_id int, tile_id long, "
-        "row_count long, input_fingerprint string, completed_at timestamp",
-    )
-    reduced = C._latest_commits(
-        C._with_commit_token(legacy), ["tile_id"]
-    ).collect()
-    assert len(reduced) == 1 and reduced[0]["row_count"] == 20
-
-
 def test_contraction_stats_do_not_compound(spark):
     """Round-4 originStats bug pin: localCheckpoint copies the origin
     plan's Statistics onto the checkpointed LogicalRDD, and size-only

@@ -7,7 +7,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pyspark.sql.functions as F
-import pytest
 
 import __spark_entry__ as E
 from tests.conftest import plan_string as _plan
@@ -166,29 +165,3 @@ def test_partition_lineage_reads_numeric_run_id_as_string(spark, tmp_path):
     run_ids = {r.run_id for r in got.select("run_id").distinct().collect()}
     assert run_ids == {"20260817", "2026-08-17", "0123"}
     assert completed_tiles(spark, cp).count() > 0
-
-
-def test_layout_check_non_local_uri_uses_hadoop_fs(spark, tmp_path, monkeypatch):
-    """Round-6 advice: a non-local checkpoint URI must still get layout
-    enforcement via the Hadoop FileSystem API when a session is
-    available. Exercised honestly by forcing the non-local branch onto a
-    real directory (Hadoop's LocalFileSystem lists it)."""
-    from harvester_fgp_spark.sinks import checkpoint as C
-
-    d = tmp_path / "cp"
-    (d / "stage=records").mkdir(parents=True)
-    (d / "stage=records" / "part-0.parquet").write_bytes(b"")
-
-    def _refuse(uri):
-        raise ValueError("forced non-local")
-
-    monkeypatch.setattr(C, "_local_path", _refuse)
-    # partitioned dir + flat write -> must raise through the Hadoop branch
-    with pytest.raises(ValueError, match="partitioned but this write is flat"):
-        C._check_lineage_layout(str(d), False, spark)
-    # matching layout passes; missing dir passes
-    C._check_lineage_layout(str(d), True, spark)
-    C._check_lineage_layout(str(tmp_path / "absent"), True, spark)
-    # no session to list through -> warn-and-skip, never a crash
-    with pytest.warns(UserWarning, match="layout enforcement skipped"):
-        C._check_lineage_layout("s3a://bucket/cp", False, None)

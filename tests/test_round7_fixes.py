@@ -131,7 +131,7 @@ def test_hilbert_range_scan_coalesced_requires_residual(spark):
         )
 
 
-def test_minhash_incremental_degenerate_bucket_guard(spark, tmp_path):
+def test_minhash_incremental_degenerate_bucket_guard(spark, tmp_path, monkeypatch):
     """Thousands of near-empty docs (one shared word -> one shared gram
     -> identical signature -> ONE bucket per band) complete with bounded
     member arrays: the size screen runs before collect_list, the
@@ -141,10 +141,13 @@ def test_minhash_incremental_degenerate_bucket_guard(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from harvester_fgp_spark.operators import dedup
     from harvester_fgp_spark.operators.dedup import (
         minhash_incremental_pairs,
         update_minhash_store,
     )
+
+    monkeypatch.setattr(dedup, "MAX_INCREMENTAL_BUCKET", 100)
 
     docs = (
         spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
@@ -172,7 +175,7 @@ def test_minhash_incremental_degenerate_bucket_guard(spark, tmp_path):
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         got = minhash_incremental_pairs(
-            batch2, store, union, threshold=0.9, max_bucket_size=100
+            batch2, store, union, threshold=0.9
         ).toPandas()
     msgs = [str(w.message) for w in caught if "EXCLUDED" in str(w.message)]
     assert msgs, "degenerate-bucket exclusion must warn loudly"
