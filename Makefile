@@ -6,10 +6,13 @@ test:
 	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
 	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
+# the echoed command line carries the JIT policy build_session sets: under
+# spark-submit the driver JVM is up before build_session runs
 package:
 	rm -f engine.zip
 	zip -qr engine.zip harvester_fgp_spark -x '*__pycache__*'
-	@echo "spark-submit --py-files engine.zip jobs/run_pipeline.py ..."
+	@echo "spark-submit --py-files engine.zip --driver-java-options \"$$(python -c \
+	  'from harvester_fgp_spark.session import JIT_POLICY; print(JIT_POLICY)')\" jobs/run_pipeline.py ..."
 
 bench:
 	python bench.py

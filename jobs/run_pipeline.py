@@ -1,6 +1,10 @@
 """Production job (EP1): spark-submit --py-files engine.zip jobs/run_pipeline.py
 
-  spark-submit --py-files engine.zip jobs/run_pipeline.py \
+  spark-submit --py-files engine.zip \
+      --driver-java-options "-XX:Tier4InvocationThreshold=50000 \
+        -XX:Tier4MinInvocationThreshold=6000 -XX:Tier4CompileThreshold=150000 \
+        -XX:Tier4BackEdgeThreshold=400000" \
+      jobs/run_pipeline.py \
       --pages <iceberg table | parquet path> \
       --polygons <parquet path | synth:N> \
       --out /data/records --checkpoint /data/checkpoint \
@@ -8,6 +12,11 @@
 
 Resumable: with --resume, tiles already committed to the checkpoint table
 are anti-joined away before any recomputation (BASELINE.json:14).
+
+The --driver-java-options flags are the session's JIT policy
+(harvester_fgp_spark.session.JIT_POLICY). build_session sets them for a
+JVM it launches itself, but under spark-submit the driver JVM is already
+running when it is called, so they must be on the command line.
 """
 
 from __future__ import annotations

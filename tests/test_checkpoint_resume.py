@@ -323,3 +323,22 @@ def test_stream_refuses_batch_only_flags(flags):
     assert not parse_args(base + flags).stream
     with pytest.raises(SystemExit):
         parse_args(base + ["--stream", *flags])
+
+
+def test_verify_lineage_builds_without_a_job(spark, tmp_path):
+    """The audit reads the record output with a declared schema: building
+    it runs no footer/schema-inference job, in either sink's layout, and
+    the audit stays green on both."""
+    recs = spark.range(40).select(
+        F.sha2(F.col("id").cast("string"), 256).alias("record_id"),
+        (F.col("id") % 3).cast("int").alias("tile_z"),
+        F.lit(1).alias("tile_x"),
+        F.lit(2).alias("tile_y"),
+    )
+    batch_out, batch_cp = str(tmp_path / "b_out"), str(tmp_path / "b_cp")
+    C.write_records_and_checkpoint(recs, batch_out, batch_cp, "r1")
+    stream_out, stream_cp = str(tmp_path / "s_out"), str(tmp_path / "s_cp")
+    C.write_stream_batch(recs, stream_out, stream_cp, "s", batch_id=0)
+    for out, cp in ((batch_out, batch_cp), (stream_out, stream_cp)):
+        assert count_jobs(spark, lambda out=out, cp=cp: C.verify_lineage(spark, out, cp)) == 0
+        assert C.verify_lineage(spark, out, cp).count() == 0
