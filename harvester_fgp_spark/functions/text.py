@@ -82,9 +82,14 @@ def extract_text(html: bytes | None) -> str | None:
 # what they mean in Java regex (operators.extract.payloads_native_col)
 # and in RE2, so an NBSP or em space is not a separator, and "weſt:"
 # (long s) is not "west:".
-# Decimal coordinate pair: "45.4215, -75.6972" (lat, lon).
+# Decimal coordinate pair: "45.4215, -75.6972" (lat, lon). The leading
+# (?=[-\d]) is implied by group 1 and changes no match; it lets `re`
+# skip start positions that cannot begin one (fused-stage miner, seed
+# 903's 13,595 prefiltered rows: 0.356 -> 0.215 CPU s per op). BBOX_RE
+# must not get a (?=[wW]) twin: that defeats the case-insensitive
+# literal-prefix search and made its scan 1.7x slower.
 COORD_PAIR_RE = re.compile(
-    r"(?<![\d.-])(-?(?:90(?:\.0+)?|[0-8]?\d(?:\.\d+)?))\s*,\s*"
+    r"(?=[-\d])(?<![\d.-])(-?(?:90(?:\.0+)?|[0-8]?\d(?:\.\d+)?))\s*,\s*"
     r"(-?(?:180(?:\.0+)?|1[0-7]\d(?:\.\d+)?|\d?\d(?:\.\d+)?))(?![\d.])",
     re.ASCII,
 )

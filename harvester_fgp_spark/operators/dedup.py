@@ -30,7 +30,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions import tokens as T
-from ..sources.tables import visible_entries
+from ..sources.tables import local_table, visible_entries
 
 NUM_PERM = 32
 NUM_BANDS = 8  # 4 rows per band
@@ -468,8 +468,8 @@ def update_minhash_store(
         .parquet(path)
     )
     if stored is None:
-        spark.createDataFrame(
-            [(BAND_KERNEL_VERSION,)], "kernel_version int"
+        local_table(
+            spark, [(BAND_KERNEL_VERSION,)], "kernel_version int"
         ).write.mode("overwrite").parquet(f"{path}/_kernel_version")
 
 

@@ -37,6 +37,8 @@ from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 from pyspark.sql.window import Window
 
+from ..sources.tables import local_table
+
 # Recall/compute tradeoff, tuned against brute force on random gaussian
 # vectors (the adversarial case — real embedding corpora cluster and do
 # better): 6 planes x 8 tables gives ~0.4 recall@5 there vs ~0.08 for
@@ -494,8 +496,8 @@ def _assign(
 
 def _centroid_table(spark: SparkSession, centers: np.ndarray) -> DataFrame:
     """(cell int, ctr array<double>): the tiny broadcast probe table."""
-    return spark.createDataFrame(
-        list(enumerate(centers.tolist())), "cell int, ctr array<double>"
+    return local_table(
+        spark, list(enumerate(centers.tolist())), "cell int, ctr array<double>"
     )
 
 

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..operators.geo import packed_tile_col
 from ..schemas import CHECKPOINT_SCHEMA
-from ..sources.tables import visible_entries
+from ..sources.tables import local_table, visible_entries
 
 CHECKPOINT_COLS = tuple(CHECKPOINT_SCHEMA.fieldNames())
 # the stage=/run_id= layout keeps these in directory names, not in files
@@ -336,7 +336,7 @@ def completed_tiles(spark: SparkSession, checkpoint_dir: str, stage: str = "reco
     means nothing is done: a damaged table fails the read instead of
     resuming from nothing."""
     if visible_entries(spark, checkpoint_dir) is None:
-        return spark.createDataFrame([], "tile_id long")
+        return local_table(spark, [], "tile_id long")
     cp = _read_checkpoint(spark, checkpoint_dir)
     return cp.filter(F.col("stage") == stage).select("tile_id").distinct()
 

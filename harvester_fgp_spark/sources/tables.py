@@ -9,8 +9,13 @@ identical either way, which is the point of keeping it behind one module.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 from ..schemas import PAGES_SCHEMA, TESTDATA_SCHEMAS
 
@@ -50,6 +55,38 @@ def read_testdata(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def read_all_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: read_testdata(spark, sf_dir, t) for t in TESTDATA_SCHEMAS}
+
+
+def local_table(
+    spark: SparkSession,
+    rows: "Sequence[tuple] | pd.DataFrame",
+    schema: "StructType | str",
+) -> DataFrame:
+    """Driver-side rows as a DataFrame that plans as a ``LocalRelation``.
+
+    ``rows`` are tuples in schema order, or a pandas frame holding the
+    schema's columns; ``schema`` is a StructType or a DDL string. The
+    rows become one ``pyarrow.Table``, shipped to the JVM as Arrow
+    batches: no Python task runs, the plan has exact size statistics,
+    and a row that does not fit the schema raises here. The list form of
+    ``createDataFrame`` runs a pickled Python RDD whose worker env
+    differs from the SQL Arrow UDFs', so each executor starts a second
+    ``pyspark.daemon`` and worker pool for it (~300 MB RSS on 4 cores).
+    Naive timestamps are wall-clock times in the session time zone.
+    """
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct, timestamp_utc=False)
+    if isinstance(rows, pd.DataFrame):
+        table = pa.Table.from_pandas(
+            rows[struct.fieldNames()], schema=arrow_schema, preserve_index=False
+        )
+    else:
+        cols = list(zip(*rows)) or [()] * len(arrow_schema)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(table, struct)
 
 
 def visible_entries(spark: SparkSession, path: str) -> "list[str] | None":

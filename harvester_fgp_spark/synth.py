@@ -189,25 +189,13 @@ def generate_polygons(
 def pages_df(spark, n: int, seed: int = 42):
     """Synthetic pages as a Spark DataFrame with the declared schema."""
     from .schemas import PAGES_SCHEMA
+    from .sources.tables import local_table
 
-    return spark.createDataFrame(generate_pages(n, seed), schema=PAGES_SCHEMA)
+    return local_table(spark, generate_pages(n, seed), PAGES_SCHEMA)
 
 
 def polygons_df(spark, n: int = 200, seed: int = 42):
     from .schemas import POLYGONS_SCHEMA
+    from .sources.tables import local_table
 
-    pdf = generate_polygons(n, seed)
-    rows = [
-        (
-            r.polygon_id,
-            r.name_en,
-            r.name_fr,
-            [(p["x"], p["y"]) for p in r.ring],
-            r.minx,
-            r.miny,
-            r.maxx,
-            r.maxy,
-        )
-        for r in pdf.itertuples()
-    ]
-    return spark.createDataFrame(rows, schema=POLYGONS_SCHEMA)
+    return local_table(spark, generate_polygons(n, seed), POLYGONS_SCHEMA)

@@ -63,6 +63,34 @@ def test_no_per_row_python_in_engine():
     assert not offenders, "\n".join(offenders)
 
 
+def test_driver_tables_go_through_local_table():
+    """Driver rows become a DataFrame only in ``sources.tables.local_table``
+    (an Arrow ``LocalRelation``). ``createDataFrame`` of a list or
+    ``parallelize`` plans a pickled Python RDD, whose worker env starts a
+    second ``pyspark.daemon`` and its own unpatched workers per executor.
+    Calls are found in the syntax tree, so docstrings may name them."""
+    import ast
+
+    banned = {"createDataFrame", "parallelize"}
+    offenders = []
+    for path in [ENGINE.parent / "__spark_entry__.py", *ENGINE.rglob("*.py")]:
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path == ENGINE / "sources" / "tables.py":
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "local_table":
+                    allowed.update(id(n) for n in ast.walk(fn))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in banned
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{path.name}:{node.lineno}: {node.func.attr}(")
+    assert not offenders, "\n".join(offenders)
+
+
 def test_annotations_resolve_in_engine_modules():
     """Round-4 extension (verdict wrong-#3): with ``from __future__ import
     annotations`` every annotation is a lazy string, so a signature can

@@ -147,6 +147,32 @@ def test_batch_miner_property_random_text():
         assert got.get(r, []) == T.mine_payloads(text), repr(text)
 
 
+def test_coord_pair_lookahead_changes_no_match():
+    """``COORD_PAIR_RE``'s leading ``(?=[-\\d])`` only skips start
+    positions: ``findall`` equals the unprefixed pattern's on the golden
+    pages (500, seed 42) and on fuzzed digit / sign / dot / comma /
+    whitespace / letter strings."""
+    import re
+
+    import numpy as np
+
+    from harvester_fgp_spark.synth import generate_pages
+
+    prefix = "(?=[-\\d])"
+    assert T.COORD_PAIR_RE.pattern.startswith(prefix)
+    bare = re.compile(T.COORD_PAIR_RE.pattern[len(prefix):], T.COORD_PAIR_RE.flags)
+    rng = np.random.default_rng(7)
+    alphabet = list("0123456789-.,") + [" ", "\t", "\n", "a", "Z", "e"]
+    fuzz = [
+        "".join(rng.choice(alphabet, size=rng.integers(0, 40)))
+        for _ in range(3000)
+    ]
+    texts = generate_pages(500, seed=42).text.tolist() + fuzz
+    assert sum(len(bare.findall(t)) for t in texts) > 100
+    for t in texts:
+        assert T.COORD_PAIR_RE.findall(t) == bare.findall(t), repr(t)
+
+
 def test_flat_miner_equals_scalar():
     """mine_payloads_flat (the fused-stage hot path) == scalar oracle."""
     import pandas as pd
