@@ -32,9 +32,8 @@ SF0001 = "/root/testdata/sf0.001"
 
 CELL_LEVEL = 5  # coarse agg level for oracle-checked cell queries
 TILE_Z = 8
-# A4 grouped-map granularity: z=3 keeps groups FAT (dozens-to-hundreds of
-# rows), which is the shape grouped-map is for — per-group Arrow batches
-# make 1-row groups pay ~ms each (measured 15s for 5000 singleton groups)
+# A4 per-tile stats granularity: z=3 keeps tiles at dozens-to-hundreds
+# of points each
 A4_TILE_Z = 3
 
 
@@ -190,68 +189,34 @@ def _q_geo_box_tile_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_tile_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 grouped-map pandas UDF: per-tile centroid + bbox union via
-    groupBy(tile).applyInPandas (SURVEY §2.6 A4); exact integer-sum
-    centroid so the DuckDB twin value-hashes identically."""
+    """A4: per-tile centroid + bbox union as one native groupBy(tile).agg
+    (SURVEY §2.6 A4); exact integer-sum centroid so the DuckDB twin
+    value-hashes identically."""
     from harvester_fgp_spark.operators.groupstats import tile_group_stats
 
-    pts = D.points_from_documents(spark, sf_dir)
-    tx, ty = G.tile_cols(F.col("lon"), F.col("lat"), A4_TILE_Z)
-    tiled = pts.select(
-        tx.cast("long").alias("tile_x"),
-        ty.cast("long").alias("tile_y"),
-        "lat",
-        "lon",
-    )
-    return tile_group_stats(tiled)
+    return tile_group_stats(_a4_tiled(spark, sf_dir))
 
 
 def _q_tile_centroid_gagg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4 via the GROUPED_AGG pandas-UDF surface (SURVEY §2.11, exercised
-    round 3): the per-tile centroid as a Series->scalar aggregate UDF
-    sitting INSIDE groupBy().agg next to native count — the lightweight
-    sibling of the grouped-map path (tile_group_stats), same integer
-    centi-degree exactness contract and the same DuckDB longhand."""
-    from harvester_fgp_spark.operators.groupstats import (
-        centideg_mean_agg,
-        count_agg,
+    """A4 per-tile count + centroid: the three columns of tile_group_stats,
+    same integer centi-degree exactness contract and the same DuckDB
+    longhand."""
+    from harvester_fgp_spark.operators.groupstats import tile_group_stats
+
+    return tile_group_stats(_a4_tiled(spark, sf_dir)).select(
+        "tile_x", "tile_y", "n_points", "centroid_lat", "centroid_lon"
     )
 
+
+def _a4_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(tile_x, tile_y, lat, lon): document points on the A4 tile grid."""
     pts = D.points_from_documents(spark, sf_dir)
     tx, ty = G.tile_cols(F.col("lon"), F.col("lat"), A4_TILE_Z)
-    tiled = pts.select(
+    return pts.select(
         tx.cast("long").alias("tile_x"),
         ty.cast("long").alias("tile_y"),
         "lat",
         "lon",
-    )
-    return tiled.groupBy("tile_x", "tile_y").agg(
-        count_agg("lat").alias("n_points"),
-        centideg_mean_agg("lat").alias("centroid_lat"),
-        centideg_mean_agg("lon").alias("centroid_lon"),
-    )
-
-
-def _q_media_meta_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal metadata via mapInArrow (SURVEY §2.11 surface, round 3):
-    RecordBatch in, RecordBatch out, no pandas materialization — output
-    row-identical to the mapInPandas path, checked by the same oracle."""
-    from harvester_fgp_spark.operators.multimodal import extract_media_meta_arrow
-
-    docs = _read(spark, sf_dir, "documents")
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.col("text").cast("binary").alias("payload"),
-        F.lit("image/fake").alias("mime"),
-    )
-    meta = extract_media_meta_arrow(media)
-    return meta.select(
-        "media_id",
-        "n_bytes",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        "sha",
     )
 
 
@@ -700,8 +665,9 @@ def _q_multimodal_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-5 per sampled query vector (native zip_with
-    + aggregate — no UDF; per-side norm precompute)."""
+    """Brute-force cosine top-5 per sampled query vector: cosine_topk's
+    block-partitioned mapInArrow kernel, bit-exact to the native
+    zip_with + aggregate dot product, then a native rank window."""
     from harvester_fgp_spark.operators.similarity import cosine_topk
 
     emb = _read(spark, sf_dir, "embeddings")
@@ -1031,8 +997,10 @@ def _q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: blob -> typed metadata via mapInPandas; the
-    deterministic decode fake makes even the Python boundary oracle-checkable."""
+    """Multimodal plumbing: blob -> typed metadata via one mapInArrow
+    stage; the deterministic decode fake makes even the Python boundary
+    oracle-checkable. media_meta_arrow (SURVEY §2.11, round 3) is the
+    same query under its own driver row."""
     from harvester_fgp_spark.operators.multimodal import extract_media_meta
 
     docs = _read(spark, sf_dir, "documents")
@@ -1589,7 +1557,7 @@ def _q_text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ between engines."""
     from harvester_fgp_spark.operators.textops import with_text_analysis
 
-    docs = _read_spread(spark, sf_dir, "documents")
+    docs = _read_spread(spark, sf_dir, "documents").select("lang", "text")
     return (
         with_text_analysis(docs)
         .groupBy("lang", "detected_lang")
@@ -1836,7 +1804,7 @@ def _flagship_records_digest(
 
     Parameterized over the engine (round 5): ``native`` is the
     zero-Python path; ``fused`` is the PRODUCTION default
-    (plans/pipeline.py — single fused pandas-UDF stage). Both run
+    (plans/pipeline.py — single fused mapInArrow stage). Both run
     against the SAME DuckDB twin, so the production engine now sits
     under a direct value oracle instead of only transitively via the
     fused==native record-identity pytest (tests/test_native_pipeline.py).
@@ -2743,9 +2711,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_recall": _q_ann_ivf_recall,
         # round 7: product quantization — the compressed-ANN member of
         # the family (ADC shortlist + exact rerank). Takes
-        # tile_centroid_gagg's slot (A4's GROUPED_AGG surface keeps its
-        # plan-shape pytest + local oracle; grouped-map tile_group_stats
-        # holds the A4 window row).
+        # tile_centroid_gagg's slot (it keeps its plan-shape pytest +
+        # local oracle; tile_group_stats holds the A4 window row).
         "ann_pq_recall": _q_ann_pq_recall,
         # round 6: the HLL error BOUND under the exact gate (the rows-
         # only estimate surface approx_distinct_users moves to the tail
@@ -2860,9 +2827,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round 7 rotation: the box-join x tile-assign composite (both
         # primitives and the flagship summary keep in-window rows)
         "geo_box_tile_summary": _q_geo_box_tile_summary,
-        # round 7 rotation: A4's GROUPED_AGG surface (grouped-map
-        # tile_group_stats holds the window row; plan-shape pytest +
-        # local oracle keep gating this one)
+        # round 7 rotation: A4's per-tile centroid (tile_group_stats
+        # holds the window row; plan-shape pytest + local oracle keep
+        # gating this one)
         "tile_centroid_gagg": _q_tile_centroid_gagg,
         # round 7 tail: the IVF x PQ composition (ann_pq_recall holds
         # the family's window slot; same brute-force raw-vector twin)
@@ -2886,7 +2853,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "media_frames": _q_media_frames,
         "window_running_sum": _q_window_running_sum,
         "grouping_sets_orders": _q_grouping_sets,
-        "media_meta_arrow": _q_media_meta_arrow,
+        "media_meta_arrow": _q_media_meta,
         "window_lag_delta": _q_window_lag_delta,
         "geo_bbox_cover": _q_geo_bbox_cover,
         "geo_haversine_within": _q_geo_haversine_within,
@@ -4955,6 +4922,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         # dedup_minhash / dedup_simhash / ann_lsh / ann_ivf /
         # approx_distinct_users / polygon_tiles / pipeline_flagship:
-        # non-SQL-expressible (hash kernels, iterative k-means, pandas-UDF
+        # non-SQL-expressible (hash kernels, iterative k-means, Python
         # mining, HLL sketch internals) -> rows-only driver check by design.
     }

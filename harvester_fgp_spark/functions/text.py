@@ -101,90 +101,64 @@ BBOX_RE = re.compile(
 )
 
 
+def _blank(m: re.Match) -> str:
+    return " " * len(m.group(0))
+
+
 def mine_payloads_flat(texts):
-    """Fully-vectorized E2 miner: pandas Series -> flat numpy arrays
+    """Flat-array E2 miner: a sequence of texts (a list or a pandas
+    Series; anything not a ``str`` is no text) -> flat numpy arrays
     ``(row_idx, payload_idx, kind, lat, lon, west, south, east, north)``.
 
     Same semantics as ``mine_payloads`` per row (bboxes first in match
     order, then points in match order, same range checks, bbox spans
-    masked before point extraction) but with ZERO per-row Python: both
-    regex passes are ``Series.str.extractall`` (C loop), ordering is one
-    lexsort, and payload ordinals come from unique-offset arithmetic.
+    masked before point extraction): one ``findall`` per pattern per row,
+    the point scan only on rows holding a comma (COORD_PAIR_RE requires
+    one, and bbox masking never removes one), and no per-payload dict.
     NaN in the float arrays means "missing" (regexes never produce NaN).
     Property-tested equal to the scalar kernel in tests/test_text_kernels.
     """
     import numpy as np
 
-    t = texts.reset_index(drop=True).fillna("")
-
-    bb = t.str.extractall(BBOX_RE)
-    if len(bb):
-        rows = bb.index.get_level_values(0).to_numpy()
-        w = bb[0].astype(float).to_numpy()
-        e = bb[1].astype(float).to_numpy()
-        s = bb[2].astype(float).to_numpy()
-        n = bb[3].astype(float).to_numpy()
-        # west > east allowed: antimeridian-crossing bbox (ISO 19115)
-        ok = (
-            (-180.0 <= w) & (w <= 180.0) & (-180.0 <= e) & (e <= 180.0)
-            & (s <= n) & (-90.0 <= s) & (n <= 90.0)
-        )
-        b_rows, bw, bs, be, bn = rows[ok], w[ok], s[ok], e[ok], n[ok]
-        # mask EVERY matched span (valid or not), exactly like the scalar
-        # kernel, so bbox numbers are never re-mined as point pairs
-        mask_rows = np.unique(rows)
-        t = t.copy()
-        t.iloc[mask_rows] = t.iloc[mask_rows].str.replace(
-            BBOX_RE, lambda m: " " * len(m.group(0)), regex=True
-        )
-    else:
-        b_rows = np.empty(0, dtype=np.int64)
-        bw = bs = be = bn = np.empty(0, dtype=np.float64)
-
-    # COORD_PAIR_RE requires a literal comma, so scanning comma-free rows
-    # is pure waste (~35% of prefiltered rows are bbox-only) — and bbox
-    # masking never removes a comma (matched spans contain none), so the
-    # subset is exact, not heuristic. t has a RangeIndex, so extractall's
-    # level-0 labels on the subset are already original row numbers.
-    with_comma = t[t.str.contains(",", regex=False)]
-    pts = with_comma.str.extractall(COORD_PAIR_RE)
-    if len(pts):
-        rows = pts.index.get_level_values(0).to_numpy()
-        plat = pts[0].astype(float).to_numpy()
-        plon = pts[1].astype(float).to_numpy()
-        ok = (-90.0 <= plat) & (plat <= 90.0) & (-180.0 <= plon) & (plon <= 180.0)
-        p_rows, plat, plon = rows[ok], plat[ok], plon[ok]
-    else:
-        p_rows = np.empty(0, dtype=np.int64)
-        plat = plon = np.empty(0, dtype=np.float64)
-
-    nb, npt = len(b_rows), len(p_rows)
-    rows_all = np.concatenate([b_rows, p_rows]).astype(np.int64)
-    rank = np.concatenate(
-        [np.zeros(nb, dtype=np.int8), np.ones(npt, dtype=np.int8)]
+    nan = float("nan")
+    rows: list[int] = []
+    pidx: list[int] = []
+    is_pt: list[bool] = []
+    vals: list[tuple] = []
+    for i, t in enumerate(texts):
+        if not isinstance(t, str):
+            continue
+        k = 0
+        bbs = BBOX_RE.findall(t)
+        if bbs:
+            for g in bbs:
+                w, e, s, n = map(float, g)
+                # west > east allowed: antimeridian-crossing bbox (ISO 19115)
+                if -180.0 <= w <= 180.0 and -180.0 <= e <= 180.0 and -90.0 <= s <= n <= 90.0:
+                    rows.append(i)
+                    pidx.append(k)
+                    is_pt.append(False)
+                    vals.append((nan, nan, w, s, e, n))
+                    k += 1
+            # mask EVERY matched span (valid or not), exactly like the
+            # scalar kernel, so bbox numbers are never re-mined as points
+            t = BBOX_RE.sub(_blank, t)
+        if "," in t:
+            for la, lo in COORD_PAIR_RE.findall(t):
+                lat, lon = float(la), float(lo)
+                if -90.0 <= lat <= 90.0 and -180.0 <= lon <= 180.0:
+                    rows.append(i)
+                    pidx.append(k)
+                    is_pt.append(True)
+                    vals.append((lat, lon, nan, nan, nan, nan))
+                    k += 1
+    v = np.array(vals, dtype=np.float64).reshape(-1, 6)
+    return (
+        np.array(rows, dtype=np.int64),
+        np.array(pidx, dtype=np.int64),
+        np.where(np.array(is_pt, dtype=bool), "point", "bbox"),
+        *np.ascontiguousarray(v.T),
     )
-    # (row, bbox-before-point, original match order) — arange keeps the
-    # within-group extractall order under lexsort
-    order = np.lexsort((np.arange(nb + npt), rank, rows_all))
-    rows_o = rows_all[order]
-    kind = np.where(rank[order] == 0, "bbox", "point")
-    nanb = np.full(nb, np.nan)
-    nanp = np.full(npt, np.nan)
-    lat = np.concatenate([nanb, plat])[order]
-    lon = np.concatenate([nanb, plon])[order]
-    west = np.concatenate([bw, nanp])[order]
-    south = np.concatenate([bs, nanp])[order]
-    east = np.concatenate([be, nanp])[order]
-    north = np.concatenate([bn, nanp])[order]
-
-    if len(rows_o):
-        _, first_idx, counts = np.unique(
-            rows_o, return_index=True, return_counts=True
-        )
-        pidx = np.arange(len(rows_o)) - np.repeat(first_idx, counts)
-    else:
-        pidx = np.empty(0, dtype=np.int64)
-    return rows_o, pidx, kind, lat, lon, west, south, east, north
 
 
 def mine_payloads(text: str | None) -> list[dict]:

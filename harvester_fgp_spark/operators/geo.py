@@ -12,20 +12,17 @@ Division of labor, chosen for scale:
   higher-order ray cast decides membership. The numpy G1 kernel
   (geo.cells.encode) is the test oracle for the native cell encode.
 - Python only where the kernel has no native form: polygon
-  rasterization (``polygon_tiles``, mapInPandas) and ring
-  simplification (``simplify_rings``, one pandas UDF).
+  rasterization (``polygon_tiles``) and ring simplification
+  (``simplify_rings``), each one ``mapInArrow`` stage.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType
+from pyspark.sql.types import ArrayType, BooleanType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..geo import cells as _cells
@@ -184,7 +181,7 @@ def packed_tile_col(z: Column, x: Column, y: Column) -> Column:
 # --- G4: broadcast-R-tree point-in-polygon join ------------------------------------
 
 
-def build_polygon_index(polygons_pdf: pd.DataFrame) -> _pip.PolygonIndex:
+def build_polygon_index(polygons_pdf) -> _pip.PolygonIndex:
     """polygons (FIXTURES.md §2 pandas form) -> broadcastable PolygonIndex.
 
     With a ``rings`` column (list of rings per polygon — holes and
@@ -211,7 +208,7 @@ def build_polygon_index(polygons_pdf: pd.DataFrame) -> _pip.PolygonIndex:
     return _pip.PolygonIndex(polygons_pdf["polygon_id"].tolist(), rings)
 
 
-def _polygon_cell_map_rows(polygons_pdf: pd.DataFrame) -> list[tuple]:
+def _polygon_cell_map_rows(polygons_pdf) -> list[tuple]:
     """Driver-side (tiny dimension): COVER_LEVEL cell -> candidate
     polygons, each carrying its polygon_id and a FLAT edge array across
     all rings (even-odd parity over concatenated ring edges == XOR of
@@ -257,7 +254,7 @@ _CELL_MAP_SCHEMA = (
 def pip_join_native(
     spark: SparkSession,
     points: DataFrame,
-    polygons_pdf: pd.DataFrame,
+    polygons_pdf,
     lon_col: str = "lon",
     lat_col: str = "lat",
     how: str = "left",
@@ -320,21 +317,25 @@ def pip_join_native(
 def polygon_tiles(polygons: DataFrame, z: int = _tiles.DEFAULT_TILE_Z) -> DataFrame:
     """Rasterize each polygon to the set of z-level tiles it covers.
 
-    mapInPandas over the ring arrays (scanline kernel in geo.tiles); tile
+    mapInArrow over the ring arrays (scanline kernel in geo.tiles); tile
     ids come back packed and are unpacked with native shifts. A ``rings``
     column (holes / multipolygon parts, round 3) rasterizes under the
     same even-odd rule as the PIP index; otherwise the single ``ring``
-    column is used. Output: (polygon_id, tile_z, tile_x, tile_y), one
-    row per covered tile.
+    column is used. A null ring covers no tile. Output: (polygon_id,
+    tile_z, tile_x, tile_y), one row per covered tile.
     """
     multi = "rings" in polygons.columns
     in_cols = ["polygon_id", "rings" if multi else "ring"]
 
-    def _rast(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def _rast(batches):
+        for b in batches:
             pids: list[str] = []
             tids: list[int] = []
-            for pid, poly in zip(pdf["polygon_id"], pdf[in_cols[1]]):
+            for pid, poly in zip(
+                b.column(0).to_pylist(), b.column(1).to_pylist()
+            ):
+                if poly is None:
+                    continue
                 # dateline rings split into in-range parts (round 4):
                 # even-odd across disjoint parts rasterizes their union
                 rings = _cells.split_rings_dateline(
@@ -343,9 +344,12 @@ def polygon_tiles(polygons: DataFrame, z: int = _tiles.DEFAULT_TILE_Z) -> DataFr
                 t = _tiles.rasterize_rings_to_tiles(rings, z)
                 pids.extend([pid] * len(t))
                 tids.extend(t.tolist())
-            yield pd.DataFrame({"polygon_id": pids, "tile_id": tids})
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(pids, pa.string()), pa.array(tids, pa.int64())],
+                names=["polygon_id", "tile_id"],
+            )
 
-    raw = polygons.select(*in_cols).mapInPandas(
+    raw = polygons.select(*in_cols).mapInArrow(
         _rast, "polygon_id string, tile_id long"
     )
     mask = F.lit((1 << 29) - 1)
@@ -1045,31 +1049,37 @@ def simplify_rings(
     covers when collection polygons are over-digitized.
 
     Spark shape: the ring explodes to two parallel ``array<double>``
-    columns natively (``transform``), one Arrow-batched pandas UDF
-    returns the keep-MASK (array<boolean>), and the simplified ring is
-    rebuilt natively by ``filter(arrays_zip(...))`` — the Python
-    boundary carries only doubles in / booleans out, never structs.
-    Per-row kernel cost is O(n log n) on vertex count; batches amortize
-    the Arrow transfer.
+    columns natively (``transform``), one ``mapInArrow`` stage appends the
+    keep-MASK (array<boolean>), and the simplified ring is rebuilt
+    natively by ``filter(arrays_zip(...))`` — the Python boundary carries
+    only doubles in / booleans out, never structs. A null ring gets a
+    null mask and so a null ``out_col``. Per-row kernel cost is
+    O(n log n) on vertex count; batches amortize the Arrow transfer.
     """
-    from pyspark.sql.types import BooleanType
-
     from ..geo import simplify as _simplify
 
-    @pandas_udf(ArrayType(BooleanType()))
-    def _mask(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        out = []
-        for x, y in zip(xs, ys):
-            out.append(
-                _simplify.simplify_mask(
-                    np.asarray(x, float), np.asarray(y, float), tol
-                ).tolist()
-            )
-        return pd.Series(out)
+    xy = df.withColumn(
+        "_xs", F.transform(F.col(ring_col), lambda p: p["x"])
+    ).withColumn("_ys", F.transform(F.col(ring_col), lambda p: p["y"]))
+    schema = StructType(
+        xy.schema.fields + [StructField("_keep", ArrayType(BooleanType()), True)]
+    )
 
-    xs = F.transform(F.col(ring_col), lambda p: p["x"])
-    ys = F.transform(F.col(ring_col), lambda p: p["y"])
-    with_mask = df.withColumn("_keep", _mask(xs, ys))
+    def _mask(batches):
+        for b in batches:
+            xs = b.column("_xs").to_numpy(zero_copy_only=False)
+            ys = b.column("_ys").to_numpy(zero_copy_only=False)
+            keep = [
+                None
+                if x is None
+                else _simplify.simplify_mask(
+                    np.asarray(x, float), np.asarray(y, float), tol
+                )
+                for x, y in zip(xs, ys)
+            ]
+            yield b.append_column("_keep", pa.array(keep, pa.list_(pa.bool_())))
+
+    with_mask = xy.mapInArrow(_mask, schema).drop("_xs", "_ys")
     zipped = F.arrays_zip(F.col(ring_col).alias("p"), F.col("_keep").alias("k"))
     rebuilt = F.transform(
         F.filter(zipped, lambda z: z["k"]), lambda z: z["p"]

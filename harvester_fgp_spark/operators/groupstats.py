@@ -1,99 +1,32 @@
-"""A4: grouped-map pandas UDF (SURVEY.md §2.6) — per-tile reductions that
-need whole-group access in Python.
+"""A4: per-tile reductions (SURVEY.md §2.6) as one native aggregate.
 
 ``tile_group_stats`` computes, per web-mercator tile, the payload centroid
-and the bbox union of its points via ``groupBy(...).applyInPandas`` — the
-grouped-map surface (SURVEY §2.11). The kernel is pure numpy over the
-Arrow-delivered group frame (no per-row Python).
+and the bbox union of its points with ``groupBy(...).agg`` — no Python
+runs: every output is a builtin aggregate over a native expression.
 
 Exactness contract with the DuckDB oracle (CLAUDE.md rules): the centroid
 divides an INTEGER centi-degree sum by (100 * n) — one exactly-rounded
 IEEE division on inputs both engines derive bit-identically — so the
 driver's value-hash matches exactly, unlike a float running sum whose
-result depends on accumulation order.
+result depends on accumulation order. floor(x*100 + 0.5), NOT round:
+Spark's and DuckDB's ROUND are half-away-from-zero while numpy's rint
+is half-to-even, and the explicit floor(+0.5) is one op sequence every
+engine reproduces (the oracle uses the same longhand).
 
-Scale shape: applyInPandas shuffles once on the group key (same cost as
-the equivalent native groupBy) and streams one Arrow batch per group;
-group sizes are bounded by tile granularity, and a hot tile is exactly
-the skew case J7 salting exists for upstream.
+Scale shape: one shuffle on the group key with partial aggregation
+before it; a hot tile is exactly the skew case J7 salting exists for
+upstream.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
-
-TILE_STATS_SCHEMA = StructType(
-    [
-        StructField("tile_x", LongType(), False),
-        StructField("tile_y", LongType(), False),
-        StructField("n_points", LongType(), False),
-        StructField("centroid_lat", DoubleType(), True),
-        StructField("centroid_lon", DoubleType(), True),
-        StructField("min_lat", DoubleType(), True),
-        StructField("max_lat", DoubleType(), True),
-        StructField("min_lon", DoubleType(), True),
-        StructField("max_lon", DoubleType(), True),
-    ]
-)
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
-def _tile_stats(pdf: pd.DataFrame) -> pd.DataFrame:
-    lat = pdf["lat"].to_numpy(dtype=np.float64)
-    lon = pdf["lon"].to_numpy(dtype=np.float64)
-    # integer centi-degree sums -> order-insensitive, engine-exact centroid.
-    # floor(x*100 + 0.5), NOT rint: rint is half-to-even while the DuckDB
-    # twin's ROUND is half-away-from-zero — they disagree whenever x*100
-    # lands on an exact .5 tie (e.g. 2.125). floor(+0.5) is one explicit
-    # IEEE op sequence both engines reproduce bit-identically (the oracle
-    # uses the same FLOOR(x*100 + 0.5) longhand).
-    la = np.floor(lat * 100.0 + 0.5).astype(np.int64)
-    lo = np.floor(lon * 100.0 + 0.5).astype(np.int64)
-    n = len(pdf)
-    return pd.DataFrame(
-        {
-            "tile_x": [np.int64(pdf["tile_x"].iat[0])],
-            "tile_y": [np.int64(pdf["tile_y"].iat[0])],
-            "n_points": [np.int64(n)],
-            "centroid_lat": [la.sum() / (100.0 * n)],
-            "centroid_lon": [lo.sum() / (100.0 * n)],
-            "min_lat": [lat.min()],
-            "max_lat": [lat.max()],
-            "min_lon": [lon.min()],
-            "max_lon": [lon.max()],
-        }
-    )
-
-
-# --- GROUPED_AGG surface (SURVEY §2.11, exercised round 3) -------------------
-# A pandas_udf whose kernel reduces a Series to a scalar registers as a
-# grouped-aggregate UDF: usable inside groupBy().agg(...) next to native
-# aggregates (and over windows), with Spark handling the grouping — the
-# lighter-weight sibling of the grouped-map path above when the reduction
-# is per-column. Same exactness contract: integer centi-degree sum with
-# the explicit floor(x*100 + 0.5) tie-break, one exact IEEE division.
-from pyspark.sql.pandas.functions import pandas_udf
-
-
-@pandas_udf(DoubleType())
-def centideg_mean_agg(v: pd.Series) -> float:
-    a = np.floor(v.to_numpy(dtype=np.float64) * 100.0 + 0.5).astype(np.int64)
-    return float(a.sum() / (100.0 * len(a)))
-
-
-# Spark refuses to mix GROUPED_AGG pandas UDFs with native aggregates in
-# one agg() (INVALID_PANDAS_UDF_PLACEMENT), so the count rides the same
-# surface when used alongside centideg_mean_agg.
-@pandas_udf(LongType())
-def count_agg(v: pd.Series) -> int:
-    return len(v)
+def _centideg_mean(c: str) -> Column:
+    """Exact centroid coordinate: integer centi-degree sum / (100 n)."""
+    return F.sum(F.floor(F.col(c) * 100.0 + 0.5)) / (F.lit(100.0) * F.count("*"))
 
 
 def tile_group_stats(points_tiled: DataFrame) -> DataFrame:
@@ -102,6 +35,12 @@ def tile_group_stats(points_tiled: DataFrame) -> DataFrame:
     Input must already carry long-typed tile_x/tile_y (e.g. from
     operators.geo.tile_cols); one row per tile comes back.
     """
-    return points_tiled.groupBy("tile_x", "tile_y").applyInPandas(
-        _tile_stats, TILE_STATS_SCHEMA
+    return points_tiled.groupBy("tile_x", "tile_y").agg(
+        F.count("*").alias("n_points"),
+        _centideg_mean("lat").alias("centroid_lat"),
+        _centideg_mean("lon").alias("centroid_lon"),
+        F.min("lat").alias("min_lat"),
+        F.max("lat").alias("max_lat"),
+        F.min("lon").alias("min_lon"),
+        F.max("lon").alias("max_lon"),
     )

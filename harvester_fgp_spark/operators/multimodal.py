@@ -4,23 +4,27 @@ Images/audio/video ride as opaque ``binary`` columns with a typed metadata
 struct. The decode/feature kernels are STUBS behind a clearly-marked seam
 (no image/audio libs exist in this container — see ``_decode_image``);
 everything Spark-side is real and tested: schema, Arrow batch shape,
-mapInPandas signature, bounded batch sizing for large blobs.
+``mapInArrow`` kernels, bounded batch sizing for large blobs.
 
 Production note: bound spark.sql.execution.arrow.maxRecordsPerBatch
 (session.py uses 16384, sized for ~KB text payloads) when blob columns
-ride through mapInPandas — batch bytes, not batch rows, are what OOMs a
+ride through mapInArrow — batch bytes, not batch rows, are what OOMs a
 Python worker; for multi-MB media blobs drop it to a few hundred.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
+    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -67,75 +71,34 @@ def _decode_image(payload: bytes) -> tuple[int, int]:
 
 
 def extract_media_meta(media: DataFrame) -> DataFrame:
-    """binary blobs -> typed metadata rows via mapInPandas.
+    """binary blobs -> typed metadata rows via one mapInArrow stage.
 
     The native parts (byte length, sha) stay JVM-side; only the decode
-    stub runs in Python, and only the payload column crosses the boundary.
+    seam (``_decode_image``) runs in Python, once per image row.
     """
-    narrow = media.select("media_id", "kind", "mime", "payload").withColumn(
-        "n_bytes", F.length("payload").cast("long")
-    ).withColumn("sha", F.sha2(F.col("payload"), 256))
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = [
-                _decode_image(bytes(p)) if p is not None and k == "image" else (None, None)
-                for p, k in zip(pdf["payload"], pdf["kind"])
-            ]
-            out = pdf[["media_id", "kind", "mime", "n_bytes", "sha"]].copy()
-            out["width"] = pd.array([d[0] for d in dims], dtype="Int32")
-            out["height"] = pd.array([d[1] for d in dims], dtype="Int32")
-            yield out[
-                ["media_id", "kind", "mime", "n_bytes", "width", "height", "sha"]
-            ]
-
-    return narrow.mapInPandas(_decode, MEDIA_META_SCHEMA)
-
-
-def extract_media_meta_arrow(media: DataFrame) -> DataFrame:
-    """mapInArrow twin of ``extract_media_meta`` (SURVEY §2.11 surface,
-    exercised round 3): the batch arrives as a pyarrow RecordBatch —
-    no pandas materialization at all — and the decode fake runs as numpy
-    over the arrow buffers. Output is row-identical to the mapInPandas
-    path (same driver oracle); the pandas variant remains the default
-    because real decoders (PIL/cv2) want Python objects anyway.
-    """
-    import numpy as np
-    import pyarrow as pa
-
     narrow = media.select("media_id", "kind", "mime", "payload").withColumn(
         "n_bytes", F.length("payload").cast("long")
     ).withColumn("sha", F.sha2(F.col("payload"), 256))
 
     def _decode(batches):
         for b in batches:
-            nb = b.column("n_bytes").to_numpy(zero_copy_only=False)
-            kind = b.column("kind").to_pylist()
-            # dtype=bool: an EMPTY batch's np.array([]) is float64 and
-            # float64 & bool raises — zero-row arrow batches do occur
-            is_img = (
-                np.array([k == "image" for k in kind], dtype=bool)
-                & ~pd.isna(nb).astype(bool)
-            )
-            nbi = np.where(pd.isna(nb), 0, nb).astype(np.int64)
-            # matches _decode_image exactly, incl. the empty-payload (0,0)
-            w = np.where(nbi == 0, 0, nbi % 1920 + 1).astype(np.int32)
-            h = np.where(nbi == 0, 0, nbi % 1080 + 1).astype(np.int32)
-            mask = ~is_img
+            dims = [
+                _decode_image(p) if p is not None and k == "image" else (None, None)
+                for p, k in zip(
+                    b.column("payload").to_pylist(), b.column("kind").to_pylist()
+                )
+            ]
             yield pa.RecordBatch.from_arrays(
                 [
                     b.column("media_id"),
                     b.column("kind"),
                     b.column("mime"),
                     b.column("n_bytes"),
-                    pa.array(w, type=pa.int32(), mask=mask),
-                    pa.array(h, type=pa.int32(), mask=mask),
+                    pa.array([d[0] for d in dims], pa.int32()),
+                    pa.array([d[1] for d in dims], pa.int32()),
                     b.column("sha"),
                 ],
-                names=[
-                    "media_id", "kind", "mime", "n_bytes",
-                    "width", "height", "sha",
-                ],
+                names=MEDIA_META_SCHEMA.fieldNames(),
             )
 
     return narrow.mapInArrow(_decode, MEDIA_META_SCHEMA)
@@ -152,7 +115,7 @@ FRAME_SCHEMA = StructType(
 
 
 def sample_frames(media: DataFrame, frame_ms: int = 1000) -> DataFrame:
-    """Video frame sampling: ONE blob row -> MANY frame rows (mapInPandas;
+    """Video frame sampling: ONE blob row -> MANY frame rows (mapInArrow;
     a scalar UDF can't change cardinality).
 
     Decode seam is stubbed like _decode_image: the fake "container" holds
@@ -161,36 +124,38 @@ def sample_frames(media: DataFrame, frame_ms: int = 1000) -> DataFrame:
     oracle-checkable while the real-decoder swap point stays obvious.
     """
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def _frames(batches):
+        for b in batches:
             ids, idxs, tss, pls = [], [], [], []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
+            for mid, p in zip(
+                b.column("media_id").to_pylist(), b.column("payload").to_pylist()
+            ):
                 if p is None:
                     continue
-                b = bytes(p)
-                n_frames = len(b) % 7 + 1
-                step = max(1, len(b) // n_frames)
+                n_frames = len(p) % 7 + 1
+                step = max(1, len(p) // n_frames)
                 for j in range(n_frames):
                     ids.append(mid)
                     idxs.append(j)
                     tss.append(j * frame_ms)
-                    pls.append(b[j * step : (j + 1) * step])
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.array(ids, dtype="Int64"),
-                    "frame_idx": pd.array(idxs, dtype="Int32"),
-                    "ts_ms": pd.array(tss, dtype="Int64"),
-                    "frame_payload": pd.Series(pls, dtype=object),
-                }
+                    pls.append(p[j * step : (j + 1) * step])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids, pa.int64()),
+                    pa.array(idxs, pa.int32()),
+                    pa.array(tss, pa.int64()),
+                    pa.array(pls, pa.binary()),
+                ],
+                names=FRAME_SCHEMA.fieldNames(),
             )
 
     return media.filter(F.col("kind") == "video").select(
         "media_id", "payload"
-    ).mapInPandas(_frames, FRAME_SCHEMA)
+    ).mapInArrow(_frames, FRAME_SCHEMA)
 
 
 def resize_image(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize seam: blob -> (blob', width, height) via mapInPandas.
+    """Image resize seam: blob -> (blob', width, height) via mapInArrow.
 
     Real decoder would be PIL resize; the fake keeps the first
     width*height//64 bytes (deterministic) so downstream plumbing —
@@ -206,19 +171,22 @@ def resize_image(media: DataFrame, width: int, height: int) -> DataFrame:
     )
     keep = max(1, width * height // 64)
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[["media_id"]].copy()
-            out["payload"] = [
-                None if p is None else bytes(p)[:keep] for p in pdf["payload"]
-            ]
-            out["width"] = pd.array([width] * len(pdf), dtype="Int32")
-            out["height"] = pd.array([height] * len(pdf), dtype="Int32")
-            yield out
+    def _resize(batches):
+        for b in batches:
+            n = b.num_rows
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column("media_id"),
+                    pc.binary_slice(b.column("payload"), 0, keep),
+                    pa.array([width] * n, pa.int32()),
+                    pa.array([height] * n, pa.int32()),
+                ],
+                names=out_schema.fieldNames(),
+            )
 
     return media.filter(F.col("kind") == "image").select(
         "media_id", "payload"
-    ).mapInPandas(_resize, out_schema)
+    ).mapInArrow(_resize, out_schema)
 
 
 def embed_media(media: DataFrame, dim: int = 64) -> DataFrame:
@@ -230,11 +198,6 @@ def embed_media(media: DataFrame, dim: int = 64) -> DataFrame:
     (cosine_topk / ann_lsh / ann_ivf / exact_near_dup_pairs) end-to-end;
     tests/test_multimodal_chain.py drives that chain.
     """
-    import hashlib
-
-    import numpy as np
-    from pyspark.sql.types import ArrayType, FloatType
-
     out_schema = StructType(
         [
             StructField("media_id", LongType(), False),
@@ -242,21 +205,19 @@ def embed_media(media: DataFrame, dim: int = 64) -> DataFrame:
         ]
     )
 
-    def _embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def _embed(batches):
+        for b in batches:
             embs = []
-            for p in pdf["payload"]:
+            for p in b.column("payload").to_pylist():
                 if p is None:
                     embs.append(None)
                     continue
-                seed = int.from_bytes(
-                    hashlib.sha256(bytes(p)).digest()[:8], "big"
-                )
+                seed = int.from_bytes(hashlib.sha256(p).digest()[:8], "big")
                 v = np.random.default_rng(seed).standard_normal(dim)
-                v = (v / np.linalg.norm(v)).astype(np.float32)
-                embs.append(v.tolist())
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "embedding": embs}
+                embs.append((v / np.linalg.norm(v)).astype(np.float32))
+            yield pa.RecordBatch.from_arrays(
+                [b.column("media_id"), pa.array(embs, pa.list_(pa.float32()))],
+                names=["media_id", "embedding"],
             )
 
-    return media.select("media_id", "payload").mapInPandas(_embed, out_schema)
+    return media.select("media_id", "payload").mapInArrow(_embed, out_schema)

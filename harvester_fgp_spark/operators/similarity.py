@@ -3,7 +3,8 @@
 Exact paths:
 
 - ``cosine_topk``: brute-force exact top-k, the correctness baseline
-  (cogrouped Arrow kernel, bit-identical to native dot products).
+  (one block-partitioned Arrow kernel, bit-identical to native dot
+  products).
 - ``exact_near_dup_pairs``: every pair with cosine >= t, from a
   guaranteed-complete projection-bucket equi-join.
 
@@ -30,11 +31,17 @@ tests/test_similarity.py.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from ..sources.tables import local_table
@@ -94,12 +101,15 @@ def cosine_topk(
     interpreted zip_with/aggregate lambda chain PER PAIR (~130 expression
     evaluations per 64-dim dot product; 55.9 s at 400 x 20k pairs, the
     round-7 driver bench's single most expensive query). The pairs still
-    all get computed — exactness requires it — but now inside a cogrouped
-    Arrow kernel that runs the dot products as ~d vectorized numpy passes
-    per (candidate-block x query-set) tile: candidates hash into
-    n_blocks = max(2 x defaultParallelism, 8) blocks, queries replicate
-    to every block (Q x n_blocks rows of metadata-sized shuffle, guide
-    §2.3), and each block emits only its margin-guarded top-k superset
+    all get computed — exactness requires it — but now inside one
+    ``mapInArrow`` kernel that runs the dot products as ~d vectorized
+    numpy passes per (candidate-block x query-set) tile: candidates hash
+    into n_blocks = max(2 x defaultParallelism, 8) blocks, queries
+    replicate to every block (Q x n_blocks rows of metadata-sized
+    shuffle, guide §2.3), one hash shuffle on the block id brings each
+    block's rows together (AQE may coalesce several blocks into one
+    task; the kernel groups its partition by block), and each block
+    emits only its margin-guarded top-k superset
     (~k rows per query per block), so the O(Q x N) pair stream never
     hits a shuffle. A native
     round + row_number window over ~k x n_blocks rows per query finishes.
@@ -111,68 +121,42 @@ def cosine_topk(
     ROUND/rank runs in Spark on the raw doubles, so every emitted
     (q_id, c_id, rank, cos_sim) row is identical to the round-7 plan's
     (verified row-exact at sf0.001/0.01/0.1/1.0; the superset-margin
-    argument above covers selection). Null query ids and zero-norm
-    vectors have no cosine and drop out.
+    argument above covers selection). Null query ids, null embeddings
+    and zero-norm vectors have no cosine and drop out.
     """
     spark = queries.sparkSession
     n_blocks = max(int(spark.sparkContext.defaultParallelism) * 2, 8)
-    q_id_t = queries.schema[q_id].dataType.simpleString()
-    c_id_t = candidates.schema[c_id].dataType.simpleString()
+    q_sch, c_sch = queries.schema, candidates.schema
     blocks = spark.range(n_blocks).select(F.col("id").cast("int").alias("_blk"))
-    # a null id is no query (the crossJoin plan's q_id != c_id was null)
+    # one frame, separate id and embedding columns per side (no type is
+    # widened): a query row has a non-null _qid (a null id is no query —
+    # the crossJoin plan's q_id != c_id was null), a candidate row a null
+    # one. Queries replicate to every block.
     qrep = (
         queries.filter(F.col(q_id).isNotNull())
-        .select(q_id, q_emb)
+        .select(
+            F.col(q_id).alias("_qid"),
+            F.col(q_emb).alias("_qe"),
+            F.lit(None).cast(c_sch[c_id].dataType).alias("_cid"),
+            F.lit(None).cast(c_sch[c_emb].dataType).alias("_ce"),
+        )
         .crossJoin(F.broadcast(blocks))
     )
-    cblk = candidates.select(c_id, c_emb).withColumn(
-        "_blk", F.pmod(F.xxhash64(F.col(c_id)), F.lit(n_blocks)).cast("int")
+    cblk = candidates.select(
+        F.lit(None).cast(q_sch[q_id].dataType).alias("_qid"),
+        F.lit(None).cast(q_sch[q_emb].dataType).alias("_qe"),
+        F.col(c_id).alias("_cid"),
+        F.col(c_emb).alias("_ce"),
+        F.pmod(F.xxhash64(F.col(c_id)), F.lit(n_blocks)).cast("int").alias("_blk"),
     )
-    margin = _TOPK_ROUND_MARGIN
-
-    def _block_topk(cands: pd.DataFrame, qs: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({q_id: [], c_id: [], "_cos": []})
-        if len(cands) == 0 or len(qs) == 0:
-            return empty
-        C = np.stack(cands[c_emb].to_numpy()).astype(np.float64)
-        Q = np.stack(qs[q_emb].to_numpy()).astype(np.float64)
-        # left-to-right accumulation over dims: IEEE-identical to the
-        # native aggregate(zip_with(...)) sequential double sum
-        acc = np.zeros((Q.shape[0], C.shape[0]))
-        qn = np.zeros(Q.shape[0])
-        cn = np.zeros(C.shape[0])
-        for j in range(C.shape[1]):
-            acc += Q[:, j : j + 1] * C[:, j]
-            qn += Q[:, j] * Q[:, j]
-            cn += C[:, j] * C[:, j]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = acc / (np.sqrt(qn)[:, None] * np.sqrt(cn)[None, :])
-        # a zero norm gives a non-finite cosine: such pairs drop out, as
-        # the native try_divide's null does (cosine_sim_col)
-        valid = np.isfinite(cos) & (
-            qs[q_id].to_numpy()[:, None] != cands[c_id].to_numpy()[None, :]
-        )
-        sel = np.where(valid, cos, -np.inf)
-        if sel.shape[1] >= k:
-            kth = np.sort(sel, axis=1)[:, -k]
-        else:
-            kth = np.full(sel.shape[0], -np.inf)
-        keep = valid & (sel >= kth[:, None] - margin)
-        qi, ci = np.nonzero(keep)
-        return pd.DataFrame(
-            {
-                q_id: qs[q_id].to_numpy()[qi],
-                c_id: cands[c_id].to_numpy()[ci],
-                "_cos": cos[qi, ci],
-            }
-        )
-
+    schema = (
+        f"{q_id} {q_sch[q_id].dataType.simpleString()}, "
+        f"{c_id} {c_sch[c_id].dataType.simpleString()}, _cos double"
+    )
     out = (
-        cblk.groupby("_blk")
-        .cogroup(qrep.groupby("_blk"))
-        .applyInPandas(
-            _block_topk, schema=f"{q_id} {q_id_t}, {c_id} {c_id_t}, _cos double"
-        )
+        qrep.unionByName(cblk)
+        .repartition("_blk")
+        .mapInArrow(_block_topk(k, [q_id, c_id, "_cos"]), schema)
     )
     w = Window.partitionBy(q_id).orderBy(F.desc("cos_sim"), F.asc(c_id))
     return (
@@ -180,6 +164,65 @@ def cosine_topk(
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(q_id, c_id, "rank", "cos_sim")
+    )
+
+
+def _block_topk(k: int, names: list):
+    """cosine_topk's kernel over one partition of (_qid, _qe, _cid, _ce,
+    _blk) rows: buffers the partition, and per block emits every (query,
+    candidate, cosine) within the rank margin of the query's k-th best.
+    Rows with a null embedding have no cosine and drop out."""
+
+    def kernel(batches):
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        t = t.filter(pc.or_(pc.is_valid(t["_qe"]), pc.is_valid(t["_ce"])))
+        blk = t["_blk"].to_numpy()
+        is_q = pc.is_valid(t["_qid"]).to_numpy()
+        for b in np.unique(blk):
+            qs = t.filter(pa.array(is_q & (blk == b)))
+            cs = t.filter(pa.array(~is_q & (blk == b)))
+            if qs.num_rows and cs.num_rows:
+                yield _topk_pairs(qs, cs, k, names)
+
+    return kernel
+
+
+def _topk_pairs(qs, cs, k: int, names: list) -> pa.RecordBatch:
+    """Margin-guarded top-k superset of one block's query x candidate
+    cosines (see _TOPK_ROUND_MARGIN)."""
+    Q = _matrix(qs["_qe"].combine_chunks())
+    C = _matrix(cs["_ce"].combine_chunks())
+    # left-to-right accumulation over dims: IEEE-identical to the
+    # native aggregate(zip_with(...)) sequential double sum
+    acc = np.zeros((Q.shape[0], C.shape[0]))
+    qn = np.zeros(Q.shape[0])
+    cn = np.zeros(C.shape[0])
+    for j in range(C.shape[1]):
+        acc += Q[:, j : j + 1] * C[:, j]
+        qn += Q[:, j] * Q[:, j]
+        cn += C[:, j] * C[:, j]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = acc / (np.sqrt(qn)[:, None] * np.sqrt(cn)[None, :])
+    qid = qs["_qid"].combine_chunks()
+    cid = cs["_cid"].combine_chunks()
+    # a zero norm gives a non-finite cosine: such pairs drop out, as the
+    # native try_divide's null does (cosine_sim_col)
+    valid = np.isfinite(cos) & (
+        qid.to_numpy(zero_copy_only=False)[:, None]
+        != cid.to_numpy(zero_copy_only=False)[None, :]
+    )
+    sel = np.where(valid, cos, -np.inf)
+    if sel.shape[1] >= k:
+        kth = np.sort(sel, axis=1)[:, -k]
+    else:
+        kth = np.full(sel.shape[0], -np.inf)
+    qi, ci = np.nonzero(valid & (sel >= kth[:, None] - _TOPK_ROUND_MARGIN))
+    return pa.RecordBatch.from_arrays(
+        [qid.take(pa.array(qi)), cid.take(pa.array(ci)), pa.array(cos[qi, ci])],
+        names=names,
     )
 
 
@@ -200,8 +243,6 @@ def _pair_cos(thr_keep: float, emit_cos: bool):
     the threshold."""
 
     def kernel(batches):
-        import pyarrow as pa
-
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -313,23 +354,47 @@ def exact_near_dup_pairs(
     )
 
 
-def lsh_buckets_udf(dim: int):
+def _append_codes(df: DataFrame, emb_col: str, name: str, dtype, codes_fn) -> DataFrame:
+    """``df`` plus an ``array<dtype>`` column ``name``, appended by one
+    mapInArrow stage: ``codes_fn`` maps the (rows, dim) float64 matrix of
+    a batch's non-null embeddings to a (rows, width) integer matrix, one
+    list per row; a null embedding gets a null list."""
+    schema = StructType(df.schema.fields + [StructField(name, ArrayType(dtype), True)])
+    np_type = np.int64 if isinstance(dtype, LongType) else np.int32
+
+    def kernel(batches):
+        for b in batches:
+            emb = b.column(emb_col)
+            valid = emb.is_valid().to_numpy(zero_copy_only=False)
+            codes = (
+                codes_fn(_matrix(emb.filter(emb.is_valid())))
+                if valid.any()
+                else np.empty((0, 0))
+            ).astype(np_type)
+            lens = np.where(valid, codes.shape[1], 0)
+            offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
+            arr = pa.ListArray.from_arrays(
+                pa.array(offsets), pa.array(codes.ravel()), mask=pa.array(~valid)
+            )
+            yield b.append_column(name, arr)
+
+    return df.mapInArrow(kernel, schema)
+
+
+def _lsh_buckets(df: DataFrame, emb_col: str, dim: int) -> DataFrame:
+    """``df`` + ``_bkts`` (array<bigint>): one bucket key per LSH table,
+    (table << 32) | the sign code of the vector against its planes."""
     planes = _PLANES if dim == _DIM_DEFAULT else np.random.default_rng(77).standard_normal(
         (N_TABLES, N_PLANES, dim)
     )
+    weights = 1 << np.arange(N_PLANES, dtype=np.int64)
+    tables = np.arange(N_TABLES, dtype=np.int64) << 32
 
-    @pandas_udf(ArrayType(LongType()))
-    def _buckets(emb: pd.Series) -> pd.Series:
-        mat = np.stack(emb.to_numpy())  # (batch, dim)
-        out = []
-        signs = np.einsum("bd,tpd->btp", mat, planes) > 0  # (batch, T, P)
-        weights = 1 << np.arange(N_PLANES, dtype=np.int64)
-        codes = (signs * weights[None, None, :]).sum(axis=2)  # (batch, T)
-        for row in codes:
-            out.append([int(t) << 32 | int(c) for t, c in enumerate(row)])
-        return pd.Series(out)
+    def codes(X):
+        signs = np.einsum("bd,tpd->btp", X, planes) > 0  # (batch, T, P)
+        return tables | (signs * weights).sum(axis=2)
 
-    return _buckets
+    return _append_codes(df, emb_col, "_bkts", LongType(), codes)
 
 
 # --- Vector quantizers: one sample fit, one assignment -----------------------
@@ -397,8 +462,6 @@ def _fit_quantizers(
     )
 
     def fit(batches):
-        import pyarrow as pa
-
         rows = [_matrix(b.column(0)) for b in batches if b.num_rows]
         if not rows:
             return
@@ -441,8 +504,6 @@ def _assign_kernel(centers: np.ndarray, w_bkt: "float | None" = None):
     semantic_dedup chord-bound projection bucket."""
 
     def assign(batches):
-        import pyarrow as pa
-
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -670,21 +731,19 @@ def ann_lsh_topk(
     """Approximate top-k: bucket equi-join (N_TABLES tables) + exact rerank.
 
     Null embeddings are dropped up front (embed_media emits them for null
-    payloads): np.stack inside the bucket kernel would raise on None —
-    the native cosine paths tolerate nulls, so the LSH path must too."""
-    bud = lsh_buckets_udf(dim)
-    cand = vectors.filter(F.col(emb_col).isNotNull()).select(
-        F.col(id_col).alias("c_id"),
-        F.col(emb_col).alias("c_emb"),
-        F.sqrt(_dot(emb_col, emb_col)).alias("_cn"),
-        F.explode(bud(F.col(emb_col))).alias("bucket"),
-    )
-    qs = queries.filter(F.col(emb_col).isNotNull()).select(
-        F.col(id_col).alias("q_id"),
-        F.col(emb_col).alias("q_emb"),
-        F.sqrt(_dot(emb_col, emb_col)).alias("_qn"),
-        F.explode(bud(F.col(emb_col))).alias("bucket"),
-    )
+    payloads): they have no bucket and no cosine."""
+    def side(df: DataFrame, i: str, e: str, n: str) -> DataFrame:
+        vs = df.filter(F.col(emb_col).isNotNull()).select(
+            F.col(id_col).alias(i),
+            F.col(emb_col).alias(e),
+            F.sqrt(_dot(emb_col, emb_col)).alias(n),
+        )
+        return _lsh_buckets(vs, e, dim).select(
+            i, e, n, F.explode("_bkts").alias("bucket")
+        )
+
+    cand = side(vectors, "c_id", "c_emb", "_cn")
+    qs = side(queries, "q_id", "q_emb", "_qn")
     pairs = (
         qs.join(cand, "bucket")
         .filter(F.col("q_id") != F.col("c_id"))
@@ -861,23 +920,18 @@ def pq_train(
     return _fit_quantizers(vectors, emb_col, pq=(m, k))[1]
 
 
-def pq_encode_udf(codebook: list):
-    """Arrow-batched encoder: per subspace, the nearest of the k
-    centroids (_nearest, one GEMM per batch and subspace)."""
-    from pyspark.sql.types import IntegerType
-
+def _pq_codes(df: DataFrame, emb_col: str, codebook: list) -> DataFrame:
+    """``df`` + ``codes`` (array<int>): per subspace, the nearest of the
+    k centroids (_nearest, one GEMM per batch and subspace)."""
     cb = np.asarray(codebook, dtype=np.float64)  # (m, k, dsub)
     m, _, dsub = cb.shape
 
-    @pandas_udf(ArrayType(IntegerType()))
-    def _encode(emb: pd.Series) -> pd.Series:
-        X = np.array(emb.tolist(), dtype=np.float64)
-        codes = np.empty((len(X), m), dtype=np.int32)
-        for mi in range(m):
-            codes[:, mi] = _nearest(X[:, mi * dsub : (mi + 1) * dsub], cb[mi])
-        return pd.Series(list(codes))
+    def codes(X):
+        return np.stack(
+            [_nearest(X[:, i * dsub : (i + 1) * dsub], cb[i]) for i in range(m)], 1
+        )
 
-    return _encode
+    return _append_codes(df, emb_col, "codes", IntegerType(), codes)
 
 
 def pq_encode(
@@ -887,10 +941,10 @@ def pq_encode(
     emb_col: str = "embedding",
 ) -> DataFrame:
     """(id, codes array<int>) — the compressed corpus representation."""
-    enc = pq_encode_udf(codebook)
-    return vectors.filter(F.col(emb_col).isNotNull()).select(
-        F.col(id_col).alias("c_id"), enc(F.col(emb_col)).alias("codes")
+    vs = vectors.filter(F.col(emb_col).isNotNull()).select(
+        F.col(id_col).alias("c_id"), F.col(emb_col).alias("_e")
     )
+    return _pq_codes(vs, "_e", codebook).select("c_id", "codes")
 
 
 def pq_topk(
@@ -1033,10 +1087,9 @@ def ivf_pq_topk(
         vectors, emb_col, n_cells=n_cells, pq=None if codebook else (m, kc)
     )
     codebook = codebook or fitted
-    enc = pq_encode_udf(codebook)
-    codes = _assign(vectors, centers, id_col, emb_col).select(
-        "c_id", "cell", enc(F.col("c_emb")).alias("codes")
-    )
+    codes = _pq_codes(
+        _assign(vectors, centers, id_col, emb_col), "c_emb", codebook
+    ).select("c_id", "cell", "codes")
     table, adc = _adc_expr(codebook)
     qs = _probe(
         queries.filter(F.col(emb_col).isNotNull())

@@ -14,7 +14,6 @@ sizing, and the only Python is one fused mapInArrow stage (E1, E2, G4).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,14 +65,14 @@ def _fused_mine_match(bidx, keep_text: bool = True):
             if batch.num_rows == 0:
                 continue
             text = batch.column("text")
-            texts = text.to_pandas()
+            texts = text.to_pylist()
             if text.null_count:
                 # extraction fallback is inherently per-element (stdlib
-                # HTML parser) but runs only on rows missing text
-                miss = text.is_null()
-                texts[miss.to_numpy(zero_copy_only=False)] = [
-                    _text.extract_text(h) if h is not None else None
-                    for h in batch.column("html").filter(miss).to_pylist()
+                # HTML parser) but runs only on rows missing text: html
+                # is null wherever text is not
+                texts = [
+                    _text.extract_text(h) if t is None else t
+                    for t, h in zip(texts, batch.column("html").to_pylist())
                 ]
                 text = pa.array(texts, pa.string())
             # vectorized miner: flat arrays, zero per-row Python (the
@@ -118,7 +117,7 @@ def _fused_mine_match(bidx, keep_text: bool = True):
 def mine_records(
     spark: SparkSession,
     pages: DataFrame,
-    polygons_pdf: pd.DataFrame,
+    polygons_pdf,
     cell_level: int = _cells.DEFAULT_LEVEL,
     tile_z: int = _tiles.DEFAULT_TILE_Z,
     keep_text: bool = True,

@@ -9,9 +9,8 @@ identical either way, which is the point of keeping it behind one module.
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+import sys
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -59,7 +58,7 @@ def read_all_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
 def local_table(
     spark: SparkSession,
-    rows: "Sequence[tuple] | pd.DataFrame",
+    rows,
     schema: "StructType | str",
 ) -> DataFrame:
     """Driver-side rows as a DataFrame that plans as a ``LocalRelation``.
@@ -76,7 +75,9 @@ def local_table(
     """
     struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
     arrow_schema = to_arrow_schema(struct, timestamp_utc=False)
-    if isinstance(rows, pd.DataFrame):
+    # a pandas frame can only exist once pandas is loaded: no import here
+    pd = sys.modules.get("pandas")
+    if pd is not None and isinstance(rows, pd.DataFrame):
         table = pa.Table.from_pandas(
             rows[struct.fieldNames()], schema=arrow_schema, preserve_index=False
         )

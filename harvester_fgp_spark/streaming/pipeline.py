@@ -15,7 +15,6 @@ Two modes:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -154,7 +153,7 @@ def stream_dedup_within_watermark(
 def stream_records_foreach_batch(
     spark: SparkSession,
     pages: DataFrame,
-    polygons_pdf: pd.DataFrame,
+    polygons_pdf,
     out_dir: str,
     checkpoint_dir: str,
     run_id: str,

@@ -19,6 +19,10 @@ def sf_dir() -> str:
     return "/root/testdata/sf0.001"
 
 
+#: physical-plan node names of every Python boundary form
+PYTHON_NODES = ("Python", "InPandas", "InArrow")
+
+
 def plan_string(df) -> str:
     """Executed-plan toString — shared by every plan-shape assertion
     (was duplicated in three test modules)."""

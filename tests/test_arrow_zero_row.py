@@ -1,9 +1,14 @@
-"""Zero-row Arrow batches: a zero-length string array may carry no
-offsets buffer at all (Arrow allows it for length 0), so every kernel
-that reads string buffers must treat it as an empty batch, not call
-``np.frombuffer(None)``. The kernels are driven directly, outside Spark,
-through a stand-in DataFrame that captures the function handed to
-``mapInArrow``."""
+"""Arrow batch edge cases for the ``mapInArrow`` kernels.
+
+Zero-row batches: a zero-length string array may carry no offsets
+buffer at all (Arrow allows it for length 0), so every kernel that reads
+string buffers must treat it as an empty batch, not call
+``np.frombuffer(None)``. All-null and sliced batches: a kernel must not
+raise on nulls, and a ``batch.slice(1)`` must give the same rows as the
+same data with fresh buffers (``ListArray.values`` ignores a slice's
+offset; ``.flatten()`` does not). The kernels are driven directly,
+outside Spark, through a stand-in DataFrame that captures the function
+handed to ``mapInArrow``."""
 
 from __future__ import annotations
 
@@ -28,18 +33,28 @@ def _empty_batch(text_type=pa.string()) -> pa.RecordBatch:
 
 
 class _Capture:
-    """Stands in for a DataFrame: ``select`` and ``dropna`` keep
-    (id, text) and ``mapInArrow`` records the kernel instead of planning
-    it."""
+    """Stands in for a DataFrame: ``select``, ``filter``, ``withColumn``,
+    ``drop`` and ``dropna`` keep (id, text) and ``mapInArrow`` records the
+    kernel instead of planning it."""
 
     schema = StructType(
         [StructField("id", LongType()), StructField("text", StringType())]
     )
+    columns = ["id", "text"]
 
     def select(self, *cols):
         return self
 
     def dropna(self, subset):
+        return self
+
+    def filter(self, cond):
+        return self
+
+    def withColumn(self, name, col):  # noqa: N802 - DataFrame API name
+        return self
+
+    def drop(self, *cols):
         return self
 
     def mapInArrow(self, fn, schema):  # noqa: N802 - DataFrame API name
@@ -177,3 +192,144 @@ def test_assign_kernel_zero_row_batch(w_bkt):
     out = list(kernel(iter([empty, real])))
     assert [b.num_rows for b in out] == [2]
     assert out[0].column(3).to_pylist() == [1, 0]
+
+
+# --- every appending / mapping kernel: zero-row, all-null, sliced ----------
+
+_F32S = pa.list_(pa.float32())
+_RING = pa.list_(pa.struct([("x", pa.float64()), ("y", pa.float64())]))
+
+
+def _ring(cx):
+    return [{"x": cx + dx, "y": dy} for dx, dy in ((0, 0), (1, 0), (1, 1), (0, 1), (0, 0))]
+
+
+def _kernel_cases(spark):
+    """name -> (kernel, {column: (arrow type, three sample values)}).
+    ``spark`` only keeps a session active: the operators build Column
+    expressions around the captured kernel."""
+    from harvester_fgp_spark.operators import geo as G
+    from harvester_fgp_spark.operators import multimodal as M
+    from harvester_fgp_spark.operators import similarity as S
+    from harvester_fgp_spark.operators import textops as T
+
+    vecs = [[1.0, 0.0, 2.0, 0.5], [0.0, 3.0, 1.0, 1.0], [2.0, 2.0, 0.0, 1.0]]
+    blobs = [b"abcdefghij", b"", b"\x00\xff" * 40]
+    media = {
+        "media_id": (pa.int64(), [1, 2, 3]),
+        "payload": (pa.binary(), blobs),
+    }
+    return {
+        "lang_quality": (
+            T._with_lang_quality(_Capture(), "text").fn,
+            {"id": (pa.int64(), [1, 2, 3]),
+             "text": (pa.string(), ["the cat and the dog", "le chat et le", "x"])},
+        ),
+        "simplify_mask": (
+            G.simplify_rings(_Capture(), tol=0.05).fn,
+            {"_xs": (pa.list_(pa.float64()),
+                     [[0.0, 1.0, 2.0, 0.0], [0.0, 1.0, 2.0, 3.0, 0.0], [5.0, 6.0, 5.0]]),
+             "_ys": (pa.list_(pa.float64()),
+                     [[0.0, 0.01, 0.0, 0.0], [0.0, 1.0, 0.0, 1.0, 0.0], [0.0, 0.0, 0.0]])},
+        ),
+        "polygon_tiles": (
+            G.polygon_tiles(_Capture(), z=6).fn,
+            {"polygon_id": (pa.string(), ["a", "b", "c"]),
+             "ring": (_RING, [_ring(0.0), _ring(30.0), _ring(-60.0)])},
+        ),
+        "lsh_buckets": (
+            S._lsh_buckets(_Capture(), "emb", 4).fn,
+            {"id": (pa.int64(), [1, 2, 3]), "emb": (_F32S, vecs)},
+        ),
+        "pq_codes": (
+            S._pq_codes(_Capture(), "emb", [[[0.0, 0.0], [1.0, 1.0]]] * 2).fn,
+            {"id": (pa.int64(), [1, 2, 3]), "emb": (_F32S, vecs)},
+        ),
+        "block_topk": (
+            S._block_topk(1, ["q_id", "c_id", "_cos"]),
+            {"_qid": (pa.int64(), [7, None, None]),
+             "_qe": (_F32S, [vecs[0], None, None]),
+             "_cid": (pa.int64(), [None, 8, 9]),
+             "_ce": (_F32S, [None, vecs[1], vecs[2]]),
+             "_blk": (pa.int32(), [0, 0, 0])},
+        ),
+        "media_meta": (
+            M.extract_media_meta(_Capture()).fn,
+            {"media_id": (pa.int64(), [1, 2, 3]),
+             "kind": (pa.string(), ["image", "video", "image"]),
+             "mime": (pa.string(), ["a", "b", "c"]),
+             "payload": (pa.binary(), blobs),
+             "n_bytes": (pa.int64(), [len(b) for b in blobs]),
+             "sha": (pa.string(), ["s1", "s2", "s3"])},
+        ),
+        "sample_frames": (M.sample_frames(_Capture()).fn, media),
+        "resize_image": (M.resize_image(_Capture(), 16, 16).fn, media),
+        "embed_media": (M.embed_media(_Capture(), dim=8).fn, media),
+    }
+
+
+_KERNELS = [
+    "lang_quality", "simplify_mask", "polygon_tiles", "lsh_buckets",
+    "pq_codes", "block_topk", "media_meta", "sample_frames",
+    "resize_image", "embed_media",
+]
+
+
+def _batch(cols: dict, rows=slice(None), nulls: bool = False) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([None] * len(v[rows]) if nulls else v[rows], t)
+            for t, v in cols.values()
+        ],
+        names=list(cols),
+    )
+
+
+def _rows(kernel, batch) -> list:
+    return [r for b in kernel(iter([batch])) for r in b.to_pylist()]
+
+
+@pytest.mark.parametrize("name", _KERNELS)
+def test_kernel_zero_row_batch(spark, name):
+    kernel, cols = _kernel_cases(spark)[name]
+    assert _rows(kernel, _batch(cols, slice(0, 0))) == []
+
+
+@pytest.mark.parametrize("name", _KERNELS)
+def test_kernel_all_null_batch(spark, name):
+    """Nulls in every column: no kernel raises; a row-preserving kernel
+    keeps every row."""
+    kernel, cols = _kernel_cases(spark)[name]
+    out = _rows(kernel, _batch(cols, nulls=True))
+    if name in ("lang_quality", "simplify_mask", "lsh_buckets", "pq_codes"):
+        assert len(out) == 3
+        appended = [k for k in out[0] if k not in cols]
+        assert appended
+        if name != "lang_quality":
+            assert all(r[k] is None for r in out for k in appended)
+
+
+@pytest.mark.parametrize("name", _KERNELS)
+def test_kernel_sliced_batch(spark, name):
+    """A sliced batch reads the same rows as the same data with fresh
+    buffers, and the slice's first row is really skipped."""
+    kernel, cols = _kernel_cases(spark)[name]
+    full = _batch(cols)
+    fresh = _batch(cols, slice(1, None))
+    got = _rows(kernel, full.slice(1))
+    assert got == _rows(kernel, fresh)
+    if name != "block_topk":  # one query row: the slice drops it
+        assert got != _rows(kernel, _batch(cols, slice(0, 2)))
+
+
+def test_lang_quality_kernel_non_ascii_text(spark):
+    from harvester_fgp_spark.functions import text as T
+
+    texts = ["l'été où la forêt et le château", "naïve café — déjà vu", "日本語のテキスト", None]
+    kernel, cols = _kernel_cases(spark)["lang_quality"]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(len(texts)), pa.int64()), pa.array(texts, pa.string())],
+        names=["id", "text"],
+    )
+    got = [(r["detected_lang"], r["quality"]) for r in _rows(kernel, batch)]
+    assert got == [T.lang_quality(t) for t in texts]

@@ -1,4 +1,4 @@
-"""A4 grouped-map pandas UDF: plan shape + equivalence with native aggs."""
+"""A4 per-tile stats: plan shape + equivalence with native aggs."""
 
 from __future__ import annotations
 
@@ -43,10 +43,15 @@ def test_tile_group_stats_matches_native_agg(spark):
         assert r.min_lat == e.min_lat and r.max_lon == e.max_lon
 
 
-def test_tile_group_stats_is_grouped_map(spark, sf_dir):
+def test_tile_group_stats_has_no_python_node(spark, sf_dir):
+    """Both A4 queries are one native aggregate: no Python node at all."""
     import __spark_entry__ as E
 
-    df = E.queries()["tile_group_stats"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapGroupsInPandas" in plan  # the A4 grouped-map surface
-    assert "BatchEvalPython" not in plan
+    from tests.conftest import PYTHON_NODES, plan_string
+
+    for name in ("tile_group_stats", "tile_centroid_gagg"):
+        df = E.queries()[name](spark, sf_dir)
+        df.collect()
+        plan = plan_string(df)
+        assert "HashAggregate" in plan, name
+        assert not [n for n in PYTHON_NODES if n in plan], (name, plan[:2000])

@@ -145,18 +145,69 @@ def test_entry_module_has_no_collect():
 
 
 def test_pages_to_records_path_has_one_python_stage():
-    """The pages -> records path keeps exactly one Python stage, the fused
-    ``mapInArrow`` in plans/pipeline.py: no pandas UDF or pandas map may
-    come back into the modules that build it (the streaming dedup's
-    ``applyInPandasWithState`` is a different job and is not matched)."""
-    pat = re.compile(r"pandas_udf|mapInPandas")
+    """One Python boundary for the whole engine (the pages -> records
+    path's fused stage included): every executor kernel is a
+    ``mapInArrow`` generator. The other batch forms load pandas into the
+    worker before the kernel runs, so none may appear in code; names are
+    found in the syntax tree, so docstrings may mention them. The
+    streaming dedup's stateful ``applyInPandasWithState`` is the one
+    exception and is a different name."""
+    import ast
+
+    banned = {
+        "pandas_udf", "arrow_udf", "mapInPandas", "applyInPandas",
+        "applyInArrow", "cogroup",
+    }
     offenders = []
-    for rel in (
-        "operators/extract.py", "plans/pipeline.py", "streaming/pipeline.py"
-    ):
-        for i, line in enumerate((ENGINE / rel).read_text().splitlines(), 1):
-            if pat.search(line):
-                offenders.append(f"{rel}:{i}: {line.strip()}")
+    for path in sorted(ENGINE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            names = (
+                [getattr(node, "id", None), getattr(node, "attr", None)]
+                if isinstance(node, (ast.Name, ast.Attribute))
+                else [a.name for a in getattr(node, "names", [])]
+                if isinstance(node, ast.ImportFrom)
+                else []
+            )
+            offenders += [
+                f"{path.relative_to(ENGINE)}:{node.lineno}: {n}"
+                for n in names
+                if n in banned
+            ]
+    assert not offenders, "\n".join(offenders)
+
+
+def test_no_module_level_pandas_import():
+    """Kernels are pickled by reference to their module, so a worker
+    imports every engine module a kernel reaches: a module-level
+    ``import pandas`` puts pandas (~30 MB RSS, ~0.3 CPU s) into every
+    Python worker. Only ``synth.py``, the driver-side fixture generator,
+    may import it at module level; everything else imports it inside
+    the function that needs it."""
+    import ast
+
+    offenders = []
+    for path in sorted(ENGINE.rglob("*.py")):
+        if path == ENGINE / "synth.py":
+            continue
+        tree = ast.parse(path.read_text())
+        local = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            mods = (
+                [a.name for a in node.names]
+                if isinstance(node, ast.Import)
+                else [node.module or ""]
+                if isinstance(node, ast.ImportFrom)
+                else []
+            )
+            if id(node) not in local and any(
+                m == "pandas" or m.startswith("pandas.") for m in mods
+            ):
+                offenders.append(f"{path.relative_to(ENGINE)}:{node.lineno}")
     assert not offenders, "\n".join(offenders)
 
 

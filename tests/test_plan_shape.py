@@ -47,20 +47,11 @@ def test_box_cover_join_is_broadcast(spark, sf_dir):
 
 
 def test_udf_stages_are_arrow_batched(spark, sf_dir):
-    """Python stages must be ArrowEvalPython (pandas), never row-pickled
-    BatchEvalPython."""
+    """Python stages must be Arrow-batched ``mapInArrow``, never
+    row-pickled BatchEvalPython."""
     plan = _plan(E.queries()["text_analysis"](spark, sf_dir))
-    assert "ArrowEvalPython" in plan
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan
-
-
-def test_grouped_agg_surface_plans_as_pandas_aggregate(spark, sf_dir):
-    """§2.11 GROUPED_AGG (round 3): centideg_mean_agg must plan as an
-    AggregateInPandas node (true grouped-agg surface, not grouped-map)."""
-    plan = _plan(E.queries()["tile_centroid_gagg"](spark, sf_dir))
-    # Spark 4 names the node ArrowAggregatePython (3.x: AggregateInPandas)
-    assert "ArrowAggregatePython" in plan or "AggregateInPandas" in plan
-    assert "FlatMapGroupsInPandas" not in plan
 
 
 def test_map_in_arrow_surface_plans_as_arrow_node(spark, sf_dir):

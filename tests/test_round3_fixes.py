@@ -127,16 +127,16 @@ def test_minhash_unbroadcast_candidates_identical(spark, sf_dir, monkeypatch):
     assert len(a) >= 100  # the planted duplicates are found
 
 
-def test_centroid_tie_break_matches_oracle_floor():
+def test_centroid_tie_break_matches_oracle_floor(spark):
     """lat*100 on an exact .5 tie: np.rint would round half-to-even (212),
     the oracle's ROUND half-away (213). Both sides now use
     floor(x*100 + 0.5): +tie -> up, -tie -> toward +inf, identically."""
-    from harvester_fgp_spark.operators.groupstats import _tile_stats
+    from harvester_fgp_spark.operators.groupstats import tile_group_stats
 
-    pdf = pd.DataFrame(
-        {"tile_x": [1, 1], "tile_y": [2, 2], "lat": [2.125, 2.125],
-         "lon": [-2.125, -2.125]}
+    df = spark.createDataFrame(
+        [(1, 2, 2.125, -2.125), (1, 2, 2.125, -2.125)],
+        "tile_x long, tile_y long, lat double, lon double",
     )
-    out = _tile_stats(pdf)
-    assert out["centroid_lat"].iat[0] == 213 / 100.0  # floor(212.5+0.5)=213
-    assert out["centroid_lon"].iat[0] == -212 / 100.0  # floor(-212.0)=-212
+    out = tile_group_stats(df).first()
+    assert out["centroid_lat"] == 213 / 100.0  # floor(212.5+0.5)=213
+    assert out["centroid_lon"] == -212 / 100.0  # floor(-212.0)=-212
